@@ -3,32 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // default page size scales with heap/cores (~tens of MB); with many
-      // short tasks that means GBs of page zeroing + allocator-lock
-      // contention per query. 1 MB is plenty at these partition sizes.
-      .config("spark.buffer.pageSize", "1m")
-      // synchronous shuffle-file cleanup: the wave tier
-      // (TextOps.stagedPairScan) depends on wave i's spill being GONE
-      // before wave i+1 floods the same scratch disk; with the default
-      // async ContextCleaner two waves' spill can coexist under GC or
-      // cleaner lag and re-create the overflow the tier exists to avoid
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.ui.enabled", "false")
-      // the status stores retain per-execution plan graphs + per-stage
-      // metric aggregates even with the UI off; across a 76-query × 2-attempt
-      // session that is hundreds of MB of old-gen — observed to slow the
-      // heaviest aggregation (q55) 6-10× late in the suite via GC
-      // pressure. Keep only a handful of executions live.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder().getOrCreate()
     // generic warmup so JVM/classloader/codegen startup is not billed to
     // whichever query happens to run first — and run BEFORE the pre
     // sentinel so pre and post readings are like-for-like (both on a
@@ -42,7 +18,7 @@ object Bench {
     // ends mid-sweep would evade endpoint-only stamps), all stamped
     // into the artifact so an inflated total carries its own
     // clean-vs-degraded-host attribution
-    val sentinelPre = PhaseSentinel.json(cpus.toInt)
+    val sentinelPre = PhaseSentinel.json(cpus)
     System.err.println(s"[bench] sentinel_pre $sentinelPre")
     // JVM-health telemetry per measurement, published per PASS in the
     // bench JSON ("diag") so any >2× adjacent-pass outlier carries its
@@ -128,7 +104,7 @@ object Bench {
         val b = once(name, fn)
         System.err.println(f"[bench] p2 $name%-24s ${b.secs}%.2f s")
         if ((idx + 1) % SentinelEvery == 0 && idx + 1 < ordered.size) {
-          val s = PhaseSentinel.json(cpus.toInt)
+          val s = PhaseSentinel.json(cpus)
           System.err.println(s"[bench] sentinel_mid after=$name $s")
           sentinelMid +=
             s"""{"after":"${name.split("_")(0)}","s":$s}"""
@@ -167,7 +143,7 @@ object Bench {
     val total =
       if (results.nonEmpty) results.map(_._2).filter(_ >= 0).sum else 0.0
     val wallSecs = (System.nanoTime() - wall0) / 1e9
-    val sentinelPost = PhaseSentinel.json(cpus.toInt)
+    val sentinelPost = PhaseSentinel.json(cpus)
     System.err.println(s"[bench] sentinel_post $sentinelPost")
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","wall":$wallSecs,""" +

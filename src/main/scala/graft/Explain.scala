@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev plan inspector: `tools/run.sh graft.Explain <sfDir> <substr[,substr]>`
   * prints the formatted physical plan of every matching registered query —
   * the scale-posture review loop (PushedFilters, exchanges, codegen spans)
@@ -11,14 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val pats = if (args.length > 1) args(1).split(",").toSeq else Seq("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.builder().getOrCreate()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => pats.exists(name.contains) }
       .foreach { case (name, fn) =>

@@ -90,13 +90,10 @@ object PhaseSentinel {
       s""""sink":${(sink0 ^ mtSink.get()) & 0xff}}"""
   }
 
-  /** Standalone: one reading on `SPARK_GRAFT_CPUS` threads, printed as
-    * the last stdout line — for stamping hand-assembled artifacts
+  /** Standalone: one reading on [[GraftSession.cpus]] threads, printed
+    * as the last stdout line — for stamping hand-assembled artifacts
     * (isolated-query A/Bs, decade points) with the same fields the
     * full-suite sweep carries. */
-  def main(args: Array[String]): Unit = {
-    val threads =
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    println(s"""{"sentinel":${json(threads)}}""")
-  }
+  def main(args: Array[String]): Unit =
+    println(s"""{"sentinel":${json(GraftSession.cpus)}}""")
 }

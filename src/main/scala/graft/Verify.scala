@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * failed.json, the names of the queries that threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -10,37 +11,35 @@ object Verify {
     // name substrings to restrict which queries run.
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
+    val spark = GraftSession.builder().getOrCreate()
+    val failed = dump(spark, sfDir, outDir, only)
+    System.err.println(s"[verify] ${failed.size} failed" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", ",", "")))
+    spark.stop()
+    // See Bench: long runs can linger on a non-daemon thread after
+    // spark.stop(); all output is on disk, so exit deterministically.
+    // Query failures leave the exit code at 0; failed.json lists them.
+    System.exit(0)
+  }
+
+  /** Writes every selected query's result to `outDir/<name>` as parquet,
+    * then `oracle_sql.json` and `failed.json` (a JSON array of the names
+    * of the queries that threw). Returns those names. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Seq[String]] = None): Seq[String] = {
     def selected(name: String): Boolean =
       only.forall(_.exists(name.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench: small Tungsten pages — many short tasks would other-
-      // wise zero tens of MB each on sorter/map setup.
-      .config("spark.buffer.pageSize", "1m")
-      // synchronous shuffle cleanup — see Bench.scala (wave-tier scratch
-      // bound); harmless for batch queries, load-bearing for the staged
-      // pair scans
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.ui.enabled", "false")
-      // see Bench: the status stores otherwise retain every execution's
-      // plan graph + metrics across the 72-query run — old-gen pressure
-      // that slows the late heavy aggregations via GC.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = SparkEntry.queries.toSeq.filter(q => selected(q._1)).flatMap {
+      case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -57,9 +56,8 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    // See Bench: long runs can linger on a non-daemon thread after
-    // spark.stop(); all output is on disk, so exit deterministically.
-    System.exit(0)
+    Files.writeString(Paths.get(s"$outDir/failed.json"),
+      failed.map(q).mkString("[", ",", "]"))
+    failed
   }
 }

@@ -46,11 +46,6 @@ object Exact {
     * deterministic too. */
   def sumd(c: Column): Column = round(sumdec(c), 2).cast("double")
 
-  /** avg as exact-sum / count, evaluated in double (deterministic:
-    * both engines divide the same two exact values). */
-  def avgd2(c: Column): Column =
-    (sumdec(dec2(c)).cast("double") / count(c)).cast("double")
-
   /** exact Σ a·b over two DECIMAL(p ≤ 18) factors — [[SumDecProd128]]:
     * the per-row wide-decimal multiply AND the wide sum buffer both
     * collapse into long arithmetic (exact 128-bit product, 128-bit

@@ -722,13 +722,6 @@ object VectorFunctions {
     GraftBridge.column(
       MixedVectorDot(GraftBridge.expression(a), GraftBridge.expression(b)))
 
-  /** Top-`nprobe` nearest-centroid ids for a vector against a broadcast
-    * centroid array — see [[NearestCellIds]]. */
-  def nearestCellIds(vec: Column, nr: Column, cells: Column,
-      nprobe: Int): Column =
-    GraftBridge.column(NearestCellIds(GraftBridge.expression(vec),
-      GraftBridge.expression(nr), GraftBridge.expression(cells), nprobe))
-
   /** Top-`nprobe` nearest-centroid ids against a DRIVER-COLLECTED
     * centroid table (flat row-major `cents`) — see
     * [[NearestCellIdsStatic]]. */

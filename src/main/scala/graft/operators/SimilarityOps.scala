@@ -100,10 +100,11 @@ object SimilarityOps {
     * interpolated into its oracle SQL.) */
   private[graft] val PairExactKnee = 4096
 
-  /** Geometry of q34's above-knee per-cell exact tier: `PairQuantizers`
-    * INDEPENDENT coarse quantizers (disjoint seed ranges → decorrelated
-    * Voronoi boundaries), each with `PairCells` learned cells, each
-    * vector probing its `PairNprobe` nearest cells per quantizer.
+  /** Cell-count floor of q34's above-knee per-cell tier, chosen on the
+    * symmetric sweep geometry: 4 INDEPENDENT coarse quantizers (disjoint
+    * seed ranges → decorrelated Voronoi boundaries), each with
+    * `PairCells` learned cells, each vector probing its 4 nearest cells
+    * per quantizer.
     *
     * Why multiple quantizers: PAIR recall at a 0.4 cosine threshold is
     * structurally harder than q44's top-5 query recall — a 0.4-cosine
@@ -124,13 +125,14 @@ object SimilarityOps {
     * adversarially near-random corpus (a cosine-0.4 pair spans ~66° and
     * straddles ever more Voronoi boundaries as cells shrink). Holding
     * recall while k grows means scaling nprobe/quantizers too
-    * (candidate volume rises with nprobe²) — both are parameters of
-    * [[embedNearPairsPerCell]]; real embedding corpora, whose near-dups
-    * sit at cosine ≥ 0.8, co-cluster far more reliably. Sweep tool:
-    * `RecallProbe --cells`; the decade points: `RecallProbe <dir>`. */
+    * (candidate volume rises with nprobe²) — the registered asymmetric
+    * tier scales the quantizer count ([[pairQuantizersScaled]]); real
+    * embedding corpora, whose near-dups sit at cosine ≥ 0.8, co-cluster
+    * far more reliably. The sweep and decade points were measured by
+    * the since-retired RecallProbe main (`RECALL_SWEEP_*.json`,
+    * `BENCH_sf10_r1*.json`); the recall floors are pinned by
+    * `SimilaritySpec`, `AnnRecallSpec` and `CoarseAssignSpec`. */
   private[graft] val PairCells = 128
-  private[graft] val PairNprobe = 4
-  private[graft] val PairQuantizers = 4
 
   /** Unroll bound of the oracle's per-quantizer CTE chains = the
     * ladder cap. Chains past the corpus's own q(k) are gated EMPTY at
@@ -374,48 +376,6 @@ object SimilarityOps {
   // that the broadcast stops paying for the avoided c_id shuffle
   private[graft] val CellBroadcastKnee = 100000L
 
-  private[graft] def embedNearPairsPerCell(s: SparkSession, d: String,
-      cellsOverride: Int = 0, nprobe: Int = PairNprobe,
-      quantizers: Int = PairQuantizers): DataFrame = {
-    // corpus-sized cell count (k ∝ n past the swept 128-cell floor) —
-    // see [[pairCells]]; an explicit override serves the sweep tool
-    val cells =
-      if (cellsOverride > 0) cellsOverride
-      else pairCells(embeddings(s, d).count())
-    val e = embVecs(s, d)
-    // one assignment per coarse quantizer; c_id ranges are disjoint
-    // across quantizers (the seed vec_id IS the cell id), so the
-    // unioned assignments join on c_id alone. Top-nprobe is computed
-    // PER ROW against the driver-collected centroid matrix by the
-    // [[graft.functions.NearestCellIdsStatic]] expression instead of a
-    // row_number window: the window form shuffles all n·k scored rows —
-    // each still carrying its embedding — to sort away all but nprobe
-    // of them (measured 60k×382×4 = 92M-row exchange at sf3, the
-    // dominant cost of the whole query); the per-row expression is
-    // exchange-free and spends the same k dot products in one primitive
-    // loop over a flat matrix. Rank order (cosine DESC, c_id ASC) is
-    // the oracle window's exact ORDER BY — results stay hash-exact
-    // against the window-form oracle SQL.
-    val asn = (0 until quantizers).map { r =>
-      val (ids, flat, nrs) = centroidArrays(s, d, r * cells, (r + 1) * cells)
-      e.select(explode(graft.functions.VectorFunctions.nearestCellIdsStatic(
-            col("embedding"), col("nr"), ids, flat, nrs, nprobe)).as("c_id"),
-          col("vec_id"), col("embedding"), col("nr"))
-    }.reduce(_ unionByName _)
-    val x = asn.select(col("c_id"), col("vec_id").as("v1"),
-      col("embedding").as("ea"), col("nr").as("na"))
-    val y0 = asn.select(col("c_id"), col("vec_id").as("v2"),
-      col("embedding").as("eb"), col("nr").as("nb"))
-    val y = if (embeddings(s, d).count() <= CellBroadcastKnee) broadcast(y0) else y0
-    x.join(y, Seq("c_id"))
-      .filter(col("v1") < col("v2"))
-      .select(col("v1"), col("v2"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
-      .filter(col("cosine") >= 0.4)
-      .distinct()
-      .orderBy(col("v1"), col("v2"))
-  }
-
   /** ASYMMETRIC home-vs-probe form of the per-cell tier — the
     * REGISTERED above-knee relation (the classic IVF SEARCH shape,
     * evaluated pairwise): each vector is INDEXED under its single
@@ -431,12 +391,9 @@ object SimilarityOps {
     * survivors, and below [[CellBroadcastKnee]] the n·q-row home side
     * broadcasts, keeping the whole pair stage map-side. */
   private[graft] def embedNearPairsPerCellAsym(s: SparkSession, d: String,
-      cellsOverride: Int = 0, nprobeOverride: Int = 0,
-      quantizersOverride: Int = 0, strided: Boolean = false,
       flatOverride: Boolean = false, hierOverride: Boolean = false,
       hierWOverride: Int = 0): DataFrame = {
-    val pa = pairAssignment(s, d, cellsOverride, nprobeOverride,
-      quantizersOverride, strided, flatOverride, hierOverride, hierWOverride)
+    val pa = pairAssignment(s, d, flatOverride, hierOverride, hierWOverride)
     val src = pa.src
     val below = pa.below
     val home = src.filter(col("crn") === 0)
@@ -464,37 +421,27 @@ object SimilarityOps {
       .orderBy(col("v1"), col("v2"))
   }
 
-  /** The coarse-assignment half of [[embedNearPairsPerCellAsym]],
-    * exposed so measurement tooling (`RecallProbe --natural`) can audit
-    * the tier choice and candidate volume of the exact relation the
-    * registered query evaluates without duplicating the dispatch. */
-  private[graft] final case class PairAsn(src: DataFrame, below: Boolean,
-      tier: String, cells: Int, quantizers: Int, nprobe: Int)
+  /** The coarse-assignment half of [[embedNearPairsPerCellAsym]]: the
+    * per-vector (c_id, crn) rows and whether the corpus sits below
+    * [[CellBroadcastKnee]]. */
+  private[graft] final case class PairAsn(src: DataFrame, below: Boolean)
 
   private[graft] def pairAssignment(s: SparkSession, d: String,
-      cellsOverride: Int = 0, nprobeOverride: Int = 0,
-      quantizersOverride: Int = 0, strided: Boolean = false,
       flatOverride: Boolean = false, hierOverride: Boolean = false,
       hierWOverride: Int = 0): PairAsn = {
     val n = embeddings(s, d).count()
-    val cells =
-      if (cellsOverride > 0) cellsOverride
-      else pairCells(n)
-    val nprobe =
-      if (nprobeOverride > 0) nprobeOverride else PairNprobeAsym
-    val quantizersFlat =
-      if (quantizersOverride > 0) quantizersOverride
-      else pairQuantizersScaled(cells)
+    val cells = pairCells(n)
+    val nprobe = PairNprobeAsym
+    val quantizersFlat = pairQuantizersScaled(cells)
     val e = embVecs(s, d)
-    val scaled = !strided && !flatOverride && cells > PairCells
+    val scaled = !flatOverride && cells > PairCells
     val fused = scaled && !hierOverride &&
       quantizersFlat.toLong * cells <= FusedCollectKnee
     val hier = scaled && !fused
     // the hier tier compounds through the measured routing retention —
     // its own ladder, ~5% more quantizers (see pairQuantizersHier)
     val quantizers =
-      if (quantizersOverride > 0) quantizersOverride
-      else if (hier) pairQuantizersHier(cells)
+      if (hier) pairQuantizersHier(cells)
       else quantizersFlat
     // the tier switch is a SEMANTICS change for a hash-verified query:
     // the two-level routing is approximate (recall-floor-pinned, not
@@ -532,8 +479,7 @@ object SimilarityOps {
             hierWOverride)
         else {
           val (ids, flat, nrs) =
-            if (strided) centroidArraysStrided(s, d, r, quantizers, cells, n)
-            else centroidArrays(s, d, r * cells, (r + 1) * cells)
+            centroidArrays(s, d, r * cells, (r + 1) * cells)
           e.select(col("vec_id"), col("embedding"), col("nr"),
               posexplode(graft.functions.VectorFunctions.nearestCellIdsStatic(
                 col("embedding"), col("nr"), ids, flat, nrs, nprobe)))
@@ -562,32 +508,11 @@ object SimilarityOps {
       if (below) asn
       else graft.SessionCache.checkpoint(
         s"pairAsn${cells}_${quantizers}_$nprobe" +
-          (if (strided) "S" else "") + (if (hierOverride) "H" else "") +
+          (if (hierOverride) "H" else "") +
           (if (hierWOverride > 0) s"w$hierWOverride" else "") +
           (if (flatOverride) "F" else ""), s, d)(
         asn.repartition(col("c_id")))
-    PairAsn(src, below,
-      tier = if (hier || hierOverride) "hier"
-        else if (fused) "fused"
-        else if (strided) "strided" else "flat",
-      cells = cells, quantizers = quantizers, nprobe = nprobe)
-  }
-
-  /** Candidate volume of the registered per-cell tier at `d`'s corpus =
-    * exact-cosine evaluations the pair join performs (rows surviving the
-    * self-filter, before the 0.4 gate). Derived from the SAME assignment
-    * relation the query reads (session-cache hit when the query ran
-    * first), as Σ_cells home(c)·probe(c) minus the one guaranteed
-    * self-match per home row. Measurement tooling only — never a query. */
-  private[graft] def pairCandidateVolume(s: SparkSession, d: String): (Long, PairAsn) = {
-    val pa = pairAssignment(s, d)
-    val perCell = pa.src.groupBy("c_id").agg(
-      sum(when(col("crn") === 0, 1L).otherwise(0L)).as("homes"),
-      count(lit(1)).as("probes"))
-    val agg = perCell.agg(
-      sum(col("homes") * col("probes")).as("raw"),
-      sum(col("homes")).as("selfRows")).head()
-    (agg.getLong(0) - agg.getLong(1), pa)
+    PairAsn(src, below)
   }
 
   /** The blocked exhaustive form of q34's exact product — O(N²/2)
@@ -611,32 +536,6 @@ object SimilarityOps {
         (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
       .filter(col("cosine") >= 0.4)
       .orderBy(col("v1"), col("v2"))
-  }
-
-  /** SAMPLED exact ground truth for recall estimation at corpora where
-    * the full O(N²/2) product is prohibitive (75 min at 500k vectors):
-    * every cosine ≥ 0.4 pair TOUCHING the deterministic sample
-    * {vec_id % mod == 0}. Membership is independent of pair geometry,
-    * so recall restricted to these pairs is an unbiased estimate of
-    * end recall; cost is (n/mod)·n dots — one broadcast nested-loop
-    * scan with the sample side broadcast. Measurement tooling only. */
-  private[graft] def embedNearPairsSampledTruth(s: SparkSession, d: String,
-      mod: Int): DataFrame = {
-    val e = embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), nrm(col("embedding")).as("nr"))
-      .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-    val samp = broadcast(
-      e.filter(col("vec_id") % mod === 0)
-        .select(col("vec_id").as("vs"), col("embedding").as("es"),
-          col("nr").as("ns")))
-    samp.join(e, col("vs") =!= col("vec_id"))
-      .select(least(col("vs"), col("vec_id")).as("v1"),
-        greatest(col("vs"), col("vec_id")).as("v2"),
-        (dot(col("es"), col("embedding")) / (col("ns") * col("nr")))
-          .as("cosine"))
-      .filter(col("cosine") >= 0.4)
-      .select(col("v1"), col("v2"))
-      .distinct()
   }
 
   /** Fixed random hyperplanes for sign-LSH, as 64-dim literal vectors.
@@ -752,48 +651,6 @@ object SimilarityOps {
     }
   }
 
-  /** Stage-timing probe for q35 (see `graft.Q35Probe`): walls for the
-    * OLD 48-literal-dot bucket build (the JIT-cliff witness — kept as
-    * the A side), the registered SignPlaneBuckets build, the candidate
-    * join+distinct, and the full query. */
-  private[graft] def q35StageProbe(
-      s: SparkSession, d: String): Seq[(String, Double)] = {
-    def bucketOf(t: Int): Column = (0 until AnnBits)
-      .map { j =>
-        when(dot(col("embedding"), typedlit(hyperplanes(t * AnnBits + j))) > 0,
-          1 << j).otherwise(0) }
-      .reduce(_ + _)
-    val e = embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), nrm(col("embedding")).as("nr"))
-    val oldIdx = e.select(col("vec_id"),
-      explode(array((0 until AnnTables).map(t =>
-        struct(lit(t).as("t"), bucketOf(t).as("b"))): _*)).as("tb"))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))
-    val idx = e.select(col("vec_id"),
-      posexplode(graft.functions.VectorFunctions.signPlaneBuckets(
-        col("embedding"), hyperplanes, AnnBits)).as(Seq("t", "b")))
-    val qi = idx.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("t"), col("b"))
-    val cand = idx.join(broadcast(qi), Seq("t", "b"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor"))
-      .distinct()
-    def wall(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime; val n = f
-      ((System.nanoTime - t0) / 1e9, n)
-    }
-    val (tOld, nOld) =
-      wall(oldIdx.agg(sum(col("b")).cast("long")).first().getLong(0))
-    val (tNew, nNew) =
-      wall(idx.agg(sum(col("b")).cast("long")).first().getLong(0))
-    val (tCand, nCand) = wall(cand.count())
-    val (tFull, nFull) = wall(q35AnnLshBucketed.fn(s, d).count())
-    Seq("old_bucket_s" -> tOld, "old_bucket_sum" -> nOld.toDouble,
-      "new_bucket_s" -> tNew, "new_bucket_sum" -> nNew.toDouble,
-      "cand_s" -> tCand, "cand_rows" -> nCand.toDouble,
-      "full_s" -> tFull, "full_rows" -> nFull.toDouble)
-  }
-
   /** universal double dot product: works for float/double array mixes
     * (each element promoted to double), matching `sqlDot`'s CAST
     * semantics — used where one operand is a learned (double) centroid.
@@ -904,39 +761,6 @@ object SimilarityOps {
       seedLo: Int = 0, seedHi: Int = 16): DataFrame =
     graft.SessionCache.checkpoint(s"ivfCentroids${seedLo}_$seedHi", s, d)(
       learnedCentroidsPlan(s, d, seedLo, seedHi))
-
-  /** REPRESENTATIVE (strided) codebook seeding for quantizer `r` of
-    * `q`: seed ids are j·T for j ≡ r (mod q), j < k·q, with stride
-    * T = n div (k·q) — k seeds per quantizer, evenly spaced over the
-    * WHOLE corpus, disjoint across quantizers (c_id = seed vec_id
-    * stays globally unique). Contiguous-range seeding
-    * ([[learnedCentroidsPlan]]) draws every seed from the head of the
-    * table — on any corpus whose composition drifts along the id/time
-    * axis (every real ingest; the decade corpus makes it extreme) the
-    * codebook then only describes the head, per-quantizer pair recall
-    * decays as k grows (measured k^-0.42, the round-10/11 finding),
-    * and holding recall costs √k probe width = n^1.5 candidates.
-    * Strided seeds see the corpus's actual cluster structure, so each
-    * cluster gets its own cells and r1 stops decaying — the measured
-    * basis for the round-12 constant-(np, q) linear-volume regime.
-    * Pure integer arithmetic (%, div on vec_id), so the oracle states
-    * the identical seed set. */
-  private[graft] def learnedCentroidsStridedPlan(s: SparkSession, d: String,
-      r: Int, q: Int, k: Int, n: Long): DataFrame = {
-    val t = math.max(1L, n / (k.toLong * q))
-    val e = embVecs(s, d)
-    val seeds = e.filter(col("vec_id") % t === 0 &&
-        (col("vec_id") / t) % q === r && col("vec_id") < t * k * q)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        col("nr").as("c_nr"))
-    val asn0 = assignNearest(e, seeds, dot)
-    floorSplitMean(asn0.select(col("c_id"), col("embedding")), "c_id")
-  }
-
-  private def learnedCentroidsStrided(s: SparkSession, d: String,
-      r: Int, q: Int, k: Int, n: Long): DataFrame =
-    graft.SessionCache.checkpoint(s"ivfCentroidsStrided${r}_${q}_$k", s, d)(
-      learnedCentroidsStridedPlan(s, d, r, q, k, n))
 
   // ——— fused coarse machinery, PairCells < k, q·k ≤ FusedCollectKnee ———
 
@@ -1228,11 +1052,6 @@ object SimilarityOps {
       seedHi: Int): (Array[Long], Array[Double], Array[Double]) =
     collectCentroidArrays(s, d, s"range${seedLo}_$seedHi")(
       learnedCentroids(s, d, seedLo, seedHi))
-
-  private def centroidArraysStrided(s: SparkSession, d: String,
-      r: Int, q: Int, k: Int, n: Long): (Array[Long], Array[Double], Array[Double]) =
-    collectCentroidArrays(s, d, s"strided${r}_${q}_$k")(
-      learnedCentroidsStrided(s, d, r, q, k, n))
 
   private def collectCentroidArrays(s: SparkSession, d: String, tag: String)(
       plan: => DataFrame): (Array[Long], Array[Double], Array[Double]) = {
@@ -2401,15 +2220,12 @@ object SimilarityOps {
     withinCellDeltaPairs(s, asn)
   }
 
-  /** Probe entries (graft.StreamIndexProbe, VERDICT r14 item 3): the
-    * q129 pair-join term under an ARBITRARY cell count, so the k∝n
-    * [[pairCells]] contract the scaladoc cites can be MEASURED on
-    * q129's own join shape rather than inherited from q34/q102.
-    * [[probeAssignment]] is [[streamIndexPairsCold]]'s batch assignment
-    * generalized to k cells (same schema and semantics as the streamed
-    * artifact — assignment is per-vector independent given frozen
-    * cells); [[probePairJoin]] is the EXACT registered join
-    * ([[withinCellDeltaPairs]]), so the probe times the real plan. */
+  /** The q129 pair-join term under an ARBITRARY cell count
+    * (`StreamIndexSpec` ground truth): [[probeAssignment]] is
+    * [[streamIndexPairsCold]]'s batch assignment generalized to k cells
+    * (same schema and semantics as the streamed artifact — assignment
+    * is per-vector independent given frozen cells); [[probePairJoin]]
+    * is the EXACT registered join ([[withinCellDeltaPairs]]). */
   private[graft] def probeAssignment(
       s: SparkSession, d: String, k: Int): DataFrame = {
     val cents = learnedCentroids(s, d, 0, k)
@@ -2427,32 +2243,12 @@ object SimilarityOps {
   private[graft] def probePairJoin(s: SparkSession, asn: DataFrame): DataFrame =
     withinCellDeltaPairs(s, asn)
 
-  /** [[probeAssignment]]'s TWO-LEVEL twin — the deployment form of the
-    * streamed-index build once k ∝ n makes the flat batch assignment
-    * the quadratic term (the r15 probe artifact measured its build
-    * column growing 6.4× for 10× rows while the join term it feeds
-    * stayed 1.29×): the Lloyd round and the per-vector assignment both
-    * route through ⌈√k⌉ supers ([[hierCellAssign]] — the same
-    * machinery q34's above-knee escape tier runs), so the n·k
-    * fat-row explosion of the crossJoin form never exists and nothing
-    * k-sized is driver-collected per row. APPROXIMATE by contract
-    * (routing retention ≥ 0.95 measured, `CoarseAssignSpec`); the
-    * probe publishes the end pair recall vs the flat build next to the
-    * build-term decade point, so the accuracy price of the escape is
-    * in the same artifact as its cost. */
-  private[graft] def probeAssignmentHier(
-      s: SparkSession, d: String, k: Int, wOverride: Int = 0): DataFrame =
-    hierCellAssign(s, d, 0, k, 1, wOverride)
-      .select(col("vec_id"), col("embedding"), col("nr"), col("c_id"))
-
   /** EXACT ground truth of the q129 delta-pair relation — every pair
-    * (v1 < v2, cosine ≥ 0.4) touching the probe's delta set
-    * (vec_id % 13 = 5), via a broadcast of the delta vectors against
-    * the corpus ([[embedNearPairsSampledTruth]]'s shape): n_delta·n
-    * dots, no shuffle. The probe scores BOTH index tiers against this,
-    * because recall-vs-flat alone punishes disagreement between two
-    * equally-approximate indexes (flat and hier learn slightly
-    * different centroids) rather than measuring quality. */
+    * (v1 < v2, cosine ≥ 0.4) touching the delta set (vec_id % 13 = 5),
+    * via a broadcast of the delta vectors against the corpus: n_delta·n
+    * dots, no shuffle. Scoring against this rather than against another
+    * index measures quality instead of punishing disagreement between
+    * two equally-approximate indexes. */
   private[graft] def probeDeltaTruth(s: SparkSession, d: String): DataFrame = {
     val e = embVecs(s, d)
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
@@ -2495,8 +2291,8 @@ object SimilarityOps {
     * (0.67 → 6.63 s, measured — the join term dominating once cells
     * hold 10⁴+ members). Holding it linear at scale means k ∝ n — the
     * [[pairCells]] contract q34/q102 already implement, and (round 15)
-    * MEASURED on this query's own join shape via
-    * `graft.StreamIndexProbe` (`BENCH_Q129_KN_r15.json`): under
+    * MEASURED on this query's own join shape by the since-retired
+    * StreamIndexProbe main (`BENCH_Q129_KN_r15.json`): under
     * k = pairCells(n), candidates grow 10.10× for 10× rows
     * (per-delta-vector volume flat, 156.6 → 158.3 at 20k → 200k
     * vectors) and the join wall 1.29×, where the same session's
@@ -2504,7 +2300,7 @@ object SimilarityOps {
     * 16.3× wall). The ASSIGNMENT term is closed the same way (round
     * 16, `BENCH_Q129_ASSIGN_r16.json`): at k ∝ n the flat
     * crossJoin build grows 8.2× for 10× rows (the n·k fat-row
-    * explosion) while [[probeAssignmentHier]]'s two-level build grows
+    * explosion) while the two-level build through [[hierCellAssign]] grows
     * 1.96× and retains 96–97% of the flat tier's truth-recall — the
     * hier route is the deployment form of the index build; the
     * registered demo keeps the flat 16-cell geometry so its oracle

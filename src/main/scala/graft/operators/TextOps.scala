@@ -426,12 +426,10 @@ object TextOps {
     * and pin the preemptive revision without filling a real one. */
   /** The ONE derivation of the staged-pair artifact's on-disk location
     * for (dir, family): MD5(abs dir | family), first 8 hex bytes, under
-    * tmpdir/graft_pairscan. Both [[stagedPairScan]] (create/reuse) and
-    * `WaveProbe.clearStaged` (delete, to force a cold restage per A/B
-    * leg) resolve through here, so a key-scheme change can never
-    * silently desynchronize the probe from the engine — a stale probe
-    * key would make every leg after the first measure a warm restage,
-    * corrupting the exact evidence the tool exists to gather. */
+    * tmpdir/graft_pairscan. [[stagedPairScan]] creates and reuses it;
+    * anything that must force a cold restage (an A/B leg) deletes the
+    * same path, so a key-scheme change cannot leave a stale artifact
+    * that makes every later leg measure a warm restage. */
   private[graft] def stagedArtifactDir(d: String, name: String): java.nio.file.Path = {
     val pathKey = java.security.MessageDigest.getInstance("MD5")
       .digest(s"${java.nio.file.Paths.get(d).toAbsolutePath}|$name".getBytes("UTF-8"))
@@ -890,27 +888,6 @@ object TextOps {
       .filter(col("jac") >= 0.4)
       .select(col("d1"), col("d2"), round(col("jac"), 6).as("jaccard"))
       .orderBy(col("d1"), col("d2"))
-  }
-
-  /** PairProbe hooks: the ranked index and the raw prefix-filter
-    * candidate stream, exposed so the dev cost probe can count phases
-    * without duplicating the plan. */
-  private[graft] def rankedIndexProbe(s: SparkSession, d: String): DataFrame =
-    rankedIndex(s, d)
-  private[graft] def prefixCandidatesProbe(s: SparkSession,
-      d: String): DataFrame = {
-    val rk = rankedIndex(s, d)
-    val pre = rk.filter(col("r") <= col("n") - expr("(2*n+4) DIV 5") + 1)
-    val a = pre.select(col("doc_id").as("d1"), col("h"),
-      col("n").as("n1"), col("r").as("r1"))
-    val b = pre.select(col("doc_id").as("d2"), col("h"),
-      col("n").as("n2"), col("r").as("r2"))
-    a.join(b, Seq("h"))
-      .filter(col("d1") < col("d2") &&
-        col("n1") * 5 >= col("n2") * 2 && col("n2") * 5 >= col("n1") * 2 &&
-        (lit(1) + least(col("n1") - col("r1"), col("n2") - col("r2"))) * 7 >=
-          (col("n1") + col("n2")) * 2)
-      .select(col("d1"), col("d2"))
   }
 
   /** Above-knee q27 plan: the AllPairs/PPJoin prefix-filter chain (see
@@ -4451,7 +4428,7 @@ object TextOps {
     * second corpus-token Generate, two token-row exchanges for the
     * anti-join, and a struct-sort rebuild. Measured r17 A/B at sf1:
     * best-of-2 3.56 → 3.47 s — the tail owned ~0.5 s there, NOT the
-    * bulk; the stage probe (`graft.Q128Probe`,
+    * bulk; the r17 per-stage noop timing (since retired,
     * `BENCH_Q128_STAGES_r17.json`) attributes the remaining warm wall
     * to the window-hash Generate (~0.9 s — every window must be
     * hashed) and the (h, doc) collapse (~1.2 s — within-doc repeats
@@ -4465,46 +4442,6 @@ object TextOps {
     * millions of docs: its h-partition is a single sort-based
     * (spillable) window group, the same exposure q101 carries by
     * design. */
-  /** Stage-timing probe for q128 (dev/evidence tooling, not a query):
-    * materializes each prefix of the q128 plan through a noop write and
-    * returns (stage → seconds), so the warm-wall attribution in the
-    * round artifacts is measured, not inferred. */
-  private[graft] def q128StageProbe(s: SparkSession, d: String): Seq[(String, Double)] = {
-    def time(tag: String)(df: => DataFrame): (String, Double) = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (tag, (System.nanoTime() - t0) / 1e9)
-    }
-    val docs = tokArrays(s, d)
-    def win = docs.filter(size(col("w")) >= 8)
-      .select(col("doc_id"), posexplode(expr(
-        "transform(sequence(0, size(w) - 8), i -> concat_ws(' ', slice(w, i + 1, 8)))")))
-      .select(col("doc_id"), col("pos"), tokHash(col("col")).as("h"))
-    def byDoc = win.groupBy(col("h"), col("doc_id"))
-      .agg(min(col("pos")).as("minpos"), collect_list(col("pos")).as("poss"))
-    val overH = Window.partitionBy(col("h"))
-    def flagged = byDoc
-      .withColumn("nd", count(lit(1)).over(overH))
-      .withColumn("canon",
-        min(struct(col("doc_id").as("cd"), col("minpos").as("cp"))).over(overH))
-      .filter(col("nd") >= 2)
-    def rm = flagged
-      .select(col("doc_id"), col("canon"), explode(col("poss")).as("pos"))
-      .filter(!(col("doc_id") === col("canon.cd") &&
-        col("pos") === col("canon.cp")))
-      .select(col("doc_id"),
-        explode(sequence(col("pos"), col("pos") + lit(7))).as("t"))
-      .groupBy(col("doc_id"))
-      .agg(collect_set(col("t")).as("rmv"))
-    Seq(
-      time("artifact_read")(docs),
-      time("win_generate_hash")(win),
-      time("bydoc_agg")(byDoc),
-      time("h_window_flag")(flagged),
-      time("rm_sets")(rm),
-      time("full_query")(q128SubstringDedupApply.fn(s, d)))
-  }
-
   val q128SubstringDedupApply: QueryDef = sql(
     "q128_substring_dedup_apply",
     """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),

@@ -4,29 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for all suites. */
 object TestSpark {
-  lazy val session: SparkSession = {
-    val wh = java.nio.file.Files
-      .createTempDirectory("graft-warehouse").toString
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      // see Bench: default Tungsten page size scales with the heap —
-      // with the 24g test JVM each short task zeroes a huge page, which
-      // dominated the iterative suites (PageRank convergence: 16 min →
-      // seconds with 1 MB pages)
-      .config("spark.buffer.pageSize", "1m")
-      // see Bench: without caps the status stores retain every test
-      // query's plan graph + metrics for the whole shared session
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.builder()
+    .appName("graft-test")
+    .config("spark.sql.warehouse.dir", java.nio.file.Files
+      .createTempDirectory("graft-warehouse").toString)
+    .getOrCreate()
 }

@@ -1,7 +1,10 @@
 #!/bin/bash
 # Fast dev-loop runner: java directly against compiled classes + Spark jars
 # (skips sbt JVM startup). Usage: tools/run.sh graft.Verify <args...>
+# Heap: SPARK_DRIVER_MEM, else half of MemTotal clamped to 2-8 GB.
 set -e
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -12,5 +15,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADDOPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-24g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -Xmx$HEAP \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
