@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -305,9 +306,19 @@ object CricketEtl {
       .drop("_src", "_rn")
       .withColumn("p_type",
         coalesce(col("info.match_type"), lit("unknown")))
-    // first load, or a missing/empty target, degrades to a plain write
-    val tableExists =
-      scala.util.Try(spark.read.parquet(outDir).isEmpty).toOption.contains(false)
+    // first load — a missing target, or one without data files — degrades
+    // to a plain write. A target holding data is read below and a read
+    // failure propagates: taking an unreadable table for empty would let
+    // the dynamic overwrite replace each touched partition with delta
+    // rows only, silently dropping the rest of it.
+    val root = new Path(outDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hasData(p: Path): Boolean = fs.listStatus(p).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".") &&
+        (st.isFile || hasData(st.getPath))
+    }
+    val tableExists = fs.exists(root) && hasData(root)
     // the partition key is a coarse business key (match_type: a handful
     // of values by design), so the touched-partition LIST is driver-sized
     // even at 100 TB; collecting it buys partition pruning on the
@@ -337,20 +348,10 @@ object CricketEtl {
           .collect().map(_.getString(0)).toSet
         (out, touched.filterNot(written))
       }
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try toWrite.write.mode("overwrite").partitionBy("p_type").parquet(outDir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    if (emptied.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(outDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(outDir, s"p_type=$v"), true)
-      }
-    }
+    toWrite.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("p_type").parquet(outDir)
+    emptied.foreach(v => fs.delete(new Path(root, s"p_type=$v"), true))
   }
 
   // ---- graph builders (§2.G, `neo4j_loader.py`) ----------------------

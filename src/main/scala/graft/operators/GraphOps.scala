@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.QueryDef
 import graft.QueryDef.{noOracle, sql}
@@ -21,10 +27,10 @@ import graft.sources.Tables._
   * per lineitem (ball), with quantity/price as edge properties.
   *
   * Scale posture: node/edge builders are distinct-aggregations (partial
-  * dedup before shuffle); PageRank is the one iterative operator — each
-  * step is edge⋈rank join (shuffle-hash on src; rank table ≪ edges, so
-  * AQE broadcasts while it fits) + hash agg on dst, with localCheckpoint
-  * every few iterations to truncate lineage growth.
+  * dedup before shuffle); PageRank is the one iterative operator — link
+  * lists and ranks share one hash partitioner, so each iteration is a
+  * narrow link⋈rank join plus one node-sized shuffle of contributions,
+  * and all iterations run as one job at a single eager result pin.
   */
 object GraphOps {
 
@@ -54,7 +60,7 @@ object GraphOps {
 
   /** PageRank over (src, dst) edges — `gds.pageRank` equivalent
     * (`cypher_queries.cypher:27-34`). Fixed iteration count for
-    * determinism.
+    * determinism; returns `(node, rank)` with `node` of the edges' type.
     *
     * Dangling-node mass deliberately DECAYS rather than being
     * redistributed. This graph is bipartite customer→supplier, so every
@@ -68,89 +74,90 @@ object GraphOps {
     * Rank VALUES therefore sum to < 1; orderings are unaffected for
     * rankings within a node class.
     *
-    * The rank table stays node-sized (≪ edges), so by default each
-    * iteration pins a broadcast of it — the edge side never shuffles,
-    * and the only exchange per iteration is the node-sized contribs agg.
-    * `broadcastRanks=false` falls back to AQE-chosen joins for graphs
-    * whose node table outgrows the broadcast threshold.
+    * Runs as [[powerIteration]]: the edges shuffle once into per-source
+    * link lists, each iteration is one node-sized shuffle, and the whole
+    * loop is a single job at the eager result pin.
     *
     * Fault tolerance: `localCheckpoint` (default) truncates lineage but
     * dies with an executor — fine on local mode; on a real cluster pass
     * `checkpointDir=Some(hdfsPath)` to use reliable `checkpoint()`
     * (identical results, pinned by `GraphOpsSpec`).
-    *
-    * FLOAT CAVEAT at the node knee: past [[PageRankBroadcastNodeKnee]]
-    * this float form falls back to AQE-chosen shuffled joins, and
-    * double-precision sums are not associative — the plan switch may
-    * perturb low-order rank bits (unlike [[pageRankQuantized]], whose
-    * BIGINT trajectory is spec-pinned identical across join
-    * strategies). Hash-verified callers must use `pageRankQuantized`;
-    * this form is for rankings/demos where ulp-level drift is
-    * immaterial.
     */
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-      broadcastRanks: Boolean = true,
-      checkpointDir: Option[String] = None,
-      edgesDistinct: Boolean = false): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
-    // setCheckpointDir is session-global; restore the caller's value so a
-    // library call doesn't silently redirect unrelated jobs' checkpoints.
-    // (Restoration is by containment, not identity: setCheckpointDir
-    // nests a fresh UUID subdir per call, so the restored dir is a new
-    // leaf UNDER the caller's previous tree.) All checkpoint() calls
-    // below are eager, so every file this run writes lands before the
-    // restore.
+      checkpointDir: Option[String] = None): DataFrame =
+    powerIteration[Double](edges, iters, "rank", DoubleType, checkpointDir)(
+      init = n => 1.0 / n,
+      share = (r, outDeg) => r / outDeg,
+      update = (n, msg) => (1 - damping) / n + damping * msg)
+
+  /** Co-partitioned power iteration shared by [[pageRank]] and
+    * [[pageRankQuantized]] (the RDD paper's PageRank, Zaharia et al.,
+    * NSDI 2012). The distinct edges are grouped by `src` into link lists
+    * and the node table is built from them; both sit under ONE
+    * `HashPartitioner(spark.sql.shuffle.partitions)` and are persisted
+    * for this run only. Each iteration joins links with ranks — narrow,
+    * since both share the partitioner — spreads every rank over its
+    * out-edges via `share(rank, outDeg)`, unions a zero contribution per
+    * node (so nodes without in-edges still get `update(n, 0)`) and
+    * reduces by key into the partitioner: one shuffle per iteration,
+    * edges never re-shuffle and no node-sized table passes the driver.
+    * The lineage stays unmaterialized until the single eager result pin,
+    * so every iteration runs in that one job; the only other job counts
+    * the nodes. Nodes without out-links contribute nothing (dangling
+    * mass decays).
+    *
+    * `setCheckpointDir` is session-global, so the caller's value is
+    * restored. (Restoration is by containment, not identity:
+    * setCheckpointDir nests a fresh UUID subdir per call, so the restored
+    * dir is a new leaf UNDER the caller's previous tree.) The pin is
+    * eager, so every file this run writes lands before the restore.
+    */
+  private def powerIteration[R: ClassTag](edges: DataFrame, iters: Int,
+      rankCol: String, rankType: DataType, checkpointDir: Option[String])(
+      init: Long => R, share: (R, Int) => R, update: (Long, R) => R)(
+      implicit num: Numeric[R]): DataFrame = {
+    val spark = edges.sparkSession
+    val sc = spark.sparkContext
+    val part = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val links = edges.select("src", "dst").rdd
+      .map(r => (r.get(0), r.get(1)))
+      .aggregateByKey(mutable.HashSet.empty[Any], part)(_ += _, _ ++= _)
+      .mapValues(_.toArray)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the node table, valued with the zero contribution every node
+    // receives each iteration
+    val zeros = links.flatMap { case (src, dsts) => dsts.iterator ++ Iterator(src) }
+      .map(_ -> num.zero)
+      .reduceByKey(part, (z, _) => z)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val prevCheckpointDir = sc.getCheckpointDir
     checkpointDir.foreach(sc.setCheckpointDir)
     try {
-      def pin(df: DataFrame): DataFrame =
-        if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-      // edgesDistinct lets a caller holding a materialized distinct
-      // projection (q24's session-cached artifact) skip a redundant
-      // corpus-wide dedup shuffle + cache round-trip.
-      val e =
-        if (edgesDistinct) edges.select("src", "dst")
-        else edges.select("src", "dst").distinct().cache()
-      val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-      val eDeg = pin(e.join(outDeg, "src"))
-      val ns = pin(nodes(e))
-      val n = ns.count()
-      if (!edgesDistinct) e.unpersist()
-      // same automatic escape as the quantized twin: past the node knee
-      // the per-iteration broadcasts fall back to AQE-chosen joins
-      val bcast = broadcastRanks && n <= PageRankBroadcastNodeKnee
-      var ranks = ns.withColumn("rank", lit(1.0 / n))
-      for (i <- 1 to iters) {
-        ranks = pageRankStep(eDeg, ns, ranks, damping, n, bcast)
-        // checkpoint every 3rd iteration and the last, keeping the number
-        // of eager materialization jobs low. A mid-run pin within 2
-        // iterations of the end is skipped because the final pin covers
-        // it, so the unpinned lineage chain is usually 3 iterations but
-        // can reach 5 when that skip fires (e.g. iters=5 pins only at
-        // the end).
-        if (i == iters || (i % 3 == 0 && iters - i >= 3)) ranks = pin(ranks)
+      val n = zeros.count()
+      val r0 = init(n)
+      var ranks = zeros.mapValues(_ => r0)
+      for (_ <- 1 to iters) {
+        ranks = links.join(ranks, part)
+          .flatMap { case (_, (dsts, r)) =>
+            val c = share(r, dsts.length)
+            dsts.iterator.map(_ -> c)
+          }
+          .union(zeros)
+          .reduceByKey(part, num.plus(_, _))
+          .mapValues(update(n, _))
       }
-      ranks
-    } finally if (checkpointDir.isDefined) sc.setCheckpointDir(prevCheckpointDir.orNull)
-  }
-
-  /** One PageRank iteration — broadcast-join → partial agg →
-    * broadcast-left-join; both broadcast sides are node-sized, so no
-    * wide shuffle of edges or nodes occurs (plan pinned by
-    * `PlanAuditSpec`). */
-  private[graft] def pageRankStep(eDeg: DataFrame, ns: DataFrame,
-      ranks: DataFrame, damping: Double, n: Long,
-      broadcastRanks: Boolean): DataFrame = {
-    val rankSide = if (broadcastRanks) broadcast(ranks) else ranks
-    val contribs = eDeg
-      .join(rankSide, col("src") === col("node"))
-      .select(col("dst").as("node"), (col("rank") / col("out_deg")).as("contrib"))
-      .groupBy("node").agg(sum("contrib").as("msg"))
-    val contribSide = if (broadcastRanks) broadcast(contribs) else contribs
-    ns.join(contribSide, Seq("node"), "left")
-      .select(col("node"),
-        (lit((1 - damping) / n) +
-          lit(damping) * coalesce(col("msg"), lit(0.0))).as("rank"))
+      val schema = StructType(Seq(
+        StructField("node", edges.schema("src").dataType),
+        StructField(rankCol, rankType, nullable = false)))
+      val out = spark.createDataFrame(
+        ranks.map { case (node, r) => Row(node, r) }, schema)
+      if (checkpointDir.isDefined) out.checkpoint() else out.localCheckpoint()
+    } finally {
+      links.unpersist(blocking = false)
+      zeros.unpersist(blocking = false)
+      if (checkpointDir.isDefined) sc.setCheckpointDir(prevCheckpointDir.orNull)
+    }
   }
 
   /** Node inventory by type — G2 MERGE-node dedup, verified relationally. */
@@ -239,10 +246,10 @@ object GraphOps {
   /** INTEGER-QUANTIZED PageRank — the oracle-eligible twin of
     * [[pageRank]]: ranks live as BIGINT multiples of 1e-12 and every
     * step is integer arithmetic (`div` = floor division on positives),
-    * so the fixpoint trajectory is EXACTLY reproducible in any engine —
-    * no float-summation-order nondeterminism to round away. Same plan
-    * shape as [[pageRank]]: node-sized rank/contrib broadcasts pinned,
-    * the only exchange per iteration is the node-sized contribs agg.
+    * so the fixpoint trajectory is EXACTLY reproducible in any engine and
+    * under any partitioning — no float-summation-order nondeterminism to
+    * round away. Same [[powerIteration]] as [[pageRank]]; returns
+    * `(node, rq)`.
     *
     *   init      rq = S div n                    (S = 1e12)
     *   contrib   rq div out_deg  summed per dst  (exact long sum)
@@ -254,57 +261,12 @@ object GraphOps {
     * leaving six orders of headroom; a corpus with more than ~1e12 nodes
     * would raise S (and the state width) together.
     */
-  /** Node count above which the per-iteration rank/contrib broadcasts
-    * stop being the right plan: a broadcast hash relation costs ~50 B
-    * per (long, long) row, so 20M nodes ≈ 1 GB built on the driver and
-    * re-shipped EVERY iteration — past that the iteration must fall
-    * back to AQE-chosen shuffled joins (node-hash-partitioned on both
-    * sides, the standard distributed PageRank shape). 1.5M nodes at
-    * sf10 measures 4.1×/decade with broadcasts pinned; the knee is the
-    * automatic escape the 100× story needs, not a bench-scale tune. */
-  private[graft] val PageRankBroadcastNodeKnee = 20000000L
-
   private[graft] def pageRankQuantized(edges: DataFrame, iters: Int = 4,
-      scale: Long = 1000000000000L,
-      broadcastRanks: Boolean = true): DataFrame = {
-    val e = edges.select("src", "dst") // caller passes a distinct projection
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val eDeg = e.join(outDeg, "src").localCheckpoint()
-    val ns = nodes(e).localCheckpoint()
-    val n = ns.count()
-    val bcast = broadcastRanks && n <= PageRankBroadcastNodeKnee
-    val teleportQ = (scale - scale * 85L / 100L) / n // 0.15·S div n, exact
-    var ranks = ns.withColumn("rq", lit(scale / n))
-    for (i <- 1 to iters) {
-      ranks = pageRankQuantizedStep(eDeg, ns, ranks, teleportQ, bcast)
-      // same cadence as the float loop: a mid-run pin within 2
-      // iterations of the final pin is pure waste (superseded at once)
-      if (i == iters || (i % 3 == 0 && iters - i >= 3))
-        ranks = ranks.localCheckpoint()
-    }
-    ranks
-  }
-
-  /** One integer PageRank iteration — same broadcast discipline as
-    * [[pageRankStep]] (both broadcast sides node-sized; the only
-    * exchange is the contribs agg), pinned by `PlanAuditSpec`.
-    * `broadcastRanks=false` is the same escape hatch as the float twin:
-    * graphs whose node table outgrows the broadcast threshold fall back
-    * to AQE-chosen joins. */
-  private[graft] def pageRankQuantizedStep(eDeg: DataFrame, ns: DataFrame,
-      ranks: DataFrame, teleportQ: Long,
-      broadcastRanks: Boolean = true): DataFrame = {
-    val rankSide = if (broadcastRanks) broadcast(ranks) else ranks
-    val contribs = eDeg
-      .join(rankSide, col("src") === col("node"))
-      .select(col("dst").as("node"), expr("rq div out_deg").as("contrib"))
-      .groupBy("node").agg(sum("contrib").as("msg"))
-    val contribSide = if (broadcastRanks) broadcast(contribs) else contribs
-    ns.join(contribSide, Seq("node"), "left")
-      .select(col("node"),
-        (lit(teleportQ) +
-          expr("(85 * coalesce(msg, CAST(0 AS BIGINT))) div 100")).as("rq"))
-  }
+      scale: Long = 1000000000000L): DataFrame =
+    powerIteration[Long](edges, iters, "rq", LongType, None)(
+      init = n => scale / n,
+      share = (rq, outDeg) => rq / outDeg,
+      update = (n, msg) => (scale - scale * 85L / 100L) / n + (85 * msg) / 100)
 
   /** PageRank top-20 — G9, HASH-verified: the registered path runs the
     * integer-quantized iteration ([[pageRankQuantized]]) and the oracle
@@ -359,9 +321,9 @@ object GraphOps {
       |SELECT node, CAST(rq AS DOUBLE) / 1e12 AS rank
       |FROM r4 ORDER BY rank DESC, node LIMIT 20""") { (s, d) =>
     // the ITERATION runs on packed LONG node ids (custkey·2 / suppkey·2+1):
-    // 4 broadcast-join+agg passes over the edge list key on 8-byte longs
-    // instead of ~8-char strings — less hash/compare CPU and ~2× less
-    // broadcast/shuffle state per pass. The string names the oracle (and
+    // the link lists and the 4 contribution shuffles key on 8-byte longs
+    // instead of ~8-char strings — less hash/compare CPU and less
+    // shuffle state per pass. The string names the oracle (and
     // the reference's Cypher surface) speak appear only in the final
     // 20-row projection. Bipartite key spaces stay disjoint by parity.
     val projection = graft.SessionCache.checkpoint("graphProjectionL", s, d)(

@@ -379,6 +379,30 @@ class CricketEtlSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$out/p_type=T20").exists())
   }
 
+  test("incremental upsert into an existing but unreadable target throws " +
+      "and leaves the target's files unchanged") {
+    val out = Files.createTempDirectory("cricket_parted").toString + "/m"
+    CricketEtl.upsertMatchesByPartition(spark,
+      writeDir("a.json" -> v11Match, "b.json" -> v10Match), out)
+    // a corrupt summary file: parquet schema inference reads it first
+    Files.writeString(Path.of(out, "_common_metadata"), "not parquet")
+    def files(): Map[String, Seq[Byte]] = {
+      val root = Path.of(out)
+      val walk = Files.walk(root)
+      try walk.filter(Files.isRegularFile(_)).toArray.toSeq
+        .map(_.asInstanceOf[Path])
+        .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq)
+        .toMap
+      finally walk.close()
+    }
+    val before = files()
+    val delta = v11Match.replace("\"city\": \"Kolkata\"", "\"city\": \"Chennai\"")
+    intercept[Exception] {
+      CricketEtl.upsertMatchesByPartition(spark, writeDir("a.json" -> delta), out)
+    }
+    assert(files() == before)
+  }
+
   test("partnership proxy counts ordered co-facing pairs (Cypher c)") {
     val faced = Seq(
       ("A", "X", "T1"), ("A", "X", "T1"), ("B", "X", "T1"), ("C", "Y", "T1"))

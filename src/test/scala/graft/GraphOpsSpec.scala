@@ -181,23 +181,35 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(ns.toSeq == Seq("a", "b", "c"))
   }
 
-  test("quantized PageRank is join-strategy independent: the past-knee " +
-      "shuffled-join fallback walks the identical BIGINT trajectory as " +
-      "the broadcast path") {
-    // the automatic PageRankBroadcastNodeKnee switches plans, never
-    // results: integer sums are associative and exact under any
-    // partitioning, so the knee firing at 100x node counts cannot move
-    // a hash-verified answer — pinned here by forcing the fallback on
-    // the same edges
-    val edges = Seq(1L -> 2L, 1L -> 3L, 2L -> 3L, 3L -> 1L, 4L -> 1L,
-        2L -> 4L, 4L -> 3L)
+  test("PageRank is partitioning-invariant: at 1 and at 7 shuffle " +
+      "partitions quantized ranks are bit-identical and float ranks agree " +
+      "to 1e-12 relative") {
+    // 300 nodes, every 5th without out-edges (dangling); at 7 partitions
+    // each partition holds many keys, so the reduce order differs
+    // between the two settings
+    val edges = (0 until 300).filter(_ % 5 != 0)
+      .flatMap(i => Seq(i -> (i * 7 + 3) % 300, i -> (i * 13 + 5) % 300,
+        i -> (i * i) % 300))
+      .map { case (a, b) => (s"n$a", s"n$b") }
       .toDF("src", "dst")
-    def ranks(bcast: Boolean) =
-      GraphOps.pageRankQuantized(edges, iters = 4, broadcastRanks = bcast)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(ranks(true) == ranks(false))
-    assert(GraphOps.PageRankBroadcastNodeKnee > 1000000L,
-      "knee must sit above every bench-scale node count (plans there " +
-        "are pinned broadcast by PlanAuditSpec)")
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def ranks(partitions: Int): (Map[String, Double], Map[String, Long]) = {
+      spark.conf.set(key, partitions.toString)
+      (GraphOps.pageRank(edges, iters = 10).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap,
+       GraphOps.pageRankQuantized(edges, iters = 10).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+    }
+    try {
+      val (float1, quant1) = ranks(1)
+      val (float7, quant7) = ranks(7)
+      assert(quant1.size == 300 && quant1 == quant7)
+      assert(float1.keySet == float7.keySet)
+      float1.foreach { case (n, v) =>
+        assert(math.abs(float7(n) - v) <= 1e-12 * v,
+          s"node $n: ${float7(n)} at 7 partitions vs $v at 1")
+      }
+    } finally spark.conf.set(key, prev)
   }
 }

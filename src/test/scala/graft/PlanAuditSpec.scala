@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -239,40 +240,50 @@ class PlanAuditSpec extends AnyFunSuite {
       s"unexpected non-cluster window partitioning: $specs")
   }
 
-  test("PageRank iteration joins via pinned broadcasts, no sort-merge") {
-    // the q24 plan itself ends at a checkpoint scan; audit one iteration
-    // step directly.
-    import org.apache.spark.sql.functions._
-    val edges = graft.operators.GraphOps.facedEdges(spark, sf)
-      .select("src", "dst").distinct()
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    // pinned inputs, as in pageRank itself — only the step's joins are
-    // under audit
-    val eDeg = edges.join(outDeg, "src").localCheckpoint()
-    val ns = graft.operators.GraphOps.nodes(edges).localCheckpoint()
-    val ranks = ns.withColumn("rank", lit(0.5))
-    val plan = finalPlan(graft.operators.GraphOps.pageRankStep(
-      eDeg, ns, ranks, 0.85, 2L, broadcastRanks = true))
-    assert(plan.contains("BroadcastHashJoin"))
-    assert(!plan.contains("SortMergeJoin"),
-      "rank join fell back to a shuffle sort-merge join")
+  /** Jobs started on this thread while `body` runs, seen by a listener.
+    * Listener events arrive in order, so once a marker job that runs
+    * after `body` has been seen, every job of `body` has been too. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(marker, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime + 60000000000L
+      while (!seen.contains(marker) && System.nanoTime < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
-  test("quantized PageRank (q24's registered path) keeps the broadcast " +
-      "iteration shape: rank/contrib joins broadcast, no sort-merge") {
-    import org.apache.spark.sql.functions._
-    val edges = graft.operators.GraphOps.facedEdges(spark, sf)
-      .select("src", "dst").distinct()
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val eDeg = edges.join(outDeg, "src").localCheckpoint()
-    val ns = graft.operators.GraphOps.nodes(edges).localCheckpoint()
-    val ranks = ns.withColumn("rq", lit(1000000L))
-    val plan = finalPlan(graft.operators.GraphOps.pageRankQuantizedStep(
-      eDeg, ns, ranks, teleportQ = 1000L))
-    assert(plan.contains("BroadcastHashJoin"),
-      "quantized rank join lost its broadcast pin")
-    assert(!plan.contains("SortMergeJoin"),
-      "quantized iteration fell back to shuffle sort-merge joins")
+  test("PageRank runs the whole power iteration in one job: the job " +
+      "count is the same at 4 and 12 iterations and at most 6, float " +
+      "and quantized") {
+    import graft.operators.GraphOps
+    val edges = GraphOps.facedEdges(spark, sf).select("src", "dst").distinct()
+    for ((label, run) <- Seq[(String, Int => Unit)](
+        "float" -> (i => GraphOps.pageRank(edges, iters = i).collect()),
+        "quantized" -> (i => GraphOps.pageRankQuantized(edges, iters = i).collect()))) {
+      val at4 = jobsOf(run(4))
+      val at12 = jobsOf(run(12))
+      assert(at4 == at12, s"$label: jobs grow with iterations: $at4 at 4, $at12 at 12")
+      assert(at12 <= 6, s"$label: $at12 jobs exceed the budget of 6")
+    }
   }
 
   test("q39 joins two 3-row aggregates — the sketch join must broadcast " +
@@ -347,34 +358,6 @@ class PlanAuditSpec extends AnyFunSuite {
     val exchanges = finalExchanges(plan)
     assert(exchanges <= 4,
       s"mixture exchange budget blown (2 tiny aggs + final sort): $exchanges\n$plan")
-  }
-
-  test("PageRank broadcastRanks=false fallback: iteration joins stay " +
-      "equi (shuffle-hash/SMJ/AQE-broadcast), never nested-loop, with a " +
-      "bounded exchange budget") {
-    import org.apache.spark.sql.functions._
-    val edges = graft.operators.GraphOps.facedEdges(spark, sf)
-      .select("src", "dst").distinct()
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val eDeg = edges.join(outDeg, "src").localCheckpoint()
-    val ns = graft.operators.GraphOps.nodes(edges).localCheckpoint()
-    for ((plan, label) <- Seq(
-        finalPlan(graft.operators.GraphOps.pageRankStep(
-          eDeg, ns, ns.withColumn("rank", lit(0.5)), 0.85, 2L,
-          broadcastRanks = false)) -> "float",
-        finalPlan(graft.operators.GraphOps.pageRankQuantizedStep(
-          eDeg, ns, ns.withColumn("rq", lit(1000000L)), teleportQ = 1000L,
-          broadcastRanks = false)) -> "quantized")) {
-      assert(!plan.contains("BroadcastNestedLoopJoin"),
-        s"$label fallback degenerated to a nested-loop join\n$plan")
-      assert(!plan.contains("CartesianProduct"),
-        s"$label fallback degenerated to a cartesian\n$plan")
-      // per-iteration budget: ≤ 2 join distributions + the contribs agg
-      // on each side — anything beyond means a re-shuffle crept in
-      val exchanges = finalExchanges(plan)
-      assert(exchanges <= 5,
-        s"$label fallback iteration exchange budget blown: $exchanges\n$plan")
-    }
   }
 
   test("q71 outlier count probes with broadcast stats — never a window " +

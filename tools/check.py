@@ -6,13 +6,19 @@ over the same sfDir tables, and diffs (schema-by-sorted-column-name,
 row-sorted values, exact match for non-floats, exact-or-1e-9 for floats).
 
 Usage: python3 tools/check.py <sfDir> <outDir>
+
+Offline mode, no DuckDB: compare two Verify output directories query by
+query (row count and an order-independent hash of the normalized rows,
+columns sorted by name) and exit non-zero on any difference:
+
+       python3 tools/check.py --against <baseOutDir> <outDir>
 """
+import hashlib
 import json
 import math
 import sys
 from pathlib import Path
 
-import duckdb
 import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -40,7 +46,48 @@ def rows_of(cols, names):
         key=repr)
 
 
+def read_result(res_dir):
+    """(column names, normalized sorted rows) of one query's result
+    parquet, or None when it wrote none."""
+    files = sorted(Path(res_dir).glob("*.parquet"))
+    if not files:
+        return None
+    tbl = pq.read_table(files[0])
+    return tbl.column_names, rows_of([c.to_pylist() for c in tbl.columns],
+                                     tbl.column_names)
+
+
+def fingerprint(res_dir):
+    """(row count, hash over sorted column names and sorted rows) of one
+    query's result, or None when it wrote no parquet."""
+    res = read_result(res_dir)
+    if res is None:
+        return None
+    names, rows = res
+    h = hashlib.sha256(repr((sorted(names), rows)).encode()).hexdigest()
+    return len(rows), h[:16]
+
+
+def diff(base_dir, out_dir):
+    names = set()
+    for d in (base_dir, out_dir):
+        names |= set(json.loads(Path(f"{d}/oracle_sql.json").read_text()))
+    n_same = n_diff = 0
+    for name in sorted(names):
+        base = fingerprint(Path(base_dir) / name)
+        got = fingerprint(Path(out_dir) / name)
+        if base is not None and base == got:
+            print(f"SAME {name} ({got[0]} rows, {got[1]})")
+            n_same += 1
+        else:
+            print(f"DIFF {name}: base {base} vs {got}")
+            n_diff += 1
+    print(f"\n{n_same} same, {n_diff} differ")
+    return 1 if n_diff else 0
+
+
 def main(sf_dir, out_dir):
+    import duckdb
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -60,15 +107,12 @@ def main(sf_dir, out_dir):
     oracle = json.loads(Path(f"{out_dir}/oracle_sql.json").read_text())
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
-        res_dir = Path(out_dir) / name
-        files = list(res_dir.glob("*.parquet"))
-        if not files:
+        res = read_result(Path(out_dir) / name)
+        if res is None:
             print(f"FAIL {name}: no spark result parquet")
             n_fail += 1
             continue
-        tbl = pq.read_table(files[0])
-        got_names = tbl.column_names
-        got = rows_of([c.to_pylist() for c in tbl.columns], got_names)
+        got_names, got = res
         try:
             rel = con.sql(sql)
             exp_names = list(rel.columns)
@@ -128,4 +172,6 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
+    if sys.argv[1] == "--against":
+        sys.exit(diff(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
