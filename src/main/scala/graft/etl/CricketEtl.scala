@@ -11,10 +11,12 @@ import org.apache.spark.sql.types._
   * Spark plan: whole-file JSON scan → coalesce-chain normalization →
   * 3-level explode → derived flags → parquet sinks. The reference's
   * per-file Python loop (single process, single thread, `:128-145`)
-  * becomes a parallel `FileSourceScan`; its hand-rolled v1.0.0/v1.1.0
-  * polymorphism (`:79-89`) becomes schema-tolerant column selection:
-  * a field reference that does not exist in the corpus resolves to a
-  * typed null, exactly like `dict.get`.
+  * becomes a parallel `FileSourceScan` against one declared read schema
+  * (`readSchema`): every Cricsheet field the ETL reads, in both the
+  * v1.0.0 and the v1.1.0 spelling, so no job ever infers a schema. Its
+  * hand-rolled v1.0.0/v1.1.0 polymorphism (`:79-89`) becomes coalesce
+  * chains over both spellings: a field a file lacks reads as null,
+  * exactly like `dict.get`.
   *
   * Known deviations (documented, tested):
   *  - `_id` is always a string (the reference can produce an int
@@ -24,11 +26,14 @@ import org.apache.spark.sql.types._
   *  - `innings` is int-typed via the `innings|number` chain; the
   *    reference's final `|team` fallback (a string in an int field) is
   *    dropped.
-  *  - `info.officials` is null (not `{}`) when a corpus lacks the field.
-  *  - a mixed v1.0.0+v1.1.0 directory is supported: conflicting field
-  *    shapes (scalar vs dict `runs`, dict vs array `wickets`) infer as
-  *    raw JSON strings and normalize through the try_cast/from_json
-  *    fallbacks below (fixture-tested in `CricketEtlSpec`).
+  *  - `info.officials` keeps only Cricsheet's four keys
+  *    (`match_referees`, `reserve_umpires`, `tv_umpires`, `umpires`),
+  *    and is null (not `{}`) when a file lacks the field.
+  *  - the fields whose shape differs between versions (`runs`: number
+  *    or object; `wickets`: array or object; `wicket`) are read as raw
+  *    JSON text and decoded through the try_cast/from_json chains below,
+  *    so one directory may mix v1.0.0 and v1.1.0 files
+  *    (fixture-tested in `CricketEtlSpec`).
   *
   * Scale posture: ingestion of N match files is embarrassingly parallel
   * (one task per file split); normalization and explode are pure
@@ -37,223 +42,135 @@ import org.apache.spark.sql.types._
   */
 object CricketEtl {
 
-  /** A1 directory JSON scan: one row per match file. Only `*.json` files
-    * are read (`etl_cricsheet_to_mongo.py:128` — `f.endswith(".json")`):
-    * a stray README in the corpus directory is ignored, not ingested as
-    * `_corrupt_record` rows. */
+  /** The Cricsheet fields the ETL reads. Ids are strings, counters
+    * bigints; a STRING field holds the raw JSON text of whatever value
+    * the file has there, which is how the version-dependent shapes of
+    * `runs`, `wickets` and `wicket` arrive. */
+  private val readSchema: StructType = StructType.fromDDL(
+    """meta STRUCT<data_version: STRING>,
+      |info STRUCT<
+      |  dates: ARRAY<STRING>, team_type: STRING, match_type: STRING,
+      |  gender: STRING, teams: ARRAY<STRING>, venue: STRING, city: STRING,
+      |  match_id: STRING, registry: STRUCT<`match`: STRING>,
+      |  event: STRUCT<match_number: STRING>,
+      |  officials: STRUCT<match_referees: ARRAY<STRING>,
+      |    reserve_umpires: ARRAY<STRING>, tv_umpires: ARRAY<STRING>,
+      |    umpires: ARRAY<STRING>>,
+      |  outcome: STRUCT<winner: STRING, result: STRING,
+      |    `by`: STRUCT<runs: BIGINT, wickets: BIGINT>>>,
+      |innings ARRAY<STRUCT<innings: BIGINT, number: BIGINT, team: STRING,
+      |  overs: ARRAY<STRUCT<over: BIGINT, deliveries: ARRAY<STRUCT<
+      |    ball: BIGINT, batter: STRING, striker: STRING,
+      |    non_striker: STRING, nonStriker: STRING, bowler: STRING,
+      |    runs: STRING, wickets: STRING, wicket: STRING>>>>>>""".stripMargin)
+
+  /** A1 directory JSON scan: one row per match file, read against
+    * `readSchema`. Only `*.json` files are read
+    * (`etl_cricsheet_to_mongo.py:128` — `f.endswith(".json")`): a stray
+    * README in the corpus directory is ignored, not ingested as a row. */
   def readMatches(spark: SparkSession, dir: String): DataFrame =
     spark.read
+      .schema(readSchema)
       .option("multiLine", true)
       .option("pathGlobFilter", "*.json")
       .json(dir)
 
-  // ---- schema-tolerant access (dict.get semantics) -------------------
-
-  private def has(st: StructType, path: Seq[String]): Boolean = path match {
-    case Seq() => true
-    case head +: rest => st.fields.find(_.name == head) match {
-      case Some(StructField(_, s: StructType, _, _)) => has(s, rest)
-      case Some(_) => rest.isEmpty
-      case None => false
-    }
-  }
-
-  /** top-level dot-path or typed null when absent from the corpus. */
-  private def opt(df: DataFrame, path: String): Column =
-    if (has(df.schema, path.split('.').toSeq)) col(path)
-    else lit(null)
-
-  /** struct-field access on a bound column, or typed null when absent. */
-  private def optF(st: StructType, parent: Column, name: String): Column =
-    if (has(st, Seq(name))) parent.getField(name) else lit(null)
-
-  private def structTypeOf(df: DataFrame, path: String): StructType = {
-    def walk(st: StructType, p: Seq[String]): DataType = p match {
-      case Seq() => st
-      case head +: rest => st.fields.find(_.name == head).map(_.dataType) match {
-        case Some(s: StructType) => if (rest.isEmpty) s else walk(s, rest)
-        case Some(ArrayType(s: StructType, _)) =>
-          if (rest.isEmpty) s else walk(s, rest)
-        case Some(other) => other
-        case None => new StructType()
-      }
-    }
-    walk(df.schema, path.split('.').toSeq) match {
-      case s: StructType => s
-      case _ => new StructType()
-    }
-  }
-
   // ---- match normalization (B3/B5/C1-C8) -----------------------------
+
+  private val noStrings = array().cast("array<string>")
+  private val dates = coalesce(col("info.dates"), noStrings)
 
   /** `_id` fallback chain (`etl_cricsheet_to_mongo.py:31,52`):
     * match_id | registry.match | event.match_number | city+"-"+date. */
-  private def matchIdCol(raw: DataFrame): Column = {
-    val dateStr = element_at(coalesce(opt(raw, "info.dates"),
-      array().cast("array<string>")), 1)
-    coalesce(
-      opt(raw, "info.match_id").cast("string"),
-      opt(raw, "info.registry.match").cast("string"),
-      opt(raw, "info.event.match_number").cast("string"),
-      concat(coalesce(opt(raw, "info.city").cast("string"), lit("")),
-        lit("-"), coalesce(dateStr, lit(""))))
-  }
+  private val matchIdCol: Column = coalesce(
+    col("info.match_id"),
+    col("info.registry.match"),
+    col("info.event.match_number"),
+    concat(coalesce(col("info.city"), lit("")),
+      lit("-"), coalesce(element_at(dates, 1), lit(""))))
 
   /** One row per match: fixed shape regardless of source version
     * (`normalize_match`, `etl_cricsheet_to_mongo.py:28-68`). */
   def normalizeMatches(raw: DataFrame): DataFrame = {
-    val dates = coalesce(opt(raw, "info.dates").cast("array<string>"),
-      array().cast("array<string>"))
-    val dateStr = element_at(dates, 1)
-    val winner = opt(raw, "info.outcome.winner").cast("string")
-    val byRuns = opt(raw, "info.outcome.by.runs").cast("long")
-    val byWkts = opt(raw, "info.outcome.by.wickets").cast("long")
+    val winner = col("info.outcome.winner")
+    val byRuns = col("info.outcome.by.runs")
+    val byWkts = col("info.outcome.by.wickets")
     // C1 result text + B6 branch structure (`etl:42-49`)
     val result = when(byRuns.isNotNull,
         format_string("%s won by %d runs", winner, byRuns))
       .when(byWkts.isNotNull,
         format_string("%s won by %d wickets", winner, byWkts))
-      .otherwise(opt(raw, "info.outcome.result").cast("string"))
+      .otherwise(col("info.outcome.result"))
     raw.select(
-      matchIdCol(raw).as("_id"),
+      matchIdCol.as("_id"),
       struct(
         dates.as("dates"),
-        opt(raw, "info.team_type").cast("string").as("team_type"),
-        opt(raw, "info.match_type").cast("string").as("match_type"),
-        opt(raw, "info.gender").cast("string").as("gender"),
-        coalesce(opt(raw, "info.teams").cast("array<string>"),
-          array().cast("array<string>")).as("teams"),
-        opt(raw, "info.venue").cast("string").as("venue"),
-        opt(raw, "info.city").cast("string").as("city"),
-        // officials pass through with their inferred shape (`etl:61` —
-        // `info.get("officials", {})`); null when the corpus lacks them
-        // (the typed-null analog of the reference's `{}` default).
-        opt(raw, "info.officials").as("officials")).as("info"),
+        col("info.team_type").as("team_type"),
+        col("info.match_type").as("match_type"),
+        col("info.gender").as("gender"),
+        coalesce(col("info.teams"), noStrings).as("teams"),
+        col("info.venue").as("venue"),
+        col("info.city").as("city"),
+        // officials pass through (`etl:61` — `info.get("officials", {})`);
+        // null when the file lacks them (the analog of the `{}` default)
+        col("info.officials").as("officials")).as("info"),
       struct(winner.as("winner"), result.as("result")).as("outcome"),
       // C3 tolerant ISO date parse (`etl:33-37`): null on garbage
-      try_to_timestamp(dateStr).as("date"),
-      opt(raw, "meta.data_version").cast("string").as("source_version"))
+      try_to_timestamp(element_at(dates, 1)).as("date"),
+      col("meta.data_version").as("source_version"))
   }
 
   // ---- delivery flattening (the iter_deliveries dataflow, §3.1) ------
 
   /** 3-level unnest + version-tolerant field selection + derived flags
     * (`iter_deliveries`, `etl_cricsheet_to_mongo.py:70-106`). One flat
-    * row per ball — the analytics fact table.
+    * row per ball — the analytics fact table. A match without innings,
+    * overs or deliveries yields no rows, as the reference's inner loops
+    * never execute (`etl:73-78`).
     */
-  /** fixed output schema — also what an all-empty corpus yields. */
-  private val deliverySchema: StructType = StructType.fromDDL(
-    "matchId STRING, innings INT, battingTeam STRING, over INT, " +
-      "ball INT, batter STRING, nonStriker STRING, bowler STRING, " +
-      "runs_batter BIGINT, runs_extras BIGINT, runs_total BIGINT, " +
-      "wickets ARRAY<STRUCT<kind: STRING, player_out: STRING>>, " +
-      "is_boundary INT, is_dot INT")
-
-  private def emptyDeliveries(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], deliverySchema)
-
-  /** the field iff it is an array of structs (explodable nesting). */
-  private def arrayStruct(st: StructType, name: String): Option[StructType] =
-    st.fields.find(_.name == name).map(_.dataType).collect {
-      case ArrayType(s: StructType, _) => s
-    }
-
   def deliveries(raw: DataFrame): DataFrame = {
-    // a corpus with no (or non-record) innings yields no deliveries —
-    // same as the reference's inner loops never executing (`etl:73-78`).
-    if (arrayStruct(raw.schema, "innings").isEmpty)
-      return emptyDeliveries(raw.sparkSession)
-    val s1 = raw.select(matchIdCol(raw).as("matchId"),
-      explode(col("innings")).as("inn"))
-    val innSt = structTypeOf(s1, "inn")
-    if (arrayStruct(innSt, "overs").isEmpty)
-      return emptyDeliveries(raw.sparkSession)
-    val s2 = s1.select(
-      col("matchId"),
-      // `innings | number` chain (`etl:74`); the reference's final
-      // `| team` string fallback is dropped (typed int column).
-      coalesce(optF(innSt, col("inn"), "innings").cast("int"),
-        optF(innSt, col("inn"), "number").cast("int")).as("innings"),
-      optF(innSt, col("inn"), "team").cast("string").as("battingTeam"),
-      explode(optF(innSt, col("inn"), "overs")).as("ov"))
-    val ovSt = structTypeOf(s2, "ov")
-    if (arrayStruct(ovSt, "deliveries").isEmpty)
-      return emptyDeliveries(raw.sparkSession)
-    val s3 = s2.select(
-      col("matchId"), col("innings"), col("battingTeam"),
-      optF(ovSt, col("ov"), "over").cast("int").as("over"),
-      explode(optF(ovSt, col("ov"), "deliveries")).as("d"))
-    val dSt = structTypeOf(s3, "d")
+    val d = raw
+      .select(matchIdCol.as("matchId"), explode(col("innings")).as("inn"))
+      .select(
+        col("matchId"),
+        // `innings | number` chain (`etl:74`); the reference's final
+        // `| team` string fallback is dropped (typed int column).
+        coalesce(col("inn.innings").cast("int"),
+          col("inn.number").cast("int")).as("innings"),
+        col("inn.team").as("battingTeam"),
+        explode(col("inn.overs")).as("ov"))
+      .select(
+        col("matchId"), col("innings"), col("battingTeam"),
+        col("ov.over").cast("int").as("over"),
+        explode(col("ov.deliveries")).as("d"))
 
-    // runs polymorphism (`etl:83-86`): dict in v1.1.0, scalar in v1.0.0.
-    // A mixed-version corpus makes Spark's JSON inference keep the raw
-    // JSON text (StringType) — handled via try_cast/get_json_object.
-    val runsType = dSt.fields.find(_.name == "runs").map(_.dataType)
-    val (batterRuns, extras, totalRuns) = runsType match {
-      case Some(s: StructType) =>
-        val b = coalesce(optF(s, col("d.runs"), "batter").cast("long"), lit(0L))
-        val e = coalesce(optF(s, col("d.runs"), "extras").cast("long"), lit(0L))
-        val t = coalesce(optF(s, col("d.runs"), "total").cast("long"), b + e)
-        (b, e, t)
-      case Some(_: StringType) =>
-        val b = coalesce(expr("try_cast(d.runs AS BIGINT)"),
-          get_json_object(col("d.runs"), "$.batter").cast("long"), lit(0L))
-        val e = coalesce(
-          get_json_object(col("d.runs"), "$.extras").cast("long"), lit(0L))
-        val t = coalesce(
-          get_json_object(col("d.runs"), "$.total").cast("long"), b + e)
-        (b, e, t)
-      case Some(_) =>
-        val b = coalesce(optF(dSt, col("d"), "runs").cast("long"), lit(0L))
-        (b, lit(0L), b + lit(0L))
-      case None => (lit(0L), lit(0L), lit(0L))
-    }
+    // runs polymorphism (`etl:83-86`): a number in v1.0.0, an object in
+    // v1.1.0; the raw JSON text is one or the other.
+    val runsObj = from_json(col("d.runs"),
+      StructType.fromDDL("batter BIGINT, extras BIGINT, total BIGINT"))
+    val batterRuns = coalesce(expr("try_cast(d.runs AS BIGINT)"),
+      runsObj("batter"), lit(0L))
+    val extras = coalesce(runsObj("extras"), lit(0L))
+    val totalRuns = coalesce(runsObj("total"), batterRuns + extras)
 
-    // wickets polymorphism (`etl:87-89`): array | single dict | absent;
-    // Python `or` treats an empty list as absent — hence when(size>0).
-    val wicketTargetType = "array<struct<kind:string,player_out:string>>"
-    def wicketArr(name: String): Option[Column] =
-      dSt.fields.find(_.name == name).flatMap { f =>
-        f.dataType match {
-          case ArrayType(s: StructType, _) =>
-            Some(transform(col(s"d.$name"), w => struct(
-              optF(s, w, "kind").cast("string").as("kind"),
-              optF(s, w, "player_out").cast("string").as("player_out"))))
-          case s: StructType =>
-            Some(when(col(s"d.$name").isNotNull, array(struct(
-              optF(s, col(s"d.$name"), "kind").cast("string").as("kind"),
-              optF(s, col(s"d.$name"), "player_out").cast("string")
-                .as("player_out")))))
-          case _: StringType =>
-            // mixed corpus: raw JSON text, array or single object
-            val asArr = from_json(col(s"d.$name"),
-              org.apache.spark.sql.types.DataType.fromDDL(wicketTargetType))
-            val asOne = from_json(col(s"d.$name"),
-              StructType.fromDDL("kind STRING, player_out STRING"))
-            Some(coalesce(asArr,
-              when(asOne.isNotNull, array(asOne.cast(
-                "struct<kind:string,player_out:string>")))))
-          case _ => None
-        }
-      }
-    val wicketCandidates =
-      (wicketArr("wickets").toSeq ++ wicketArr("wicket").toSeq)
-    val emptyW = array().cast("array<struct<kind:string,player_out:string>>")
-    val wickets = wicketCandidates
-      .foldRight(emptyW) { (cand, rest) =>
+    // wickets polymorphism (`etl:87-89`): array | single object | absent,
+    // under either field name. `from_json` reads a lone object as a
+    // one-element array; Python `or` treats an empty list as absent —
+    // hence when(size>0).
+    val wicketType = "array<struct<kind:string,player_out:string>>"
+    val wickets = Seq("wickets", "wicket")
+      .map(name => from_json(col(s"d.$name"), DataType.fromDDL(wicketType)))
+      .foldRight(array().cast(wicketType)) { (cand, rest) =>
         when(cand.isNotNull && size(cand) > 0, cand).otherwise(rest)
       }
 
-    s3.select(
+    d.select(
       col("matchId"), col("innings"), col("battingTeam"), col("over"),
-      optF(dSt, col("d"), "ball").cast("int").as("ball"),
+      col("d.ball").cast("int").as("ball"),
       // `batter | striker`, `non_striker | nonStriker` (`etl:80-81`)
-      coalesce(optF(dSt, col("d"), "batter").cast("string"),
-        optF(dSt, col("d"), "striker").cast("string")).as("batter"),
-      coalesce(optF(dSt, col("d"), "non_striker").cast("string"),
-        optF(dSt, col("d"), "nonStriker").cast("string")).as("nonStriker"),
-      optF(dSt, col("d"), "bowler").cast("string").as("bowler"),
+      coalesce(col("d.batter"), col("d.striker")).as("batter"),
+      coalesce(col("d.non_striker"), col("d.nonStriker")).as("nonStriker"),
+      col("d.bowler").as("bowler"),
       batterRuns.as("runs_batter"),
       extras.as("runs_extras"),
       totalRuns.as("runs_total"),
@@ -263,20 +180,26 @@ object CricketEtl {
       (totalRuns === 0L).cast("int").as("is_dot"))
   }
 
-  /** A2/A3 sinks: idempotent whole-dataset overwrite replaces the
-    * reference's per-key upsert + unordered bulk insert. Duplicate `_id`s
-    * resolve deterministically last-write-wins in sorted-filename order —
-    * the same row the reference's `replace_one` upsert over sorted files
-    * keeps (`etl:128-136`) — via an `input_file_name`-ordered window, not
-    * an arbitrary-row `dropDuplicates`. */
-  def writeTables(spark: SparkSession, srcDir: String, outDir: String): Unit = {
-    val raw = readMatches(spark, srcDir)
+  /** One row per `_id`: the one from the last file in sorted-path order,
+    * the row the reference's `replace_one` upsert over sorted files
+    * keeps (`etl:128-136`) — via an `input_file_name`-ordered window,
+    * not an arbitrary-row `dropDuplicates`. */
+  private def latestPerId(matches: DataFrame): DataFrame = {
     val w = Window.partitionBy("_id").orderBy(col("_src").desc)
-    normalizeMatches(raw)
+    matches
       .withColumn("_src", input_file_name())
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_src", "_rn")
+  }
+
+  /** A2/A3 sinks: idempotent whole-dataset overwrite replaces the
+    * reference's per-key upsert + unordered bulk insert. Duplicate `_id`s
+    * resolve deterministically last-write-wins in sorted-filename order
+    * (`latestPerId`). */
+  def writeTables(spark: SparkSession, srcDir: String, outDir: String): Unit = {
+    val raw = readMatches(spark, srcDir)
+    latestPerId(normalizeMatches(raw))
       .write.mode("overwrite").parquet(s"$outDir/matches")
     deliveries(raw)
       .write.mode("overwrite").parquet(s"$outDir/deliveries")
@@ -298,12 +221,7 @@ object CricketEtl {
     */
   def upsertMatchesByPartition(spark: SparkSession, srcDir: String,
       outDir: String): Unit = {
-    val w = Window.partitionBy("_id").orderBy(col("_src").desc)
-    val delta = normalizeMatches(readMatches(spark, srcDir))
-      .withColumn("_src", input_file_name())
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_src", "_rn")
+    val delta = latestPerId(normalizeMatches(readMatches(spark, srcDir)))
       .withColumn("p_type",
         coalesce(col("info.match_type"), lit("unknown")))
     // first load — a missing target, or one without data files — degrades

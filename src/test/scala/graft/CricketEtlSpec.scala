@@ -293,9 +293,9 @@ class CricketEtlSpec extends AnyFunSuite {
   test("mixed v1.0.0+v1.1.0 corpus: conflicting runs/wickets shapes " +
       "normalize through the raw-JSON string fallback (`etl:79-89`)") {
     // one directory holding scalar runs (v1.0.0), dict runs (v1.1.0),
-    // array wickets, AND single-dict wickets: Spark's JSON inference
-    // resolves the conflicts to StringType, forcing the
-    // try_cast/get_json_object/from_json paths.
+    // array wickets, AND single-dict wickets: the read schema declares
+    // these fields StringType (raw JSON text), forcing the
+    // try_cast/from_json paths.
     val dir = writeDir("a.json" -> v11Match, "b.json" -> v10Match,
       "c.json" -> mixedWicketsMatch)
     val raw = CricketEtl.readMatches(spark, dir)
@@ -401,6 +401,34 @@ class CricketEtlSpec extends AnyFunSuite {
       CricketEtl.upsertMatchesByPartition(spark, writeDir("a.json" -> delta), out)
     }
     assert(files() == before)
+  }
+
+  test("incremental upsert: a full load without officials and a delta " +
+      "with them (and the reverse) read back as one table") {
+    // every ingest reads the same declared schema, so partitions written
+    // by different ingests agree on `info.officials`
+    for ((full, delta) <- Seq(v10Match -> v11Match, v11Match -> v10Match)) {
+      val out = Files.createTempDirectory("cricket_drift").toString + "/m"
+      CricketEtl.upsertMatchesByPartition(spark, writeDir("a.json" -> full), out)
+      CricketEtl.upsertMatchesByPartition(spark, writeDir("b.json" -> delta), out)
+      val rows = spark.read.parquet(out).select("_id", "info").collect()
+      assert(rows.map(_.getString(0)).sorted.toSeq == Seq("m001", "m002"))
+      val info = rows.find(_.getString(0) == "m001").get.getStruct(1)
+      val officials = info.getStruct(info.fieldIndex("officials"))
+      assert(officials.getSeq[String](officials.fieldIndex("umpires")) ==
+        Seq("HDPK Dharmasena", "RK Illingworth"))
+    }
+  }
+
+  test("ingest job budget: readMatches resolves its schema without a job, " +
+      "writeTables runs at most 3") {
+    val src = writeDir("a.json" -> v11Match, "b.json" -> v10Match,
+      "c.json" -> mixedWicketsMatch)
+    val out = Files.createTempDirectory("cricket_jobs").toString
+    val schemaJobs = TestSpark.jobsOf(CricketEtl.readMatches(spark, src).schema)
+    val writeJobs = TestSpark.jobsOf(CricketEtl.writeTables(spark, src, out))
+    assert(schemaJobs == 0 && writeJobs <= 3, s"reading the schema ran " +
+      s"$schemaJobs jobs (budget 0), writeTables $writeJobs (budget 3)")
   }
 
   test("partnership proxy counts ordered co-facing pairs (Cypher c)") {

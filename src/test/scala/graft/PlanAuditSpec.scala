@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -240,37 +239,6 @@ class PlanAuditSpec extends AnyFunSuite {
       s"unexpected non-cluster window partitioning: $specs")
   }
 
-  /** Jobs started on this thread while `body` runs, seen by a listener.
-    * Listener events arrive in order, so once a marker job that runs
-    * after `body` has been seen, every job of `body` has been too. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"job-budget-${java.util.UUID.randomUUID}"
-    val marker = s"$group-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(marker, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime + 60000000000L
-      while (!seen.contains(marker) && System.nanoTime < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(marker), "listener never saw the marker job")
-      seen.toArray.count(_ == group)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("PageRank runs the whole power iteration in one job: the job " +
       "count is the same at 4 and 12 iterations and at most 6, float " +
       "and quantized") {
@@ -279,8 +247,8 @@ class PlanAuditSpec extends AnyFunSuite {
     for ((label, run) <- Seq[(String, Int => Unit)](
         "float" -> (i => GraphOps.pageRank(edges, iters = i).collect()),
         "quantized" -> (i => GraphOps.pageRankQuantized(edges, iters = i).collect()))) {
-      val at4 = jobsOf(run(4))
-      val at12 = jobsOf(run(12))
+      val at4 = TestSpark.jobsOf(run(4))
+      val at12 = TestSpark.jobsOf(run(12))
       assert(at4 == at12, s"$label: jobs grow with iterations: $at4 at 4, $at12 at 12")
       assert(at12 <= 6, s"$label: $at12 jobs exceed the budget of 6")
     }
