@@ -30,10 +30,10 @@ import org.apache.spark.sql.types._
   *    (`match_referees`, `reserve_umpires`, `tv_umpires`, `umpires`),
   *    and is null (not `{}`) when a file lacks the field.
   *  - the fields whose shape differs between versions (`runs`: number
-  *    or object; `wickets`: array or object; `wicket`) are read as raw
-  *    JSON text and decoded through the try_cast/from_json chains below,
-  *    so one directory may mix v1.0.0 and v1.1.0 files
-  *    (fixture-tested in `CricketEtlSpec`).
+  *    or object; `wickets`: array or object; `wicket`) are read as
+  *    VARIANT and decoded with `try_variant_get` fallbacks below, so one
+  *    directory may mix v1.0.0 and v1.1.0 files (fixture-tested in
+  *    `CricketEtlSpec`).
   *
   * Scale posture: ingestion of N match files is embarrassingly parallel
   * (one task per file split); normalization and explode are pure
@@ -43,9 +43,9 @@ import org.apache.spark.sql.types._
 object CricketEtl {
 
   /** The Cricsheet fields the ETL reads. Ids are strings, counters
-    * bigints; a STRING field holds the raw JSON text of whatever value
-    * the file has there, which is how the version-dependent shapes of
-    * `runs`, `wickets` and `wicket` arrive. */
+    * bigints; the version-dependent shapes of `runs`, `wickets` and
+    * `wicket` are VARIANT, parsed once by the scan (a STRING field is
+    * built by re-reading each value's raw text from the source file). */
   private val readSchema: StructType = StructType.fromDDL(
     """meta STRUCT<data_version: STRING>,
       |info STRUCT<
@@ -62,7 +62,7 @@ object CricketEtl {
       |  overs: ARRAY<STRUCT<over: BIGINT, deliveries: ARRAY<STRUCT<
       |    ball: BIGINT, batter: STRING, striker: STRING,
       |    non_striker: STRING, nonStriker: STRING, bowler: STRING,
-      |    runs: STRING, wickets: STRING, wicket: STRING>>>>>>""".stripMargin)
+      |    runs: VARIANT, wickets: VARIANT, wicket: VARIANT>>>>>>""".stripMargin)
 
   /** A1 directory JSON scan: one row per match file, read against
     * `readSchema`. Only `*.json` files are read
@@ -78,6 +78,8 @@ object CricketEtl {
   // ---- match normalization (B3/B5/C1-C8) -----------------------------
 
   private val noStrings = array().cast("array<string>")
+  private val wicketStruct = "struct<kind:string,player_out:string>"
+  private val wicketType = s"array<$wicketStruct>"
   private val dates = coalesce(col("info.dates"), noStrings)
 
   /** `_id` fallback chain (`etl_cricsheet_to_mongo.py:31,52`):
@@ -87,7 +89,7 @@ object CricketEtl {
     col("info.registry.match"),
     col("info.event.match_number"),
     concat(coalesce(col("info.city"), lit("")),
-      lit("-"), coalesce(element_at(dates, 1), lit(""))))
+      lit("-"), coalesce(try_element_at(dates, lit(1)), lit(""))))
 
   /** One row per match: fixed shape regardless of source version
     * (`normalize_match`, `etl_cricsheet_to_mongo.py:28-68`). */
@@ -116,7 +118,7 @@ object CricketEtl {
         col("info.officials").as("officials")).as("info"),
       struct(winner.as("winner"), result.as("result")).as("outcome"),
       // C3 tolerant ISO date parse (`etl:33-37`): null on garbage
-      try_to_timestamp(element_at(dates, 1)).as("date"),
+      try_to_timestamp(try_element_at(dates, lit(1))).as("date"),
       col("meta.data_version").as("source_version"))
   }
 
@@ -144,22 +146,23 @@ object CricketEtl {
         col("ov.over").cast("int").as("over"),
         explode(col("ov.deliveries")).as("d"))
 
-    // runs polymorphism (`etl:83-86`): a number in v1.0.0, an object in
-    // v1.1.0; the raw JSON text is one or the other.
-    val runsObj = from_json(col("d.runs"),
-      StructType.fromDDL("batter BIGINT, extras BIGINT, total BIGINT"))
-    val batterRuns = coalesce(expr("try_cast(d.runs AS BIGINT)"),
-      runsObj("batter"), lit(0L))
-    val extras = coalesce(runsObj("extras"), lit(0L))
-    val totalRuns = coalesce(runsObj("total"), batterRuns + extras)
+    // runs polymorphism (`etl:83-86`): a v1.0.0 number, a v1.1.0 object
+    def runs(path: String) = try_variant_get(col("d.runs"), path, "bigint")
+    val batterRuns = coalesce(runs("$"), runs("$.batter"), lit(0L))
+    val extras = coalesce(runs("$.extras"), lit(0L))
+    val totalRuns = coalesce(runs("$.total"), batterRuns + extras)
 
     // wickets polymorphism (`etl:87-89`): array | single object | absent,
-    // under either field name. `from_json` reads a lone object as a
-    // one-element array; Python `or` treats an empty list as absent —
-    // hence when(size>0).
-    val wicketType = "array<struct<kind:string,player_out:string>>"
+    // under either field name. A variant object does not cast to an
+    // array, so a lone object is read as the struct and wrapped; Python
+    // `or` treats an empty list as absent — hence when(size>0).
     val wickets = Seq("wickets", "wicket")
-      .map(name => from_json(col(s"d.$name"), DataType.fromDDL(wicketType)))
+      .map { name =>
+        val v = col(s"d.$name")
+        val one = try_variant_get(v, "$", wicketStruct)
+        coalesce(try_variant_get(v, "$", wicketType),
+          when(one.isNotNull, array(one)))
+      }
       .foldRight(array().cast(wicketType)) { (cand, rest) =>
         when(cand.isNotNull && size(cand) > 0, cand).otherwise(rest)
       }
@@ -274,6 +277,10 @@ object CricketEtl {
 
   // ---- graph builders (§2.G, `neo4j_loader.py`) ----------------------
 
+  /** 1 when the delivery took a wicket (a non-empty `wickets`), else 0. */
+  private val isOut: Column =
+    (size(coalesce(col("wickets"), array().cast(wicketType))) > 0).cast("int")
+
   /** B2 validation filter (`neo4j_loader.py:56-57,104-110`). */
   def validDeliveries(deliv: DataFrame): DataFrame =
     deliv.filter(col("batter").isNotNull && col("bowler").isNotNull &&
@@ -296,10 +303,7 @@ object CricketEtl {
   def facedEdges(deliv: DataFrame, ord: Column): DataFrame = {
     val keyed = validDeliveries(deliv)
       .withColumn("ball_k", coalesce(col("ball"), lit(-1)))
-      .withColumn("is_wicket",
-        (size(coalesce(col("wickets"),
-          array().cast("array<struct<kind:string,player_out:string>>"))) > 0)
-          .cast("int"))
+      .withColumn("is_wicket", isOut)
     val w = Window
       .partitionBy("matchId", "innings", "over", "ball_k", "batter", "bowler")
       .orderBy(ord.desc)
@@ -355,10 +359,7 @@ object CricketEtl {
     * pre-agg projection + E3 conditional sum + F1 topk. */
   def wicketsByBowler(deliv: DataFrame, limit: Int = 10): DataFrame =
     deliv
-      .select(col("bowler"),
-        (size(coalesce(col("wickets"),
-          array().cast("array<struct<kind:string,player_out:string>>"))) > 0)
-          .cast("int").as("wkts"))
+      .select(col("bowler"), isOut.as("wkts"))
       .groupBy(col("bowler"))
       .agg(sum(col("wkts")).as("wickets"))
       .orderBy(col("wickets").desc, col("bowler"))
@@ -371,9 +372,7 @@ object CricketEtl {
       .agg(
         count(lit(1)).as("balls"),
         sum(col("runs_total")).as("runs"),
-        sum((size(coalesce(col("wickets"),
-          array().cast("array<struct<kind:string,player_out:string>>"))) > 0)
-          .cast("int")).as("outs"))
+        sum(isOut).as("outs"))
 
   /** Cypher (b) toughest bowlers: one-sided expansion + HAVING +
     * mixed-direction topk (`cypher_queries.cypher:10-16`). */
@@ -384,9 +383,7 @@ object CricketEtl {
       .agg(
         count(lit(1)).as("balls"),
         sum(col("runs_total")).as("runs"),
-        sum((size(coalesce(col("wickets"),
-          array().cast("array<struct<kind:string,player_out:string>>"))) > 0)
-          .cast("int")).as("outs"))
+        sum(isOut).as("outs"))
       .filter(col("balls") >= minBalls)
       .withColumn("strikeRate",
         col("runs").cast("double") / col("balls") * 100)

@@ -294,8 +294,7 @@ class CricketEtlSpec extends AnyFunSuite {
       "normalize through the raw-JSON string fallback (`etl:79-89`)") {
     // one directory holding scalar runs (v1.0.0), dict runs (v1.1.0),
     // array wickets, AND single-dict wickets: the read schema declares
-    // these fields StringType (raw JSON text), forcing the
-    // try_cast/from_json paths.
+    // these fields VariantType, forcing the try_variant_get paths.
     val dir = writeDir("a.json" -> v11Match, "b.json" -> v10Match,
       "c.json" -> mixedWicketsMatch)
     val raw = CricketEtl.readMatches(spark, dir)
@@ -306,19 +305,19 @@ class CricketEtlSpec extends AnyFunSuite {
     val dSt = innSt("overs").dataType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType]("deliveries").dataType
       .asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-    assert(dSt("runs").dataType == StringType, "runs should infer as raw JSON")
-    assert(dSt("wickets").dataType == StringType, "wickets should infer as raw JSON")
+    assert(dSt("runs").dataType == VariantType, "runs should read as a variant")
+    assert(dSt("wickets").dataType == VariantType, "wickets should read as a variant")
 
     val d = CricketEtl.deliveries(raw).orderBy("matchId", "ball").collect()
     assert(d.length == 4)
     val byMatch = d.groupBy(_.getAs[String]("matchId"))
-    // v1.1.0 dict runs through get_json_object
+    // v1.1.0 dict runs through the object fields
     val m1 = byMatch("m001").sortBy(_.getAs[Int]("ball"))
     assert(m1(0).getAs[Long]("runs_batter") == 4 &&
       m1(0).getAs[Long]("runs_total") == 4)
     assert(m1(1).getAs[Long]("runs_total") == 1) // batter+extras default
     assert(m1(1).getSeq[Any](m1(1).fieldIndex("wickets")).length == 1)
-    // v1.0.0 scalar runs through try_cast
+    // v1.0.0 scalar runs read as a bigint
     val m2 = byMatch("m002").head
     assert(m2.getAs[Long]("runs_batter") == 6 &&
       m2.getAs[Long]("runs_extras") == 0 && m2.getAs[Long]("runs_total") == 6)
@@ -429,6 +428,84 @@ class CricketEtlSpec extends AnyFunSuite {
     val writeJobs = TestSpark.jobsOf(CricketEtl.writeTables(spark, src, out))
     assert(schemaJobs == 0 && writeJobs <= 3, s"reading the schema ran " +
       s"$schemaJobs jobs (budget 0), writeTables $writeJobs (budget 3)")
+  }
+
+  test("ingest scan budget: flattening deliveries reads each match file " +
+      "about once") {
+    // plus one long match: the fixtures alone are too short for per-value
+    // re-reads of the source file (up to 4 KB each) to show
+    val ball = """{"batter": "a", "non_striker": "b", "bowler": "c",
+      | "runs": {"batter": 1, "extras": 0, "total": 1},
+      | "wickets": [{"kind": "bowled", "player_out": "a"}]}""".stripMargin
+    val longMatch = s"""{"info": {"match_id": "m900"}, "innings": [{
+      |  "innings": 1, "overs": [{"over": 0, "deliveries": [
+      |  ${Seq.fill(300)(ball).mkString(",\n")}]}]}]}""".stripMargin
+    val files = Seq("a.json" -> v11Match, "b.json" -> v10Match,
+      "c.json" -> mixedWicketsMatch, "d.json" -> longMatch)
+    val src = writeDir(files: _*)
+    val onDisk = files.map { case (name, _) => Files.size(Path.of(src, name)) }.sum
+    val out = Files.createTempDirectory("cricket_scan").toString + "/d"
+    val read = TestSpark.statsOf(CricketEtl.deliveries(
+      CricketEtl.readMatches(spark, src)).write.parquet(out)).bytesRead
+    assert(read >= onDisk && read <= 2 * onDisk, s"writing the deliveries " +
+      s"of $onDisk bytes of JSON read $read bytes (budget ${2 * onDisk})")
+  }
+
+  test("a match without dates, or with an empty list, normalizes with a " +
+      "null date (`etl:33-37`)") {
+    val noDates = """{"info": {"match_id": "x1", "teams": ["A","B"], "city": "C"}, "innings": []}"""
+    val emptyDates = noDates.replace("\"city\"", "\"dates\": [], \"city\"")
+    for (file <- Seq(noDates, emptyDates)) {
+      val raw = CricketEtl.readMatches(spark, writeDir("a.json" -> file))
+      val m = CricketEtl.normalizeMatches(raw).collect().head
+      assert(m.getAs[String]("_id") == "x1")
+      assert(m.getAs[java.sql.Timestamp]("date") == null)
+      assert(CricketEtl.deliveries(raw).count() == 0)
+    }
+    // without an id the city-date fallback reads the missing date as ""
+    val delivery = """{"innings": 1, "team": "A", "overs": [{"over": 0,
+      |  "deliveries": [{"batter": "a", "non_striker": "b", "bowler": "c",
+      |  "runs": {"batter": 1, "extras": 0, "total": 1}}]}]}""".stripMargin
+    val noId = noDates.replace("\"match_id\": \"x1\", ", "")
+      .replace("\"innings\": []", s""""innings": [$delivery]""")
+    val raw = CricketEtl.readMatches(spark, writeDir("a.json" -> noId))
+    assert(CricketEtl.normalizeMatches(raw).collect().head
+      .getAs[String]("_id") == "C-")
+    assert(CricketEtl.deliveries(raw).select("matchId").as[String]
+      .collect().toSeq == Seq("C-"))
+  }
+
+  test("real Cricsheet delivery shapes: extra keys are ignored, a missing " +
+      "runs reads as 0 (`etl:83-89`)") {
+    val v11 = """{"meta": {"data_version": "1.1.0"},
+      |  "info": {"match_id": "r1", "dates": ["2023-05-01"]},
+      |  "innings": [{"team": "A", "overs": [{"over": 0, "deliveries": [
+      |    {"batter": "a", "non_striker": "b", "bowler": "c",
+      |     "runs": {"batter": 4, "extras": 0, "total": 4, "non_boundary": true}},
+      |    {"batter": "a", "non_striker": "b", "bowler": "c",
+      |     "runs": {"batter": 0, "extras": 2, "total": 2},
+      |     "wickets": [{"kind": "caught", "player_out": "a",
+      |                  "fielders": [{"name": "f"}]}]},
+      |    {"batter": "d", "non_striker": "b", "bowler": "c"}
+      |  ]}]}]}""".stripMargin
+    val v10 = """{"meta": {"data_version": "1.0.0"},
+      |  "info": {"match_id": "r2", "dates": ["2010-05-01"]},
+      |  "innings": [{"team": "B", "overs": [{"over": 0, "deliveries": [
+      |    {"striker": "e", "nonStriker": "g", "bowler": "h", "runs": 0,
+      |     "wicket": {"kind": "run out", "player_out": "g", "fielders": []}}
+      |  ]}]}]}""".stripMargin
+    val raw = CricketEtl.readMatches(spark, writeDir("a.json" -> v11, "b.json" -> v10))
+    val rows = CricketEtl.deliveries(raw)
+      .select(col("matchId"), col("batter"), col("runs_batter"),
+        col("runs_extras"), col("runs_total"), col("is_boundary"),
+        col("is_dot"), to_json(col("wickets")))
+      .as[(String, String, Long, Long, Long, Int, Int, String)]
+      .collect().sortBy(r => (r._1, r._5)).toSeq
+    assert(rows == Seq(
+      ("r1", "d", 0L, 0L, 0L, 0, 1, "[]"),
+      ("r1", "a", 0L, 2L, 2L, 0, 0, """[{"kind":"caught","player_out":"a"}]"""),
+      ("r1", "a", 4L, 0L, 4L, 1, 0, "[]"),
+      ("r2", "e", 0L, 0L, 0L, 0, 1, """[{"kind":"run out","player_out":"g"}]""")))
   }
 
   test("partnership proxy counts ordered co-facing pairs (Cypher c)") {
