@@ -35,7 +35,8 @@ private[graft] object SessionCache {
 
   /** Ensure the session has a checkpoint dir without clobbering one a
     * caller (or a cluster deployment) already configured. A dir WE
-    * create is a driver-local temp dir, removed by a JVM shutdown hook —
+    * create is a driver-local temp dir, removed by a best-effort JVM
+    * shutdown hook (a failed delete is dropped, never thrown at exit) —
     * repeated sessions must not accumulate checkpoint trees in /tmp. A
     * caller-configured dir is never touched (on a cluster it is shared
     * storage whose lifecycle the deployment owns). */
@@ -44,13 +45,9 @@ private[graft] object SessionCache {
     if (sc.getCheckpointDir.isEmpty) {
       val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
       sc.setCheckpointDir(dir.toString)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(del))
-          f.delete(): Unit
-        }
-        del(dir.toFile)
-      }))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        try Fs.rmTree(dir)
+        catch { case scala.util.control.NonFatal(_) => () }))
     }
   }
 

@@ -304,44 +304,24 @@ object ScaleOps {
       .orderBy(col("segment"), col("event_type"))
   }
 
-  /** Stage the Z-ordered lineitem layout once per (sf, source
-    * fingerprint) — the per-corpus-snapshot artifact pattern of the
-    * dedup index, applied to physical layout. The marker carries the
-    * source file's (size, mtime) AND the layout parameters (file
-    * count, clustering columns), so a driver-regenerated corpus OR a
-    * parameter change restages (the q88 staging lesson); the cache dir
-    * is keyed on a hash of the FULL dataset path, so two same-named
-    * dataset dirs can never alias one cache entry; and the data lands
-    * via write-to-temp + atomic rename, so a concurrent reader never
-    * sees a half-written layout. */
+  /** Stage the Z-ordered lineitem layout once per corpus snapshot
+    * ([[graft.Fs.staged]]) — the per-corpus-snapshot artifact pattern
+    * of the dedup index, applied to physical layout. The fingerprint
+    * carries the layout parameters (file count, clustering columns)
+    * beside the source file's, so a parameter change restages like a
+    * regenerated corpus does. */
   private[graft] def stageZorderedLineitem(
       s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(d, "lineitem.parquet")
     val nFiles = 64
     val clusterCols = Seq("l_partkey", "l_suppkey")
     val fp = s"z16|n=$nFiles|${clusterCols.mkString(",")}|" +
-      s"${Files.size(src)}|${Files.getLastModifiedTime(src).toMillis}"
-    val pathKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(Paths.get(d).toAbsolutePath.toString.getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), "graft_zorder", pathKey)
-    val marker = dir.resolve("_staged")
-    val data = dir.resolve("data")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == fp
-    if (!fresh) {
-      Files.createDirectories(dir)
-      val tmp = dir.resolve(s"data.tmp${System.nanoTime}")
+      graft.Fs.fingerprint(d, "lineitem.parquet")
+    graft.Fs.staged("graft_zorder", d, fp) { dir =>
       graft.sources.Layout.writeZOrdered(
         lineitem(s, d).select(col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_extendedprice")),
-        tmp.toString, n = nFiles, clusterCols.head, clusterCols(1))
-      graft.Fs.rmTree(data)
-      Files.move(tmp, data, StandardCopyOption.ATOMIC_MOVE)
-      Files.write(marker, fp.getBytes("UTF-8"))
-    }
-    data.toString
+        dir.toString, n = nFiles, clusterCols.head, clusterCols(1))
+    }.toString
   }
 
   /** Z-order-clustered scan — multi-dimensional data skipping as an
@@ -392,16 +372,10 @@ object ScaleOps {
 
   private def stageBucketedJoinTables(
       s: org.apache.spark.sql.SparkSession, d: String): (String, String) = {
-    // (size, mtime) fingerprint of both source files in BOTH the cache
-    // key and the table-name hash: a corpus regenerated in-place
-    // mid-session restages under fresh names instead of serving stale
-    // bucketed data (the same staleness guard stagedPairScan and
-    // stageZorderedLineitem carry)
-    val fp = Seq("lineitem.parquet", "orders.parquet").map { f =>
-      val p = java.nio.file.Paths.get(d, f)
-      s"${java.nio.file.Files.size(p)}|" +
-        s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-    }.mkString("|")
+    // the source fingerprint in BOTH the cache key and the table-name
+    // hash: a corpus regenerated in-place mid-session restages under
+    // fresh names instead of serving stale bucketed data
+    val fp = graft.Fs.fingerprint(d, "lineitem.parquet", "orders.parquet")
     val k = (s, d, fp)
     val existing = bucketStaged.get(k)
     if (existing != null) (existing._1, existing._2)
@@ -421,9 +395,8 @@ object ScaleOps {
           it.remove()
         }
       }
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest((java.nio.file.Paths.get(d).toAbsolutePath.toString + "|" + fp)
-          .getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
+      val h = graft.Fs.hashKey(
+        s"${java.nio.file.Paths.get(d).toAbsolutePath}|$fp")
       val base = java.nio.file.Files
         .createTempDirectory("graft_bucketed").toString
       val liT = s"graft_li_$h"

@@ -1055,9 +1055,7 @@ object SimilarityOps {
 
   private def collectCentroidArrays(s: SparkSession, d: String, tag: String)(
       plan: => DataFrame): (Array[Long], Array[Double], Array[Double]) = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(d, "embeddings.parquet")
-    val fp = s"${Files.size(src)}|${Files.getLastModifiedTime(src).toMillis}"
+    val fp = graft.Fs.fingerprint(d, "embeddings.parquet")
     // evict entries superseded by an in-place corpus regeneration: the
     // fingerprint keeps them from being SERVED stale, but without
     // removal each regeneration leaks a k×64 matrix and an entry
@@ -1953,42 +1951,18 @@ object SimilarityOps {
   }
 
   /** File-stream staging for [[q126StreamAnnIngest]]: the embeddings
-    * table written once per snapshot as 4 vec_id-ranged files, so the
-    * file source (`maxFilesPerTrigger=1`) replays the corpus as 4
-    * ordered micro-batches. (size, mtime)-fingerprinted against the
-    * source parquet — an in-place corpus regeneration re-stages and the
-    * superseded tree is removed first (the ScaleOps eviction rule). */
-  private def stageEmbeddingsStream(s: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(d, "embeddings.parquet")
-    val want =
-      s"${Files.size(src)}_${Files.getLastModifiedTime(src).toMillis}"
-    // keyed by MD5 of the ABSOLUTE path (the ScaleOps staging scheme) —
-    // basename-only keying collides two corpora named alike (.../a/sf1
-    // vs .../b/sf1): at best perpetual re-staging, at worst one JVM's
-    // rmTree deletes files another run's active file-stream is reading.
-    // The fingerprint stays a file check (not part of the key) so an
-    // in-place regeneration restages in the SAME dir instead of
-    // leaking the superseded tree
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(src.toAbsolutePath.toString.getBytes("UTF-8"))
-      .take(6).map(b => f"$b%02x").mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), "graft_emb_stream",
-      s"${Paths.get(d).getFileName.toString}_$h")
-    val fp = dir.resolve("_fingerprint")
-    val have =
-      if (Files.exists(fp)) new String(Files.readAllBytes(fp), "UTF-8")
-      else ""
-    if (have != want) {
-      graft.Fs.rmTree(dir)
-      Files.createDirectories(dir)
+    * table written once per corpus snapshot ([[graft.Fs.staged]]) as 4
+    * vec_id-ranged files, so the file source (`maxFilesPerTrigger=1`)
+    * replays the corpus as 4 ordered micro-batches. */
+  private def stageEmbeddingsStream(s: SparkSession, d: String): String =
+    graft.Fs.staged("graft_emb_stream", d, embFp(d)) { dir =>
       graft.sources.Tables.embeddings(s, d)
         .repartitionByRange(4, col("vec_id"))
-        .write.mode("overwrite").parquet(dir.resolve("data").toString)
-      Files.write(fp, want.getBytes("UTF-8"))
-    }
-    dir.resolve("data").toString
-  }
+        .write.mode("overwrite").parquet(dir.toString)
+    }.toString
+
+  private def embFp(d: String): String =
+    graft.Fs.fingerprint(d, "embeddings.parquet")
 
   /** The per-corpus STREAMED ASSIGNMENT ARTIFACT shared by q126 and
     * q129 — the round-14 promotion VERDICT r13 asked for: the ingest
@@ -1999,49 +1973,30 @@ object SimilarityOps {
     * the cells are the session-cached `ivfCentroids0_16` snapshot
     * artifact q44/q123/q126 already share, and q129's pair discovery
     * reads the artifact the stream wrote instead of re-assigning the
-    * corpus. Keyed like [[stageEmbeddingsStream]] (MD5 of the absolute
-    * source path; (size, mtime) fingerprint checked separately so an
-    * in-place corpus regeneration restages in the same dir). Returns
-    * (dir, fresh); when stale the superseded tree is already removed —
-    * the caller streams it and then calls [[markAsnStaged]]. */
-  private def asnStaging(d: String): (java.nio.file.Path, Boolean) = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(d, "embeddings.parquet")
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(src.toAbsolutePath.toString.getBytes("UTF-8"))
-      .take(6).map(b => f"$b%02x").mkString
-    val dir = Paths.get(sys.props("java.io.tmpdir"), "graft_emb_asn",
-      s"${Paths.get(d).getFileName.toString}_$h")
-    val fp = dir.resolve("_fingerprint")
-    val have =
-      if (Files.exists(fp)) new String(Files.readAllBytes(fp), "UTF-8")
-      else ""
-    val fresh = have == asnFingerprintOf(d)
+    * corpus.
+    *
+    * A [[graft.Fs]] stage written in place rather than through
+    * [[graft.Fs.staged]], because q126's drain is both the query and
+    * the artifact's writer. Returns (stage, data dir, fresh); when
+    * stale, the superseded `data` is already removed and recreated
+    * empty — the caller streams into it, then marks the stage with
+    * [[embFp]]. A writer rewriting the partitions of a FRESH artifact
+    * (q126's re-run path) unmarks the stage first: a crash between
+    * Spark's overwrite-delete and commit must leave the artifact STALE
+    * (forcing a re-drain) rather than marked over a truncated partition
+    * that q129 would silently read as complete. */
+  private def asnStaging(
+      d: String): (java.nio.file.Path, java.nio.file.Path, Boolean) = {
+    val stage = graft.Fs.stageDir("graft_emb_asn", d)
+    val data = stage.resolve("data")
+    val fresh = graft.Fs.isStaged(stage, embFp(d))
     if (!fresh) {
-      graft.Fs.rmTree(dir)
-      Files.createDirectories(dir)
+      graft.Fs.unmarkStaged(stage)
+      graft.Fs.rmTree(data)
+      java.nio.file.Files.createDirectories(data)
     }
-    (dir, fresh)
+    (stage, data, fresh)
   }
-
-  private def asnFingerprintOf(d: String): String = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(d, "embeddings.parquet")
-    s"${Files.size(src)}_${Files.getLastModifiedTime(src).toMillis}"
-  }
-
-  private def markAsnStaged(dir: java.nio.file.Path, d: String): Unit =
-    java.nio.file.Files.write(dir.resolve("_fingerprint"),
-      asnFingerprintOf(d).getBytes("UTF-8"))
-
-  /** Drop the artifact's `_fingerprint` BEFORE a writer rewrites batch
-    * partitions of an already-fresh artifact (q126's re-run path): a
-    * crash between Spark's overwrite-delete and commit must leave the
-    * artifact STALE (forcing a re-drain) rather than a valid
-    * fingerprint over a truncated partition that q129 would silently
-    * read as complete. */
-  private def invalidateAsn(dir: java.nio.file.Path): Unit =
-    java.nio.file.Files.deleteIfExists(dir.resolve("_fingerprint")): Unit
 
   /** Assign ONE streamed micro-batch into the existing learned cells
     * (map-side against the broadcast centroid table) and write it as
@@ -2068,7 +2023,7 @@ object SimilarityOps {
     * entry q129 uses when q126's ingest hasn't already staged it this
     * corpus snapshot. */
   private def streamedAssignment(s: SparkSession, d: String): DataFrame = {
-    val (dir, fresh) = asnStaging(d)
+    val (stage, dir, fresh) = asnStaging(d)
     if (!fresh) {
       val dataDir = stageEmbeddingsStream(s, d)
       val cents = learnedCentroids(s, d, 0, 16)
@@ -2085,7 +2040,7 @@ object SimilarityOps {
       finally q.stop()
       graft.streaming.StreamingOps.recordDrain("q129_stream_index_pairs",
         q.recentProgress.length, 0L, 0L)
-      markAsnStaged(dir, d)
+      graft.Fs.markStaged(stage, embFp(d))
     }
     s.read.parquet(dir.toString).drop("batch")
   }
@@ -2118,11 +2073,11 @@ object SimilarityOps {
     val cents = learnedCentroids(s, d, 0, 16)
     val logDir = java.nio.file.Files
       .createTempDirectory("graft_ann_ingest_log").toString
-    val (asnDir, asnFresh) = asnStaging(d)
+    val (asnStage, asnDir, asnFresh) = asnStaging(d)
     // About to rewrite the artifact's partitions in place — if it was
-    // already fingerprinted fresh, invalidate first so an interrupted
-    // re-run reads as stale instead of serving a truncated partition.
-    if (asnFresh) invalidateAsn(asnDir)
+    // already marked fresh, unmark first so an interrupted re-run reads
+    // as stale instead of serving a truncated partition.
+    if (asnFresh) graft.Fs.unmarkStaged(asnStage)
     val sch = s.read.parquet(dataDir).schema
     val stream = s.readStream.schema(sch)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
@@ -2158,7 +2113,7 @@ object SimilarityOps {
       .start()
     try q.processAllAvailable()
     finally q.stop()
-    markAsnStaged(asnDir, d)
+    graft.Fs.markStaged(asnStage, embFp(d))
     graft.streaming.StreamingOps.recordDrain("q126_stream_ann_ingest",
       q.recentProgress.length, 0L, 0L)
     s.read.parquet(logDir)

@@ -194,14 +194,12 @@ object TextOps {
   private val pairVolumeCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
   private[graft] def pairVolume(s: SparkSession, d: String): Long = {
-    // key carries the source file's (size, mtime) fingerprint — the
-    // stagedFresh convention — so a corpus regenerated in-place during
-    // one session cannot serve a stale statistic (and hence a wrong
-    // plan gate). Entries are a dozen bytes per (session, snapshot);
-    // superseded fingerprints linger harmlessly until session end.
-    val src = java.nio.file.Paths.get(d, "documents.parquet")
-    val fp = s"${java.nio.file.Files.size(src)}|" +
-      s"${java.nio.file.Files.getLastModifiedTime(src).toMillis}"
+    // key carries the source fingerprint, so a corpus regenerated
+    // in-place during one session cannot serve a stale statistic (and
+    // hence a wrong plan gate). Entries are a dozen bytes per (session,
+    // snapshot); superseded fingerprints linger harmlessly until
+    // session end.
+    val fp = graft.Fs.fingerprint(d, "documents.parquet")
     pairVolumeCache.computeIfAbsent(s"${s.hashCode}|$d|$fp", _ =>
       shingleIndex(s, d)
         .groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -395,11 +393,10 @@ object TextOps {
       .exists(t => Option(t.getMessage).exists(_.contains("No space left")))
 
   /** Run the wave partition of a pair scan as SEQUENTIAL jobs, appending
-    * each result to a staged parquet artifact (the Z-order/bucketed
-    * staging convention: (size, mtime, params) fingerprint marker,
-    * cache dir keyed on a hash of the full dataset path, write-to-temp
-    * + atomic rename). `wave(i, w)` must produce the rows whose token
-    * hash ≡ i (mod w); the initial split is `waves` from [[pairWaves]].
+    * each result to a [[graft.Fs.staged]] artifact (one family per
+    * `name`), rebuilt only when the corpus's `documents.parquet`
+    * changes. `wave(i, w)` must produce the rows whose token hash ≡ i
+    * (mod w); the initial split is `waves` from [[pairWaves]].
     *
     * Three scratch-bound mechanisms replace any per-family hand tuning:
     * (1) between waves a GC nudge retires the finished wave's shuffle
@@ -424,19 +421,6 @@ object TextOps {
     * planning constants stay auditable against live measurements.
     * `usableSpace` is injectable so a spec can fake a shrinking disk
     * and pin the preemptive revision without filling a real one. */
-  /** The ONE derivation of the staged-pair artifact's on-disk location
-    * for (dir, family): MD5(abs dir | family), first 8 hex bytes, under
-    * tmpdir/graft_pairscan. [[stagedPairScan]] creates and reuses it;
-    * anything that must force a cold restage (an A/B leg) deletes the
-    * same path, so a key-scheme change cannot leave a stale artifact
-    * that makes every later leg measure a warm restage. */
-  private[graft] def stagedArtifactDir(d: String, name: String): java.nio.file.Path = {
-    val pathKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${java.nio.file.Paths.get(d).toAbsolutePath}|$name".getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_pairscan", pathKey)
-  }
-
   private[graft] def stagedPairScan(s: SparkSession, d: String, name: String,
       waves: Int, pairRows: Long = 0L,
       bytesPerPair: Long = PairSpillBytesPerPair,
@@ -444,8 +428,7 @@ object TextOps {
         new java.io.File(sys.props("java.io.tmpdir")).getUsableSpace,
       spillFixedPrior: Long = PairSpillFixedBytes)(
       wave: (Int, Int) => DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(d, "documents.parquet")
+    import java.nio.file.Files
     // the wave count is NOT part of the fingerprint: the staged
     // relation is wave-partition-independent (spec-pinned equivalence),
     // and the count is re-derived from LIVE free disk on every call —
@@ -453,16 +436,8 @@ object TextOps {
     // moved (observed: the post-staging read-back re-derived one wave
     // more, because the artifact itself had shrunk free space, and
     // restaged 25 minutes of work it had just written)
-    val fp = s"$name|${Files.size(src)}|" +
-      s"${Files.getLastModifiedTime(src).toMillis}"
-    val dir = stagedArtifactDir(d, name)
-    val marker = dir.resolve("_staged")
-    val data = dir.resolve("data")
-    val fresh = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == fp
-    if (!fresh) {
-      Files.createDirectories(dir)
-      val tmp = dir.resolve(s"data.tmp${System.nanoTime}")
+    val data = graft.Fs.staged(s"graft_pairscan/$name", d,
+        graft.Fs.fingerprint(d, "documents.parquet")) { tmp =>
       var firstWrite = true
       // Wait for the finished wave's spill to actually LEAVE the disk
       // before the next wave floods it. System.gc() only ENQUEUES the
@@ -564,9 +539,6 @@ object TextOps {
         }
       }
       (0 until waves).foreach(i => runWave(i, waves, 0))
-      graft.Fs.rmTree(data)
-      Files.move(tmp, data, StandardCopyOption.ATOMIC_MOVE)
-      Files.write(marker, fp.getBytes("UTF-8"))
     }
     s.read.parquet(data.toString)
   }

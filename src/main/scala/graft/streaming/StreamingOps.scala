@@ -23,37 +23,23 @@ import graft.QueryDef
   */
 object StreamingOps {
 
-  /** The single part file of a one-partition parquet write. Closes the
-    * directory stream (`Files.list` holds an open fd until closed —
-    * staging calls would otherwise leak one descriptor each). */
-  private def singlePartFile(tmp: String): java.nio.file.Path = {
-    val stream = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
+  /** Write `df` as the ONE parquet file `target`: a one-partition
+    * write into a hidden sibling directory, its part file moved to
+    * `target`, the directory (`_SUCCESS`, `.crc` files) removed. The
+    * leading underscore keeps the sibling out of a file-source listing
+    * of `target`'s directory while it exists. */
+  private def writeSingleFile(df: DataFrame,
+      target: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val tmp = target.resolveSibling(s"_${target.getFileName}.tmp")
     try {
-      stream.toArray.map(_.toString).filter(_.endsWith(".parquet"))
-        .map(java.nio.file.Paths.get(_)).head
-    } finally stream.close()
-  }
-
-  /** (mtime, size) fingerprint of a staging SOURCE file — the `_staged`
-    * markers store it so a stage dir is reused only while its source is
-    * byte-identical-in-place. The driver regenerates `/root/testdata`
-    * between rounds without renaming, so a marker keyed on the sf dir
-    * basename alone would serve stale splits. */
-  private def srcFingerprint(src: java.nio.file.Path): String = {
-    val f = src.toFile
-    s"${f.lastModified}:${f.length}"
-  }
-
-  /** True when `done` exists and records `fp`. */
-  private def stagedFresh(done: java.nio.file.Path, fp: String): Boolean =
-    java.nio.file.Files.exists(done) &&
-      new String(java.nio.file.Files.readAllBytes(done),
-        java.nio.charset.StandardCharsets.UTF_8) == fp
-
-  private def writeMarker(done: java.nio.file.Path, fp: String): Unit = {
-    java.nio.file.Files.write(done,
-      fp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    (): Unit
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val parts = Files.list(tmp)
+      val part =
+        try parts.filter(_.toString.endsWith(".parquet")).findFirst.get
+        finally parts.close()
+      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    } finally graft.Fs.rmTree(tmp)
   }
 
   /** events schema as STAGED — every stream directory this module
@@ -372,51 +358,31 @@ object StreamingOps {
     spark.read.schema(df.schema).parquet(outDir)
   }
 
-  /** Write the sf events file into `target` in the CANONICAL staged
-    * encoding (µs TIMESTAMP_NTZ = [[rawSchema]]). Fast path: a source
-    * already canonical is hard-copied byte-for-byte; a legacy
-    * INT64-nanos source is rewritten once through [[normalizedEvents]].
-    */
-  private def stageCanonical(spark: SparkSession, d: String,
+  /** Write the sf events file to `target` in the CANONICAL staged
+    * encoding (µs TIMESTAMP_NTZ = [[rawSchema]]): a source already
+    * canonical is copied byte-for-byte; a legacy INT64-nanos source is
+    * rewritten through [[normalizedEvents]]. Runs inside the stagers'
+    * builds, so the footer probe's job is paid once per corpus
+    * snapshot. */
+  private def writeCanonicalEvents(spark: SparkSession, d: String,
       target: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(d, "events.parquet")
-    // (size, mtime)-fingerprint marker beside the target — the
-    // stageDeltaDocs / stageEventsOrdered convention, extended to the
-    // three stagers that lacked it (r18): without it every drain of
-    // every consumer re-probed the source footer and re-copied the
-    // byte-identical file (~0.2-0.4 s per measured run across ~10
-    // staging calls per sweep). An in-place testdata regeneration
-    // changes the fingerprint and restages. The leading underscore
-    // keeps the marker invisible to the file-source listing.
-    val done = target.resolveSibling(s"_staged_${target.getFileName}")
-    val fp = srcFingerprint(src)
-    if (stagedFresh(done, fp) && Files.exists(target)) return
+    val src = java.nio.file.Paths.get(d, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val srcIsLong = spark.read.parquet(src.toString)
       .schema("ts").dataType == org.apache.spark.sql.types.LongType
-    if (srcIsLong) {
-      val tmp = Files.createTempDirectory("graft_evcanon").toString
-      normalizedEvents(spark, d)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      Files.move(singlePartFile(tmp), target, StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      Files.copy(src, target, StandardCopyOption.REPLACE_EXISTING)
-    }
-    writeMarker(done, fp)
+    if (srcIsLong) writeSingleFile(normalizedEvents(spark, d), target)
+    else java.nio.file.Files.copy(src, target)
   }
 
-  /** File-stream sources list a DIRECTORY; stage the sf events file into
-    * a deterministic per-sf temp dir (idempotent copy). */
-  private def stageEvents(spark: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths}
-    val name = Paths.get(d).getFileName.toString
-    val dir = Paths.get(
-      sys.props("java.io.tmpdir"), "graft_events_stage_us", name)
-    Files.createDirectories(dir)
-    stageCanonical(spark, d, dir.resolve("events.parquet"))
-    dir.toString
-  }
+  private def eventsFp(d: String): String =
+    graft.Fs.fingerprint(d, "events.parquet")
+
+  /** File-stream sources list a DIRECTORY: the sf events file staged
+    * alone into one, once per corpus snapshot ([[graft.Fs.staged]]). */
+  private def stageEvents(spark: SparkSession, d: String): String =
+    graft.Fs.staged("graft_events_stage_us", d, eventsFp(d)) { dir =>
+      writeCanonicalEvents(spark, d, dir.resolve("events.parquet"))
+    }.toString
 
   /** Marker value for the watermark-flush sentinel events staged by
     * [[stageEventsWithSentinels]] — sinks filter on it. */
@@ -440,37 +406,25 @@ object StreamingOps {
     * unbounded pipeline; on a true unbounded feed no sentinel is needed
     * — the next hour's data advances the watermark the same way. */
   private[graft] def stageEventsWithSentinels(
-      spark: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths}
-    val name = Paths.get(d).getFileName.toString
-    val dir = Paths.get(
-      sys.props("java.io.tmpdir"), "graft_events_stage_wm_us", name)
-    Files.createDirectories(dir)
-    val data = dir.resolve("a_events.parquet")
-    stageCanonical(spark, d, data)
-    Seq(1, 2).foreach { i =>
-      val f = dir.resolve(s"b_sentinel$i.parquet")
-      if (!Files.exists(f)) {
+      spark: SparkSession, d: String): String =
+    graft.Fs.staged("graft_events_stage_wm_us", d, eventsFp(d)) { dir =>
+      val data = dir.resolve("a_events.parquet")
+      writeCanonicalEvents(spark, d, data)
+      data.toFile.setLastModified(1000000L)
+      Seq(1, 2).foreach { i =>
         val row = org.apache.spark.sql.Row(
           -i.toLong,
           java.time.LocalDateTime.ofEpochSecond(
             SentinelSec + i * 86400L, 0, java.time.ZoneOffset.UTC),
           -1L, SentinelType, 0.0, null)
-        val tmp = Files.createTempDirectory("graft_sentinel").toString
-        spark.createDataFrame(
-          java.util.Collections.singletonList(row), rawSchema)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        Files.move(singlePartFile(tmp), f,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        val f = dir.resolve(s"b_sentinel$i.parquet")
+        writeSingleFile(spark.createDataFrame(
+          java.util.Collections.singletonList(row), rawSchema), f)
+        // strictly increasing mod-times: the file source orders
+        // oldest-first on these, nothing else reads them
+        f.toFile.setLastModified(1000000L * (i + 1))
       }
-    }
-    // strictly increasing, re-run-stable mod-times: the file source
-    // orders oldest-first on these, nothing else reads them
-    data.toFile.setLastModified(1000000L)
-    dir.resolve("b_sentinel1.parquet").toFile.setLastModified(2000000L)
-    dir.resolve("b_sentinel2.parquet").toFile.setLastModified(3000000L)
-    dir.toString
-  }
+    }.toString
 
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger
 
@@ -562,18 +516,14 @@ object StreamingOps {
   }
 
   /** Stage the sf events file TWICE (two file names in one source
-    * directory) — a deliberately duplicated feed for the dedup query. */
-  private def stageEventsDup(spark: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths}
-    val name = Paths.get(d).getFileName.toString
-    val dir = Paths.get(
-      sys.props("java.io.tmpdir"), "graft_events_stage_dup_us", name)
-    Files.createDirectories(dir)
-    Seq("a.parquet", "b.parquet").foreach { f =>
-      stageCanonical(spark, d, dir.resolve(f))
-    }
-    dir.toString
-  }
+    * directory), once per corpus snapshot — a deliberately duplicated
+    * feed for the dedup query. */
+  private def stageEventsDup(spark: SparkSession, d: String): String =
+    graft.Fs.staged("graft_events_stage_dup_us", d, eventsFp(d)) { dir =>
+      writeCanonicalEvents(spark, d, dir.resolve("a.parquet"))
+      java.nio.file.Files.copy(dir.resolve("a.parquet"),
+        dir.resolve("b.parquet"))
+    }.toString
 
   /** Streaming exactly-once dedup, oracle-verified: the source feed
     * carries every event TWICE (two staged copies of the file — the
@@ -804,15 +754,9 @@ object StreamingOps {
     * them as three ordered micro-batches — "earlier in the delta"
     * coincides with "smaller doc_id", which is what lets the drained
     * admission set match the batch oracle exactly. */
-  private def stageDeltaDocs(spark: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths}
-    val name = Paths.get(d).getFileName.toString
-    val dir = Paths.get(
-      sys.props("java.io.tmpdir"), "graft_delta_stage", name)
-    val done = dir.resolve("_staged")
-    val fp = srcFingerprint(Paths.get(d, "documents.parquet"))
-    if (!stagedFresh(done, fp)) {
-      Files.createDirectories(dir)
+  private def stageDeltaDocs(spark: SparkSession, d: String): String =
+    graft.Fs.staged("graft_delta_stage", d,
+        graft.Fs.fingerprint(d, "documents.parquet")) { dir =>
       val delta = graft.sources.Tables.documents(spark, d)
         .filter(col("source") === "src0")
       // tercile cuts at O(1) driver cost (exact quantiles, relativeError
@@ -829,20 +773,11 @@ object StreamingOps {
         (Long.MinValue, cuts.head), (cuts.head + 1, cuts(1)),
         (cuts(1) + 1, Long.MaxValue))
       ranges.zipWithIndex.foreach { case ((lo, hi), i) =>
-        val tmp = Files.createTempDirectory("graft_delta_part").toString
-        delta.filter(col("doc_id").between(lo, hi))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        Files.move(singlePartFile(tmp), dir.resolve(s"delta_$i.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        val f = dir.resolve(s"delta_$i.parquet")
+        writeSingleFile(delta.filter(col("doc_id").between(lo, hi)), f)
+        f.toFile.setLastModified(1000000L * (i + 1))
       }
-      writeMarker(done, fp)
-    }
-    (0 to 2).foreach { i =>
-      dir.resolve(s"delta_$i.parquet").toFile
-        .setLastModified(1000000L * (i + 1)): Unit
-    }
-    dir.toString
-  }
+    }.toString
 
   /** STREAMING incremental delta-vs-corpus dedup — q76's ingest-time
     * twin, drained against the IDENTICAL batch oracle: the new source's
@@ -1066,15 +1001,8 @@ object StreamingOps {
     * state (the funnel automaton) carry across batch boundaries
     * without an event-time reorder buffer. */
   private[graft] def stageEventsOrdered(
-      spark: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val name = Paths.get(d).getFileName.toString
-    val dir = Paths.get(
-      sys.props("java.io.tmpdir"), "graft_events_stage_ord_us", name)
-    val done = dir.resolve("_staged")
-    val fp = srcFingerprint(Paths.get(d, "events.parquet"))
-    if (!stagedFresh(done, fp)) {
-      Files.createDirectories(dir)
+      spark: SparkSession, d: String): String =
+    graft.Fs.staged("graft_events_stage_ord_us", d, eventsFp(d)) { dir =>
       val raw = normalizedEvents(spark, d)
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       val mm = raw.agg(min(col("ts_us")), max(col("ts_us"))).head
@@ -1083,18 +1011,13 @@ object StreamingOps {
       (0 to 2).foreach { i =>
         val from = lo + i * step
         val until = if (i == 2) hi + 1 else lo + (i + 1) * step
-        val tmp = Files.createTempDirectory("graft_evord").toString
-        raw.filter(col("ts_us") >= from && col("ts_us") < until)
-          .drop("ts_us")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
         val f = dir.resolve(s"part$i.parquet")
-        Files.move(singlePartFile(tmp), f, StandardCopyOption.REPLACE_EXISTING)
+        writeSingleFile(
+          raw.filter(col("ts_us") >= from && col("ts_us") < until)
+            .drop("ts_us"), f)
         f.toFile.setLastModified(1000000L * (i + 1))
       }
-      writeMarker(done, fp)
-    }
-    dir.toString
-  }
+    }.toString
 
   /** The q86 funnel automaton as KEYED STREAMING STATE: 17 bytes per
     * user — (lastView, bestStart, done) — carried across micro-batches;
