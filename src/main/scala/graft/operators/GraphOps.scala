@@ -78,14 +78,12 @@ object GraphOps {
     * link lists, each iteration is one node-sized shuffle, and the whole
     * loop is a single job at the eager result pin.
     *
-    * Fault tolerance: `localCheckpoint` (default) truncates lineage but
-    * dies with an executor — fine on local mode; on a real cluster pass
-    * `checkpointDir=Some(hdfsPath)` to use reliable `checkpoint()`
-    * (identical results, pinned by `GraphOpsSpec`).
+    * Fault tolerance: the result pin is `localCheckpoint`, which
+    * truncates lineage but dies with an executor — fine on local mode.
     */
-  def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame =
-    powerIteration[Double](edges, iters, "rank", DoubleType, checkpointDir)(
+  def pageRank(edges: DataFrame, iters: Int = 10,
+      damping: Double = 0.85): DataFrame =
+    powerIteration[Double](edges, iters, "rank", DoubleType)(
       init = n => 1.0 / n,
       share = (r, outDeg) => r / outDeg,
       update = (n, msg) => (1 - damping) / n + damping * msg)
@@ -105,19 +103,12 @@ object GraphOps {
     * so every iteration runs in that one job; the only other job counts
     * the nodes. Nodes without out-links contribute nothing (dangling
     * mass decays).
-    *
-    * `setCheckpointDir` is session-global, so the caller's value is
-    * restored. (Restoration is by containment, not identity:
-    * setCheckpointDir nests a fresh UUID subdir per call, so the restored
-    * dir is a new leaf UNDER the caller's previous tree.) The pin is
-    * eager, so every file this run writes lands before the restore.
     */
   private def powerIteration[R: ClassTag](edges: DataFrame, iters: Int,
-      rankCol: String, rankType: DataType, checkpointDir: Option[String])(
+      rankCol: String, rankType: DataType)(
       init: Long => R, share: (R, Int) => R, update: (Long, R) => R)(
       implicit num: Numeric[R]): DataFrame = {
     val spark = edges.sparkSession
-    val sc = spark.sparkContext
     val part = new HashPartitioner(
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val links = edges.select("src", "dst").rdd
@@ -131,8 +122,6 @@ object GraphOps {
       .map(_ -> num.zero)
       .reduceByKey(part, (z, _) => z)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
     try {
       val n = zeros.count()
       val r0 = init(n)
@@ -152,11 +141,10 @@ object GraphOps {
         StructField(rankCol, rankType, nullable = false)))
       val out = spark.createDataFrame(
         ranks.map { case (node, r) => Row(node, r) }, schema)
-      if (checkpointDir.isDefined) out.checkpoint() else out.localCheckpoint()
+      out.localCheckpoint()
     } finally {
       links.unpersist(blocking = false)
       zeros.unpersist(blocking = false)
-      if (checkpointDir.isDefined) sc.setCheckpointDir(prevCheckpointDir.orNull)
     }
   }
 
@@ -263,7 +251,7 @@ object GraphOps {
     */
   private[graft] def pageRankQuantized(edges: DataFrame, iters: Int = 4,
       scale: Long = 1000000000000L): DataFrame =
-    powerIteration[Long](edges, iters, "rq", LongType, None)(
+    powerIteration[Long](edges, iters, "rq", LongType)(
       init = n => scale / n,
       share = (rq, outDeg) => rq / outDeg,
       update = (n, msg) => (scale - scale * 85L / 100L) / n + (85 * msg) / 100)

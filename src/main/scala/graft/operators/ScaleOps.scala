@@ -361,48 +361,20 @@ object ScaleOps {
 
   /** Once-per-(session, snapshot) staging of the bucketed join tables:
     * lineitem and orders both bucketed+sorted on the order key into
-    * matching bucket counts, registered as EXTERNAL tables at explicit
-    * tmp paths (no warehouse dir side effects). The guard is
-    * session-scoped because table registration is; the write itself is
-    * the one-time layout job a warehouse runs at ingest. */
-  private val bucketStaged =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, String),
-      (String, String, String)]
-
+    * matching bucket counts, registered as EXTERNAL tables under a
+    * session scratch dir (no warehouse dir side effects). A
+    * [[graft.SessionCache]] entry, because table registration is
+    * session-scoped; the write itself is the one-time layout job a
+    * warehouse runs at ingest. Each build's names derive from its own
+    * scratch dir, so a corpus regenerated in place restages under
+    * fresh names instead of serving stale bucketed data. */
   private def stageBucketedJoinTables(
-      s: org.apache.spark.sql.SparkSession, d: String): (String, String) = {
-    // the source fingerprint in BOTH the cache key and the table-name
-    // hash: a corpus regenerated in-place mid-session restages under
-    // fresh names instead of serving stale bucketed data
-    val fp = graft.Fs.fingerprint(d, "lineitem.parquet", "orders.parquet")
-    val k = (s, d, fp)
-    val existing = bucketStaged.get(k)
-    if (existing != null) (existing._1, existing._2)
-    else {
-      // a superseded fingerprint for the same (session, dir) means the
-      // corpus was regenerated in-place: drop the stale external tables
-      // and delete their staged directory — without this each
-      // regeneration leaks the previous bucketed copy on disk and an
-      // entry pinning the SparkSession
-      val it = bucketStaged.entrySet.iterator
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 == s && e.getKey._2 == d && e.getKey._3 != fp) {
-          s.sql(s"DROP TABLE IF EXISTS ${e.getValue._1}")
-          s.sql(s"DROP TABLE IF EXISTS ${e.getValue._2}")
-          graft.Fs.rmTree(java.nio.file.Paths.get(e.getValue._3))
-          it.remove()
-        }
-      }
-      val h = graft.Fs.hashKey(
-        s"${java.nio.file.Paths.get(d).toAbsolutePath}|$fp")
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_bucketed").toString
+      s: org.apache.spark.sql.SparkSession, d: String): (String, String) =
+    graft.SessionCache.memo("bucketedJoinTables", s, d) {
+      val base = graft.SessionCache.scratchDir("graft_bucketed")
+      val h = graft.Fs.hashKey(base.toString)
       val liT = s"graft_li_$h"
       val ordT = s"graft_ord_$h"
-      s.sql(s"DROP TABLE IF EXISTS $liT")
-      s.sql(s"DROP TABLE IF EXISTS $ordT")
       lineitem(s, d).select(col("l_orderkey"), col("l_extendedprice"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
@@ -411,12 +383,8 @@ object ScaleOps {
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .option("path", s"$base/$ordT").saveAsTable(ordT)
-      val names = (liT, ordT, base)
-      val prev = bucketStaged.putIfAbsent(k, names)
-      val v = if (prev != null) prev else names
-      (v._1, v._2)
+      (liT, ordT)
     }
-  }
 
   /** Co-located fact⋈fact join over BUCKETED layout (SURVEY §2.A A4 as
     * a registered query, not just a unit test): both sides are staged

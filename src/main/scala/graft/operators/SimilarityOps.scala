@@ -1042,27 +1042,16 @@ object SimilarityOps {
     * metadata (≈ 650 KB at k = 1273) — the same driver-sized class as
     * the broadcast array the column-form expression rode; the
     * hierarchical-assignment escape documented on the per-cell tier
-    * applies unchanged once k outgrows this. Keyed on the source file
-    * fingerprint so a regenerated corpus re-collects. */
-  private val centArrCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, String),
-    (Array[Long], Array[Double], Array[Double])]
-
+    * applies unchanged once k outgrows this. A [[graft.SessionCache]]
+    * entry, so a regenerated corpus re-collects. */
   private def centroidArrays(s: SparkSession, d: String, seedLo: Int,
       seedHi: Int): (Array[Long], Array[Double], Array[Double]) =
     collectCentroidArrays(s, d, s"range${seedLo}_$seedHi")(
       learnedCentroids(s, d, seedLo, seedHi))
 
   private def collectCentroidArrays(s: SparkSession, d: String, tag: String)(
-      plan: => DataFrame): (Array[Long], Array[Double], Array[Double]) = {
-    val fp = graft.Fs.fingerprint(d, "embeddings.parquet")
-    // evict entries superseded by an in-place corpus regeneration: the
-    // fingerprint keeps them from being SERVED stale, but without
-    // removal each regeneration leaks a k×64 matrix and an entry
-    // pinning the SparkSession for the process lifetime
-    centArrCache.keySet.removeIf(k =>
-      k._1 == s && k._2 == d && k._3 == tag && k._4 != fp)
-    centArrCache.computeIfAbsent((s, d, tag, fp), _ => {
+      plan: => DataFrame): (Array[Long], Array[Double], Array[Double]) =
+    graft.SessionCache.memo(s"centroidArrays_$tag", s, d) {
       val rows = plan
         .orderBy(col("c_id")).collect()
       val k = rows.length
@@ -1082,8 +1071,7 @@ object SimilarityOps {
         i += 1
       }
       (ids, flat, nrs)
-    })
-  }
+    }
 
   /** IVF ANN with LEARNED centroids: seed with the vectors vec_id 0..15,
     * run one Lloyd iteration (assign every vector to its nearest seed,
@@ -2071,8 +2059,7 @@ object SimilarityOps {
     "q126_stream_ann_ingest", indexAuditOracle) { (s, d) =>
     val dataDir = stageEmbeddingsStream(s, d)
     val cents = learnedCentroids(s, d, 0, 16)
-    val logDir = java.nio.file.Files
-      .createTempDirectory("graft_ann_ingest_log").toString
+    val logDir = graft.SessionCache.scratchDir("graft_ann_ingest_log").toString
     val (asnStage, asnDir, asnFresh) = asnStaging(d)
     // About to rewrite the artifact's partitions in place — if it was
     // already marked fresh, unmark first so an interrupted re-run reads

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.QueryDef
+import graft.{QueryDef, SessionCache}
 import graft.QueryDef.sql
 import graft.sources.Tables._
 
@@ -111,31 +111,10 @@ object TextOps {
     raw.join(broadcast(hot), Seq("tok"), "left_anti")
   }
 
-  /** The shared capped inverted index, MATERIALIZED once per
-    * (session, sfDir) (`localCheckpoint`, doc_id partitioning preserved
-    * through the checkpoint): every consumer query reads it 3-6 times
-    * (signatures, sizes, both join sides, probes), and exchange reuse
-    * alone cannot carry it — AQE's empty-relation rewrite of the
-    * (locally inactive) cap anti-join re-canonicalizes the consumers
-    * differently, and the generator + dedup were observed running once
-    * PER consumer. The checkpoint is CACHED per (session, sfDir) rather
-    * than rebuilt per query: local checkpoints cannot be released
-    * individually, so a 59-query × 2-pass bench session would otherwise
-    * accumulate ~10 copies of the index in executor storage — the cache
-    * bounds that to one per scale factor for the session's lifetime,
-    * and the five dedup-family queries (q26/q27/q49/q54/q55) share it.
-    * Materializing the index is also the posture a real pipeline takes
-    * at scale: it is the single shared artifact of the whole dedup
-    * family (at 100 TB it would persist to storage rather than executor
-    * memory — same shape, durable medium, cached per corpus snapshot
-    * exactly like this). */
-  /** Session-scoped checkpoint cache — see [[graft.SessionCache]]. */
-  private def cachedCheckpoint(key: String, s: SparkSession, d: String)(
-      plan: => DataFrame): DataFrame =
-    graft.SessionCache.checkpoint(key, s, d)(plan)
-
+  /** The shared capped inverted index, one session artifact per corpus
+    * snapshot (see [[graft.SessionCache]] for why it is materialized). */
   private def shingleIndex(s: SparkSession, d: String): DataFrame =
-    cachedCheckpoint("shingleIndex", s, d)(shingleIndexPlan(s, d))
+    SessionCache.checkpoint("shingleIndex", s, d)(shingleIndexPlan(s, d))
 
   /** The tokenized corpus (doc_id, w: array<string>) as a per-(session,
     * snapshot) DISK artifact — the token-array sibling of [[tfPostings]]
@@ -148,7 +127,7 @@ object TextOps {
     * materialized tokenization every production pipeline keeps beside
     * the raw text — same artifact, durable medium. */
   private def tokArrays(s: SparkSession, d: String): DataFrame =
-    cachedCheckpoint("tokArrays", s, d)(
+    SessionCache.checkpoint("tokArrays", s, d)(
       documents(s, d)
         .select(col("doc_id"), toks(col("text")).as("w"))
         .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
@@ -184,28 +163,18 @@ object TextOps {
   }
 
   private def rankedIndex(s: SparkSession, d: String): DataFrame =
-    cachedCheckpoint("rankedIndex", s, d)(rankedIndexPlan(s, d))
+    SessionCache.checkpoint("rankedIndex", s, d)(rankedIndexPlan(s, d))
 
   /** Σ df·(df−1)/2 over the capped index — EXACTLY the pair-row volume
     * the inverted-index count-shuffle formulation generates, computed
-    * from one pass over the session-cached index and memoized per
-    * (session, sf). This is the cost statistic the q27/q55 path gate
-    * reads. */
-  private val pairVolumeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-  private[graft] def pairVolume(s: SparkSession, d: String): Long = {
-    // key carries the source fingerprint, so a corpus regenerated
-    // in-place during one session cannot serve a stale statistic (and
-    // hence a wrong plan gate). Entries are a dozen bytes per (session,
-    // snapshot); superseded fingerprints linger harmlessly until
-    // session end.
-    val fp = graft.Fs.fingerprint(d, "documents.parquet")
-    pairVolumeCache.computeIfAbsent(s"${s.hashCode}|$d|$fp", _ =>
+    * from one pass over the session-cached index and memoized beside
+    * it. This is the cost statistic the q27/q55 path gate reads. */
+  private[graft] def pairVolume(s: SparkSession, d: String): Long =
+    SessionCache.memo[java.lang.Long]("pairVolume", s, d)(Long.box(
       shingleIndex(s, d)
         .groupBy(col("tok")).agg(count(lit(1)).as("df"))
         .agg(sum(expr("df * (df - 1) div 2")).cast("long"))
-        .head().getLong(0))
-  }
+        .head().getLong(0)))
 
   /** Path gate for the exact pair generators (the q34 cost-gated-index
     * pattern applied to the dedup flagship): BELOW this pair-row volume
@@ -559,7 +528,7 @@ object TextOps {
         count(lit(1)).as("n"))
 
   private def docHashArrays(s: SparkSession, d: String): DataFrame =
-    cachedCheckpoint("docHashArrays", s, d)(docHashArraysPlan(s, d))
+    SessionCache.checkpoint("docHashArrays", s, d)(docHashArraysPlan(s, d))
 
   /** Above this many documents the per-doc hash-array table stops being
     * broadcast and the candidate verification joins shuffle on the pair
@@ -602,7 +571,7 @@ object TextOps {
     * materialized once per (session, sfDir); shared by the vocabulary
     * audit (q59) and the unigram LM scorer (q64). */
   private def vocabCounts(s: SparkSession, d: String): DataFrame =
-    cachedCheckpoint("vocabCounts", s, d) {
+    SessionCache.checkpoint("vocabCounts", s, d) {
       documents(s, d)
         .select(explode(toks(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
@@ -709,7 +678,7 @@ object TextOps {
     * signature table IS the dedup index a 100 TB ingest keeps per
     * corpus snapshot). */
   private[graft] def bandSignatures(s: SparkSession, d: String): DataFrame =
-    cachedCheckpoint("bandSignatures", s, d)(bandSignaturesPlan(s, d))
+    SessionCache.checkpoint("bandSignatures", s, d)(bandSignaturesPlan(s, d))
 
   private def bandSignaturesPlan(s: SparkSession, d: String): DataFrame = {
     val idx = shingleIndex(s, d)
@@ -1312,14 +1281,14 @@ object TextOps {
     * and the pair-graph analytics (q89) reference it 3× — lazy lineage
     * would re-run the whole LSH pipeline each time. */
   private[graft] def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    cachedCheckpoint("minhashPairs", s, d)(
+    SessionCache.checkpoint("minhashPairs", s, d)(
       minHashPairs(s, d).select(col("d1"), col("d2")))
 
   private[graft] def dedupLabels(s: SparkSession, d: String): DataFrame = {
     // (SessionCache lookups are reentrant, so the chained
     // index→pairs→labels entries are safe to nest.)
     val pairs = verifiedPairs(s, d)
-    cachedCheckpoint("dedupLabels", s, d) {
+    SessionCache.checkpoint("dedupLabels", s, d) {
       val e = pairs.select(col("d1").as("a"), col("d2").as("b"))
         .union(pairs.select(col("d2").as("a"), col("d1").as("b")))
       val nodes = pairs.select(col("d1").as("doc_id"))
@@ -1434,7 +1403,7 @@ object TextOps {
       .union(bp.select(col("d2").as("a"), col("d1").as("b")))
     // the persisted per-snapshot label artifact: components of the
     // base-only edge set, the state an incremental pipeline carries
-    val baseLbl = cachedCheckpoint("baseDedupLabels", s, d) {
+    val baseLbl = SessionCache.checkpoint("baseDedupLabels", s, d) {
       var l = bpe.select(col("a").as("doc_id")).distinct()
         .select(col("doc_id"), col("doc_id").as("lbl"))
       for (_ <- 1 to 3) l = lblRound(l, bpe)
@@ -2841,9 +2810,9 @@ object TextOps {
     val cutoff =
       docsAll.agg(max(col("doc_id")).cast("long")).first().getLong(0) * 9L / 10L
     // per-snapshot cached artifacts (q127/q134 convention)
-    val baseBins = cachedCheckpoint("incrShardBaseBins", s, d)(
+    val baseBins = SessionCache.checkpoint("incrShardBaseBins", s, d)(
       binsOf(packOffsetsFrom(docsAll.filter(col("doc_id") <= cutoff), blockDocs)))
-    val baseMan = cachedCheckpoint("incrShardBaseMan", s, d)(
+    val baseMan = SessionCache.checkpoint("incrShardBaseMan", s, d)(
       shardRowsOf(baseBins, blockDocs))
     // |sources|-row boundary state off the cached bins: base token total
     // T, the boundary bin B0 = ⌊T/256⌋, its base token mass (0 when no
@@ -4127,7 +4096,7 @@ object TextOps {
     * snapshot persisted to shared storage, amortized over every
     * retrieve/fuse/rerank query against that snapshot. */
   private[graft] def tfPostings(s: SparkSession, d: String): DataFrame =
-    cachedCheckpoint("tfPostings", s, d)(
+    SessionCache.checkpoint("tfPostings", s, d)(
       documents(s, d)
         .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
         .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))

@@ -332,14 +332,14 @@ object StreamingOps {
     * micro-batch's finalized rows write DISTRIBUTED into the directory
     * (the q78 admissions-log pattern) and the result is a lazy scan of
     * it — the 100 TB posture, where a streaming job's output lands in
-    * object storage, not driver memory. The directory is a session-
-    * lifetime artifact under the JVM tmpdir (one per drain run, MBs at
-    * bench scale). */
+    * object storage, not driver memory. The directory is a
+    * [[graft.SessionCache.scratchDir]] (one per drain run, MBs at bench
+    * scale): the result scans it lazily, so it lives until the session
+    * root is deleted at JVM exit. */
   def runToParquet(df: DataFrame, name: String,
       statePartitions: Int = StreamStatePartitions): DataFrame = {
     val spark = df.sparkSession
-    val outDir = java.nio.file.Files
-      .createTempDirectory(s"graft_drain_$name").toString
+    val outDir = graft.SessionCache.scratchDir(s"graft_drain_$name").toString
     val q = withDrainConfs(spark, statePartitions) {
       df.writeStream.outputMode(OutputMode.Append)
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -807,8 +807,7 @@ object StreamingOps {
     "q78_stream_incr_dedup",
     graft.operators.TextOps.incrementalDedupOracle) { (s, d) =>
     import graft.operators.TextOps
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_admissions").toString
+    val outDir = graft.SessionCache.scratchDir("graft_admissions")
     val sig = TextOps.bandSignatures(s, d)
     val deltaIds = graft.sources.Tables.documents(s, d)
       .filter(col("source") === "src0").select(col("doc_id"))
@@ -848,7 +847,7 @@ object StreamingOps {
           .withColumn("dropped", lit(1))
         batch.select(col("doc_id"), col("source"))
           .join(broadcast(drops), Seq("doc_id"), "left")
-          .write.mode("append").parquet(outDir)
+          .write.mode("append").parquet(outDir.toString)
         // the batch's (already checkpointed) signatures join the probe
         // side for later batches — no re-copy of the prior pieces
         seenParts = sigB :: seenParts
@@ -856,7 +855,7 @@ object StreamingOps {
       .start()
     try q.processAllAvailable()
     finally q.stop()
-    val res = s.read.parquet(outDir)
+    val res = s.read.parquet(outDir.toString)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_new"),
         sum(when(col("dropped").isNotNull, 1).otherwise(0))
@@ -865,14 +864,11 @@ object StreamingOps {
           .cast("long").as("n_ingested"))
       .orderBy(col("source"))
     // snapshot the (source-count-sized) summary and remove the per-run
-    // staging dir — nothing lazy may point at /tmp after the drain
+    // staging dir — nothing lazy may point at it after the drain
     val snap = s.createDataFrame(
       new java.util.ArrayList(java.util.Arrays.asList(res.collect(): _*)),
       res.schema)
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-    }
-    del(new java.io.File(outDir))
+    graft.Fs.rmTree(outDir)
     snap
   }
 

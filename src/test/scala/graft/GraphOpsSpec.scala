@@ -138,43 +138,6 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(ranks.sum <= 1.0 + 1e-9)
   }
 
-  test("reliable checkpointing produces identical ranks to localCheckpoint") {
-    val edges = Seq(
-      ("a", "b"), ("b", "c"), ("c", "a"), ("d", "c"), ("a", "c"))
-      .toDF("src", "dst")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ckpt").toString
-    try {
-      val local = GraphOps.pageRank(edges, iters = 7)
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val checkpointDirBefore = spark.sparkContext.getCheckpointDir
-      val reliable = GraphOps.pageRank(edges, iters = 7,
-          checkpointDir = Some(dir))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      // setCheckpointDir is session-global: the call must point the
-      // session back at the caller's checkpoint tree rather than leak
-      // its own temp dir. Exact equality is unattainable — every
-      // setCheckpointDir call nests a fresh UUID subdir — so the
-      // invariant is containment: later checkpoints stay UNDER the
-      // caller's configured location (or stay unset if none was).
-      (checkpointDirBefore, spark.sparkContext.getCheckpointDir) match {
-        case (None, after) => assert(after.isEmpty, s"leaked dir: $after")
-        case (Some(b), Some(a)) =>
-          assert(a.startsWith(b), s"restored $a escapes caller tree $b")
-        case (Some(b), None) => fail(s"checkpoint dir $b was cleared")
-      }
-      assert(local.keySet == reliable.keySet)
-      local.foreach { case (n, v) =>
-        assert(java.lang.Double.doubleToLongBits(reliable(n)) ==
-          java.lang.Double.doubleToLongBits(v), s"node $n differs")
-      }
-    } finally {
-      org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(dir))
-      ()
-    }
-  }
-
   test("nodes builder dedups endpoints") {
     val edges = Seq(("a", "b"), ("a", "b"), ("b", "c")).toDF("src", "dst")
     val ns = GraphOps.nodes(edges).collect().map(_.getString(0)).sorted
