@@ -147,7 +147,8 @@ object CricketDemo {
     * Spark queries and the DuckDB oracles read. */
   def deliveries(spark: SparkSession): DataFrame = {
     ensure(spark)
-    spark.read.parquet(s"$warehouseDir/deliveries")
+    graft.sources.Tables.parquet(
+      spark, warehouseDir, "deliveries", s"$warehouseDir/deliveries")
   }
 
   // ---- registered queries ------------------------------------------

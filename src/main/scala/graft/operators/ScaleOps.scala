@@ -349,7 +349,7 @@ object ScaleOps {
       |FROM lineitem
       |WHERE l_partkey BETWEEN 100 AND 300 AND l_suppkey BETWEEN 10 AND 40""") {
     (s, d) =>
-      val z = s.read.parquet(stageZorderedLineitem(s, d))
+      val z = parquet(s, d, "graft_zorder", stageZorderedLineitem(s, d))
         .filter(col("l_partkey").between(100, 300) &&
           col("l_suppkey").between(10, 40))
       z.agg(count(lit(1)).as("n"),

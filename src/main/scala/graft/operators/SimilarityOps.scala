@@ -2015,8 +2015,8 @@ object SimilarityOps {
     if (!fresh) {
       val dataDir = stageEmbeddingsStream(s, d)
       val cents = learnedCentroids(s, d, 0, 16)
-      val sch = s.read.parquet(dataDir).schema
-      val q = s.readStream.schema(sch)
+      val q = s.readStream
+        .schema(parquet(s, d, "graft_emb_stream", dataDir).schema)
         .option("maxFilesPerTrigger", "1").parquet(dataDir)
         .writeStream
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
@@ -2026,8 +2026,7 @@ object SimilarityOps {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      graft.streaming.StreamingOps.recordDrain("q129_stream_index_pairs",
-        q.recentProgress.length, 0L, 0L)
+      graft.streaming.StreamingOps.recordDrain("q129_stream_index_pairs", q)
       graft.Fs.markStaged(stage, embFp(d))
     }
     s.read.parquet(dir.toString).drop("batch")
@@ -2065,8 +2064,8 @@ object SimilarityOps {
     // already marked fresh, unmark first so an interrupted re-run reads
     // as stale instead of serving a truncated partition.
     if (asnFresh) graft.Fs.unmarkStaged(asnStage)
-    val sch = s.read.parquet(dataDir).schema
-    val stream = s.readStream.schema(sch)
+    val stream = s.readStream
+      .schema(parquet(s, d, "graft_emb_stream", dataDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
     val q = stream.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
@@ -2101,8 +2100,7 @@ object SimilarityOps {
     try q.processAllAvailable()
     finally q.stop()
     graft.Fs.markStaged(asnStage, embFp(d))
-    graft.streaming.StreamingOps.recordDrain("q126_stream_ann_ingest",
-      q.recentProgress.length, 0L, 0L)
+    graft.streaming.StreamingOps.recordDrain("q126_stream_ann_ingest", q)
     s.read.parquet(logDir)
       .groupBy(col("c_id"))
       .agg(sum(col("n_base")).as("n_base"), sum(col("n_delta")).as("n_delta"),

@@ -2,10 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 import graft.QueryDef
+import graft.sources.Tables
 
 /** Structured-Streaming surface — SURVEY.md §2.H.
   *
@@ -44,29 +46,11 @@ object StreamingOps {
 
   /** events schema as STAGED — every stream directory this module
     * writes holds the canonical µs TIMESTAMP_NTZ encoding (see
-    * [[normalizedEvents]]), so file-source readers never branch on the
-    * source's physical encoding. */
+    * [[graft.sources.Tables.events]]), so file-source readers never
+    * branch on the source's physical encoding. */
   val rawSchema: StructType = StructType.fromDDL(
     "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
       "event_type STRING, value DOUBLE, props STRING")
-
-  /** Batch read of the sf events file normalized to the canonical
-    * schema. The driver's `events.parquet` has carried two physical
-    * encodings across testdata generations (INT64 nanosecond epochs;
-    * native µs TIMESTAMP) — probe the footer and normalize, exactly as
-    * `sources.Tables.events` does (session tz pinned UTC keeps the
-    * LTZ↔NTZ hop µs-exact). */
-  private[graft] def normalizedEvents(
-      spark: SparkSession, d: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read
-      .parquet(java.nio.file.Paths.get(d, "events.parquet").toString)
-    val ts =
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz")
-      else col("ts").cast("timestamp_ntz")
-    raw.withColumn("ts", ts)
-  }
 
   /** Unbounded scan of an events directory (parquet file source).
     * `maxFilesPerTrigger=1` (when `oneFilePerBatch`) pins the
@@ -214,19 +198,19 @@ object StreamingOps {
   private val drainLog =
     new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long, Long)]
 
-  /** For streaming drains driven outside this module (q126's ANN-ingest
-    * loop in SimilarityOps): surface their batch/state telemetry through
-    * the same per-query diag channel. */
-  private[graft] def recordDrain(name: String, batches: Int,
-      maxState: Long, finalState: Long): Unit =
-    drainLog.add((name, batches, maxState, finalState))
-
-  def pollDrainStats(): Seq[(String, Int, Long, Long)] = {
-    val out = Seq.newBuilder[(String, Int, Long, Long)]
-    var e = drainLog.poll()
-    while (e != null) { out += e; e = drainLog.poll() }
-    out.result()
+  /** Journal the stopped drain `q` as `name` (also for the drains
+    * SimilarityOps runs); returns its max and final state rows. */
+  private[graft] def recordDrain(name: String,
+      q: StreamingQuery): (Long, Long) = {
+    val rows = q.recentProgress.toSeq.map(p =>
+      Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L))
+    val state = (rows.maxOption.getOrElse(0L), rows.lastOption.getOrElse(0L))
+    drainLog.add((name, q.recentProgress.length, state._1, state._2))
+    state
   }
+
+  def pollDrainStats(): Seq[(String, Int, Long, Long)] =
+    Iterator.continually(drainLog.poll()).takeWhile(_ != null).toList
 
   /** Drive any of the above to a named in-memory sink until the source
     * is drained — the synchronous local smoke path.
@@ -280,24 +264,34 @@ object StreamingOps {
     * eviction bounds and the oracle pins the drained rows). */
   private val NoDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
 
+  /** Artifact isolation is OFF in the stream's cloned session: with it
+    * on, each clone's `ArtifactManager` makes a fresh classloader, and
+    * the codegen cache is keyed by (classloader, code), so each drain
+    * start recompiled identical classes (q70: 11 per warm call, now 0).
+    * Drains add no jars or files, so nothing needs isolating. */
+  private val IsolationKey = "spark.sql.artifact.isolation.enabled"
+
   /** Run `start` with the drain-scoped SQL confs set — state width
-    * (see [[StreamStatePartitions]] / [[feedScaledStateWidth]]) and the
-    * no-data flush switch — restoring the session's batch values after
-    * the stream has captured them at start. */
+    * ([[StreamStatePartitions]] / [[feedScaledStateWidth]]), no-data
+    * flush and isolation switches — restoring the session's batch values
+    * after the stream has captured them at start. */
   private def withDrainConfs[T](spark: SparkSession, statePartitions: Int)(
       start: => T): T = {
     val batchWidth = spark.conf.get("spark.sql.shuffle.partitions")
     val noData = spark.conf.get(NoDataKey, "true")
+    val isolation = spark.conf.get(IsolationKey, "true")
     try {
       spark.conf.set("spark.sql.shuffle.partitions",
         math.min(statePartitions, batchWidth.toInt))
       spark.conf.set(NoDataKey, "false")
+      spark.conf.set(IsolationKey, "false")
       start
     } finally {
       // the stream captured its confs at start; the session's batch
       // queries (and any foreachBatch body) keep theirs
       spark.conf.set("spark.sql.shuffle.partitions", batchWidth)
       spark.conf.set(NoDataKey, noData)
+      spark.conf.set(IsolationKey, isolation)
     }
   }
 
@@ -311,17 +305,12 @@ object StreamingOps {
     }
     try q.processAllAvailable()
     finally q.stop()
-    val stateRows = q.recentProgress.toSeq
-      .map(p => Option(p.stateOperators).map(_.map(_.numRowsTotal).sum)
-        .getOrElse(0L))
+    val (maxState, finalState) = recordDrain(name, q)
     val sink = spark.table(name)
     val snapshot = spark.createDataFrame(
       new java.util.ArrayList(java.util.Arrays.asList(sink.collect(): _*)),
       sink.schema)
     spark.catalog.dropTempView(name)
-    val maxState = if (stateRows.isEmpty) 0L else stateRows.max
-    val finalState = stateRows.lastOption.getOrElse(0L)
-    drainLog.add((name, q.recentProgress.length, maxState, finalState))
     DrainResult(snapshot, maxState, finalState)
   }
 
@@ -349,28 +338,21 @@ object StreamingOps {
     }
     try q.processAllAvailable()
     finally q.stop()
-    val stateRows = q.recentProgress.toSeq
-      .map(p => Option(p.stateOperators).map(_.map(_.numRowsTotal).sum)
-        .getOrElse(0L))
-    drainLog.add((name, q.recentProgress.length,
-      if (stateRows.isEmpty) 0L else stateRows.max,
-      stateRows.lastOption.getOrElse(0L)))
+    recordDrain(name, q): Unit
     spark.read.schema(df.schema).parquet(outDir)
   }
 
   /** Write the sf events file to `target` in the CANONICAL staged
     * encoding (µs TIMESTAMP_NTZ = [[rawSchema]]): a source already
     * canonical is copied byte-for-byte; a legacy INT64-nanos source is
-    * rewritten through [[normalizedEvents]]. Runs inside the stagers'
-    * builds, so the footer probe's job is paid once per corpus
-    * snapshot. */
+    * rewritten through [[graft.sources.Tables.events]]. The footer probe
+    * is the memoized schema of that read, so it runs no job of its own
+    * once the snapshot's events have been read. */
   private def writeCanonicalEvents(spark: SparkSession, d: String,
       target: java.nio.file.Path): Unit = {
     val src = java.nio.file.Paths.get(d, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val srcIsLong = spark.read.parquet(src.toString)
-      .schema("ts").dataType == org.apache.spark.sql.types.LongType
-    if (srcIsLong) writeSingleFile(normalizedEvents(spark, d), target)
+    val srcIsLong = Tables.rawEvents(spark, d).schema("ts").dataType == LongType
+    if (srcIsLong) writeSingleFile(Tables.events(spark, d), target)
     else java.nio.file.Files.copy(src, target)
   }
 
@@ -500,7 +482,7 @@ object StreamingOps {
     // overhead beats parallelism there — but sf10's 9.5M rows in one
     // big micro-batch serialize through those 4 threads; ~1M state rows
     // per partition is the re-measured crossover, floor 4, cap cores).
-    val feedRows = graft.sources.Tables.events(s, d).count()
+    val feedRows = Tables.events(s, d).count()
     val width = feedScaledStateWidth(feedRows, 1000000L,
       s.sparkContext.defaultParallelism)
     val drained = runToParquet(
@@ -580,12 +562,7 @@ object StreamingOps {
     }
     try q.processAllAvailable()
     finally q.stop()
-    val stateRows = q.recentProgress.toSeq
-      .map(p => Option(p.stateOperators).map(_.map(_.numRowsTotal).sum)
-        .getOrElse(0L))
-    drainLog.add((out, q.recentProgress.length,
-      if (stateRows.isEmpty) 0L else stateRows.max,
-      stateRows.lastOption.getOrElse(0L)))
+    recordDrain(out, q): Unit
     import scala.jdk.CollectionConverters._
     val merged = partials.asScala.toSeq
       .groupBy(_._1).toSeq
@@ -630,7 +607,7 @@ object StreamingOps {
     // re-measured sweet spot, floor 4, cap at the session's cores.
     // Emission per user is a closed-form function of its final total
     // (see thresholdAlertsCents), so partitioning never changes results.
-    val feedRows = graft.sources.Tables.events(s, d).count()
+    val feedRows = Tables.events(s, d).count()
     val width = feedScaledStateWidth(feedRows, 500000L,
       s.sparkContext.defaultParallelism)
     // alert OUTPUT is feed-sized (~1 alert/event at the bench feeds:
@@ -671,7 +648,7 @@ object StreamingOps {
       |FROM events JOIN customer ON user_id = c_custkey
       |GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val out = s"stream_enrich_${runSeq.incrementAndGet()}"
-    val dim = graft.sources.Tables.customer(s, d)
+    val dim = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"))
     val enriched = eventStream(s, stageEvents(s, d))
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
@@ -717,7 +694,7 @@ object StreamingOps {
     import org.apache.spark.sql.expressions.Window
     // SCD2 intervals from the closed history (q91's build), broadcast
     val w = Window.partitionBy(col("duser")).orderBy(col("vfrom"))
-    val dim = graft.sources.Tables.events(s, d)
+    val dim = Tables.events(s, d)
       .select(col("user_id").as("duser"), col("event_id"),
         col("event_type").as("state"),
         col("ts").cast("timestamp").as("vfrom"))
@@ -757,7 +734,7 @@ object StreamingOps {
   private def stageDeltaDocs(spark: SparkSession, d: String): String =
     graft.Fs.staged("graft_delta_stage", d,
         graft.Fs.fingerprint(d, "documents.parquet")) { dir =>
-      val delta = graft.sources.Tables.documents(spark, d)
+      val delta = Tables.documents(spark, d)
         .filter(col("source") === "src0")
       // tercile cuts at O(1) driver cost (exact quantiles, relativeError
       // 0) — the admission semantics are cut-position-independent
@@ -809,7 +786,7 @@ object StreamingOps {
     import graft.operators.TextOps
     val outDir = graft.SessionCache.scratchDir("graft_admissions")
     val sig = TextOps.bandSignatures(s, d)
-    val deltaIds = graft.sources.Tables.documents(s, d)
+    val deltaIds = Tables.documents(s, d)
       .filter(col("source") === "src0").select(col("doc_id"))
     // the persisted per-snapshot artifact: signatures of everything
     // already ingested (all non-delta docs). Kept as a LIST of
@@ -999,7 +976,7 @@ object StreamingOps {
   private[graft] def stageEventsOrdered(
       spark: SparkSession, d: String): String =
     graft.Fs.staged("graft_events_stage_ord_us", d, eventsFp(d)) { dir =>
-      val raw = normalizedEvents(spark, d)
+      val raw = Tables.events(spark, d)
         .withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
       val mm = raw.agg(min(col("ts_us")), max(col("ts_us"))).head
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
@@ -1121,7 +1098,7 @@ object StreamingOps {
       .filter(col("event_type") =!= SentinelType)
       .select(col("window.start").cast("timestamp_ntz").as("bucket"),
         col("event_type"), col("approx_users"))
-    graft.sources.Tables.events(s, d)
+    Tables.events(s, d)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(countDistinct(col("user_id")).as("exact_users"),
         count(lit(1)).as("n"),
@@ -1214,7 +1191,7 @@ object StreamingOps {
     // Catalyst pushes the semi-join below the left copy's aggregation
     // (PushDownLeftSemiAntiJoin), de-canonicalizing the two references
     // and re-running the corpus scan for each.
-    val counts = normalizedEvents(s, d)
+    val counts = Tables.events(s, d)
       .select(col("event_type"), floor(col("value")).cast("long").as("bucket"))
       .groupBy(col("event_type"), col("bucket"))
       .agg(count(lit(1)).as("freq"))
@@ -1272,7 +1249,7 @@ object StreamingOps {
       .filter(col("window.start") < lit("2100-01-01").cast("timestamp"))
       .select(col("window.start").cast("timestamp_ntz").as("bucket_ts"),
         col("vb"), col("c"))
-    val ref = graft.sources.Tables.events(s, d)
+    val ref = Tables.events(s, d)
       .groupBy(floor(col("value") / 50).cast("long").as("vb"))
       .agg(count(lit(1)).as("rc"))
     val rt = ref.agg(sum(col("rc")).cast("long").as("n"))

@@ -19,8 +19,7 @@ object TestEmbeddingFixtures {
 
   def scaled(spark: SparkSession, srcSf: String, reps: Int): String =
     cache.getOrElseUpdate((srcSf, reps), {
-      val dir = java.nio.file.Files.createTempDirectory("graft_emb_fix").toFile
-      dir.deleteOnExit()
+      val dir = SessionCache.scratchDir("graft_emb_fix")
       val base = spark.read.parquet(s"$srcSf/embeddings.parquet")
       val stride = base.agg(max(col("vec_id"))).head().getLong(0) + 1
       val parts = (0 until reps).map { r =>

@@ -120,7 +120,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // split from the NORMALIZED read so the staged halves carry exactly
     // the canonical `rawSchema` encoding (µs TIMESTAMP_NTZ) the stream
     // reader expects, whatever the source file's physical encoding.
-    val raw = StreamingOps.normalizedEvents(spark, sf)
+    val raw = graft.sources.Tables.events(spark, sf)
     raw.filter(col("event_id") % 2 === 0).coalesce(1)
       .write.parquet(s"$dir/even")
     raw.filter(col("event_id") % 2 === 1).coalesce(1)

@@ -99,8 +99,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // a >PairExactKnee corpus: replicate sf0.001's 500 vectors 10x with
     // distinct ids (content is irrelevant to the PLAN-shape assertion).
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_knee").toFile
-    dir.deleteOnExit()
+    val dir = SessionCache.scratchDir("graft_knee")
     val base = spark.read.parquet(s"$sf/embeddings.parquet")
     base.crossJoin(spark.range(10).toDF("rep"))
       .select((col("vec_id") + col("rep") * lit(100000)).as("vec_id"),

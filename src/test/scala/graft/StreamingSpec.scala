@@ -283,6 +283,21 @@ class StreamingSpec extends AnyFunSuite {
       s"state ${drained.maxStateRows} rows exceeds key count $nTypes")
   }
 
+  test("a warm q70 build compiles no generated class: the drain's " +
+      "cloned session shares the codegen cache") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sf = "/root/testdata/sf0.001"
+    def compiles(body: => Unit): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    def build(): Unit = SparkEntry.queries("q70_stream_dedup")(spark, sf): Unit
+    compiles(build())
+    val warm = compiles(build())
+    assert(warm == 0, s"the second q70 build compiled $warm classes")
+  }
+
   test("feed-scaled state width: floor 4 at bench feeds, widens " +
       "linearly with the feed, caps at the session's cores (the " +
       "scale-out knob — see COVERAGE.md §2.H state posture)") {
