@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *
   * A STAGE is an on-disk copy of something derived from a corpus
   * directory `d` (a replayable stream directory, a re-clustered layout,
-  * a staged pair relation), built once and read by later queries and
+  * a streamed assignment), built once and read by later queries and
   * later JVMs until the corpus changes. Every stage lives at
   * [[stageDir]] = `<java.io.tmpdir>/<family>/<path key of d>`:
   *   - `data` is the directory the consumer reads;

@@ -24,12 +24,6 @@ object GraftSession {
       // contention per query (the iterative PageRank suites went from
       // 16 min to seconds). 1 MB is plenty at these partition sizes.
       .config("spark.buffer.pageSize", "1m")
-      // synchronous shuffle-file cleanup: the wave tier
-      // (TextOps.stagedPairScan) depends on wave i's spill being GONE
-      // before wave i+1 floods the same scratch disk; with the default
-      // async ContextCleaner two waves' spill can coexist under GC or
-      // cleaner lag and re-create the overflow the tier exists to avoid
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
       .config("spark.ui.enabled", "false")
       // the status stores retain per-execution plan graphs + per-stage
       // metric aggregates even with the UI off; across a 76-query × 2-attempt

@@ -291,119 +291,6 @@ case class NearestCellIds(vec: Expression, nr: Expression,
     copy(vec = newChildren(0), nr = newChildren(1), cells = newChildren(2))
 }
 
-/** ALL quantizers' coarse assignments in ONE pass: the centroid
-  * matrix holds every quantizer's cells concatenated (disjoint c_id
-  * ranges — `ranges(r)` is the first row index of quantizer r,
-  * `ranges(q)` the total), and one eval emits, for each quantizer, its
-  * top-`nprobe` cells as `struct<crn: int, c_id: bigint>` in rank
-  * order (cosine DESC, c_id ASC), concatenated. The per-range loop is
-  * byte-for-byte [[NearestCellIdsStatic]]'s, so the output is
-  * BIT-EQUAL to q independent per-range evaluations
-  * (`CoarseAssignSpec`) — what changes is the plan: one scan, one
-  * explode, and one task binary instead of q of each (q grew from 4
-  * to the [[graft.operators.SimilarityOps.pairQuantizersScaled]]
-  * ladder in round 12, so the per-quantizer job overhead became the
-  * assignment stage's dominant cost). */
-case class NearestCellIdsMultiQ(vec: Expression, nr: Expression,
-    ids: Array[Long], flat: Array[Double], nrs: Array[Double],
-    ranges: Array[Int], nprobe: Int)
-    extends Expression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(nprobe > 0 && ranges.length >= 2 && ranges.head == 0 &&
-    ranges.last == ids.length && ids.length == nrs.length &&
-    (ids.length == 0 || flat.length % ids.length == 0))
-
-  private val dim = if (ids.length == 0) 0 else flat.length / ids.length
-
-  override def children: Seq[Expression] = Seq(vec, nr)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("crn",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("c_id",
-        org.apache.spark.sql.types.LongType, nullable = false))),
-      containsNull = false)
-  override def nullable: Boolean = true
-
-  private lazy val vecFloat =
-    vec.dataType match { case ArrayType(FloatType, _) => true; case _ => false }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (vecOk && nr.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "nearest_cell_ids_multiq requires (array<float|double>, double), " +
-        s"got (${vec.dataType.simpleString}, ${nr.dataType.simpleString})")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = vec.eval(input)
-    val nrv = nr.eval(input)
-    if (v == null || nrv == null) return null
-    val x = v.asInstanceOf[ArrayData]
-    val norm = nrv.asInstanceOf[Double]
-    if (x.numElements() != dim)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Any])
-    val xv = new Array[Double](dim)
-    var j = 0
-    while (j < dim) {
-      xv(j) = if (vecFloat) x.getFloat(j).toDouble else x.getDouble(j)
-      j += 1
-    }
-    val q = ranges.length - 1
-    val out = new java.util.ArrayList[Any](q * nprobe)
-    var r = 0
-    while (r < q) {
-      val lo = ranges(r)
-      val hi = ranges(r + 1)
-      val m = math.min(nprobe, hi - lo)
-      val bc = new Array[Double](math.max(m, 0))
-      val bi = new Array[Long](math.max(m, 0))
-      var filled = 0
-      var ci = lo
-      while (ci < hi) {
-        var s = 0.0
-        var o = ci * dim
-        j = 0
-        while (j < dim) { s += xv(j) * flat(o); o += 1; j += 1 }
-        val cos = s / (norm * nrs(ci))
-        val cid = ids(ci)
-        var p = filled
-        var search = 0
-        var found = false
-        while (search < filled && !found) {
-          val cmp = java.lang.Double.compare(cos, bc(search))
-          if (cmp > 0 || (cmp == 0 && cid < bi(search))) { p = search; found = true }
-          else search += 1
-        }
-        if (p < m) {
-          var qq = math.min(filled, m - 1)
-          while (qq > p) { bc(qq) = bc(qq - 1); bi(qq) = bi(qq - 1); qq -= 1 }
-          bc(p) = cos
-          bi(p) = cid
-          if (filled < m) filled += 1
-        }
-        ci += 1
-      }
-      var i = 0
-      while (i < filled) {
-        out.add(org.apache.spark.sql.catalyst.InternalRow(i, bi(i)))
-        i += 1
-      }
-      r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): NearestCellIdsMultiQ =
-    copy(vec = newChildren(0), nr = newChildren(1))
-}
-
 /** [[NearestCellIds]] variant for the two-level (hierarchical)
   * assignment's per-GROUP scan: returns the top-`nprobe` cells of the
   * given (sub)array as `array<struct<ncos: double, c_id: bigint>>`
@@ -415,7 +302,8 @@ case class NearestCellIdsMultiQ(vec: Expression, nr: Expression,
   * handling are byte-for-byte [[NearestCellIds]]'s, so a merge over
   * groups that PARTITION the cell set reproduces the flat expression's
   * ranking exactly whenever the routing level covered the true top
-  * cells (match-rate-pinned by `CoarseAssignSpec` on the 30k fixture). */
+  * cells (at full routing width, `CoarseAssignSpec` pins the merged
+  * assignment equal to the flat one row for row). */
 case class NearestCellsTop(vec: Expression, nr: Expression,
     cells: Expression, nprobe: Int)
     extends Expression
@@ -736,12 +624,4 @@ object VectorFunctions {
       nprobe: Int): Column =
     GraftBridge.column(NearestCellsTop(GraftBridge.expression(vec),
       GraftBridge.expression(nr), GraftBridge.expression(cells), nprobe))
-
-  /** Every quantizer's top-`nprobe` (crn, c_id) in one pass over the
-    * concatenated centroid matrix — see [[NearestCellIdsMultiQ]]. */
-  def nearestCellIdsMultiQ(vec: Column, nr: Column, ids: Array[Long],
-      cents: Array[Double], nrs: Array[Double], ranges: Array[Int],
-      nprobe: Int): Column =
-    GraftBridge.column(NearestCellIdsMultiQ(GraftBridge.expression(vec),
-      GraftBridge.expression(nr), ids, cents, nrs, ranges, nprobe))
 }

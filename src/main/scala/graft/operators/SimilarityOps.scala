@@ -28,7 +28,6 @@ import graft.sources.Tables._
   * would follow the same shape with learned centroids as bucket keys.
   */
 object SimilarityOps {
-  private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** left-fold double dot product. The composable higher-order form
     * (`aggregate(zip_with(...))`) computes the same fold but is
@@ -131,7 +130,7 @@ object SimilarityOps {
     * far more reliably. The sweep and decade points were measured by
     * the since-retired RecallProbe main (`RECALL_SWEEP_*.json`,
     * `BENCH_sf10_r1*.json`); the recall floors are pinned by
-    * `SimilaritySpec`, `AnnRecallSpec` and `CoarseAssignSpec`. */
+    * `SimilaritySpec` and `AnnRecallSpec`. */
   private[graft] val PairCells = 128
 
   /** Unroll bound of the oracle's per-quantizer CTE chains = the
@@ -258,14 +257,9 @@ object SimilarityOps {
     * the oracle's two branches are count-gated on the same threshold,
     * its per-cell branch unrolls [[PairQuantizersMax]] chains whose
     * seeds empty out past its own q(k) — so results stay hash-exact
-    * tier for tier THROUGH THE FLAT AND FUSED TIERS, i.e. at every
-    * driver-reachable scale (q(k)·k ≤ [[FusedCollectKnee]], ~430k
-    * vectors single-node). Past the knee the engine switches to the
-    * two-level (hierarchical) escape tier, which is APPROXIMATE — its
-    * routing is recall-floor-pinned (≥ 0.85, `CoarseAssignSpec`
-    * forced-hier) but NOT hash-exact against this oracle's window
-    * form; the switch logs a loud warning naming the changed contract
-    * rather than silently degrading a hash-verified query.
+    * tier for tier at every k: the engine scores each quantizer's
+    * cells separately ([[pairAssignment]]), the form the oracle's
+    * per-quantizer chains compute.
     */
   val q34EmbedNearPairs: QueryDef = {
     val bandSelects = (0 until PairBands).map { bi =>
@@ -342,177 +336,56 @@ object SimilarityOps {
     }
   }
 
-  /** SYMMETRIC probed∩probed per-cell tier — the round-10 registered
-    * form, kept as the sweep/spec comparison twin of the registered
-    * [[embedNearPairsPerCellAsym]] (candidates here are pairs sharing
-    * ANY probed cell, volume n²·nprobe²/2k per quantizer — the
-    * measured equal-recall-per-volume alternative; see the --sweep
-    * tables in the bench artifacts). Every vector is assigned to its
-    * `nprobe` nearest learned centroids per quantizer (q44's
-    * one-Lloyd-round cells — the shared session-cached index
-    * artifact), candidate pairs meet on the cell id (an equi-join,
-    * never a global product), each candidate gets the exact float-dot
-    * cosine, and duplicates from pairs sharing both cells collapse
-    * AFTER the ≥ 0.4 filter (distinct over the few survivors, not the
-    * candidate stream). The assignment side is broadcast below
-    * [[CellBroadcastKnee]] vectors, which keeps the whole pair stage
-    * map-side; above it the same plan shuffles both sides on c_id —
-    * the per-cell join IS the 100 TB shape (cells partition the
-    * corpus; each cell's product is local).
-    *
-    * Assignment-side scale bound, stated honestly: k ∝ n keeps the
-    * per-cell PAIR volume linear, but the coarse assignment itself is
-    * n·k dots against a driver-collected broadcast array — fine through
-    * every benched scale (k = 382 at sf3 is ~200 KB per quantizer) and
-    * for any single-machine corpus, but at k in the millions the
-    * centroid array outgrows a broadcast and the assignment flops turn
-    * quadratic. The standard escape is hierarchical (two-level)
-    * assignment — pick among √k coarse cells, then among that cell's √k
-    * children — which this corpus cannot exercise (128 ≤ k ≤ 382 at
-    * every benched sf, where one level is both faster and exactly what
-    * the oracle's window ranks), so it is documented rather than built.
-    */
-  // 100k vectors ⇒ ~500 MB of build side (16n rows × ~300 B); past
-  // that the broadcast stops paying for the avoided c_id shuffle
-  private[graft] val CellBroadcastKnee = 100000L
-
   /** ASYMMETRIC home-vs-probe form of the per-cell tier — the
     * REGISTERED above-knee relation (the classic IVF SEARCH shape,
     * evaluated pairwise): each vector is INDEXED under its single
     * nearest cell (rank-1 "home") and PROBES its `nprobe` nearest
     * cells; a pair is a candidate when either member's home cell is
     * among the other's probed cells. Candidate volume scales LINEARLY
-    * with nprobe (n²·np/k per quantizer — the symmetric probed∩probed
+    * with nprobe (n²·np/k per quantizer — a symmetric probed∩probed
     * form pays np²/2). The defaults are the round-12 law: fixed
     * [[PairNprobeAsym]] probe width and the [[pairQuantizersScaled]]
     * quantizer-count ladder. Every candidate is verified with the exact
     * codegen cosine, duplicates (both directions, shared cells,
     * multiple quantizers) collapse in one distinct over the few
-    * survivors, and below [[CellBroadcastKnee]] the n·q-row home side
-    * broadcasts, keeping the whole pair stage map-side. */
-  private[graft] def embedNearPairsPerCellAsym(s: SparkSession, d: String,
-      flatOverride: Boolean = false, hierOverride: Boolean = false,
-      hierWOverride: Int = 0): DataFrame = {
-    val pa = pairAssignment(s, d, flatOverride, hierOverride, hierWOverride)
-    val src = pa.src
-    val below = pa.below
+    * survivors, and the n·q-row home side broadcasts (sf1's 20k vectors
+    * make a few MB of it), keeping the whole pair stage map-side. */
+  private[graft] def embedNearPairsPerCellAsym(s: SparkSession,
+      d: String): DataFrame = {
+    val src = pairAssignment(s, d)
     val home = src.filter(col("crn") === 0)
       .select(col("c_id"), col("vec_id").as("vh"),
         col("embedding").as("eh"), col("nr").as("nh"))
     val probe = src.select(col("c_id"), col("vec_id").as("vp"),
       col("embedding").as("ep"), col("nr").as("np_"))
-    // sort-merge on the shared c_id partitioning (measured faster here
-    // than a SHUFFLE_HASH build of the home side: 38.4 s vs 46.7 s at
-    // the 200k corpus — the checkpointed blocks feed the merge
-    // sequentially)
-    val h = if (below) broadcast(home) else home
-    h.join(probe, Seq("c_id"))
+    broadcast(home).join(probe, Seq("c_id"))
       .filter(col("vh") =!= col("vp"))
       .select(least(col("vh"), col("vp")).as("v1"),
         greatest(col("vh"), col("vp")).as("v2"),
         (dot(col("eh"), col("ep")) / (col("nh") * col("np_"))).as("cosine"))
       .filter(col("cosine") >= 0.4)
       .distinct()
-      // q48's materialize-before-sort trick was A/B'd here and REVERTED:
-      // this plan's sort sampling already reuses the distinct's shuffle
-      // (21.7 s with a localCheckpoint vs 16.5 s without at sf10) — the
-      // re-execution pathology needs an expensive MAP-side pipeline
-      // under the final exchange, which the broadcast-free SMJ lacks
       .orderBy(col("v1"), col("v2"))
   }
 
-  /** The coarse-assignment half of [[embedNearPairsPerCellAsym]]: the
-    * per-vector (c_id, crn) rows and whether the corpus sits below
-    * [[CellBroadcastKnee]]. */
-  private[graft] final case class PairAsn(src: DataFrame, below: Boolean)
-
-  private[graft] def pairAssignment(s: SparkSession, d: String,
-      flatOverride: Boolean = false, hierOverride: Boolean = false,
-      hierWOverride: Int = 0): PairAsn = {
-    val n = embeddings(s, d).count()
-    val cells = pairCells(n)
-    val nprobe = PairNprobeAsym
-    val quantizersFlat = pairQuantizersScaled(cells)
+  /** The coarse-assignment half of [[embedNearPairsPerCellAsym]]: one
+    * (vec_id, embedding, nr, crn, c_id) row per vector, quantizer and
+    * probed cell. Each of the q(k) quantizers scores its own
+    * [[pairCells]]-sized range of learned cells through a
+    * driver-collected matrix ([[centroidArrays]]) — per quantizer, as
+    * the oracle's unrolled window chains do, so the relation is
+    * hash-exact at every k. */
+  private[graft] def pairAssignment(s: SparkSession, d: String): DataFrame = {
+    val cells = pairCells(embeddings(s, d).count())
     val e = embVecs(s, d)
-    val scaled = !flatOverride && cells > PairCells
-    val fused = scaled && !hierOverride &&
-      quantizersFlat.toLong * cells <= FusedCollectKnee
-    val hier = scaled && !fused
-    // the hier tier compounds through the measured routing retention —
-    // its own ladder, ~5% more quantizers (see pairQuantizersHier)
-    val quantizers =
-      if (hier) pairQuantizersHier(cells)
-      else quantizersFlat
-    // the tier switch is a SEMANTICS change for a hash-verified query:
-    // the two-level routing is approximate (recall-floor-pinned, not
-    // hash-exact vs the SQL oracle's window form), so crossing the
-    // knee is logged loudly rather than silent
-    if (hier && !hierOverride) logger.warn(
-      s"q34 per-cell tier: q(k)·k = ${quantizersFlat.toLong * cells} > " +
-        s"FusedCollectKnee=$FusedCollectKnee — switching to the two-level " +
-        s"(hierarchical) escape tier (q=$quantizers, w=g/2). This tier is " +
-        "APPROXIMATE: end recall is contract-pinned >= 0.85 " +
-        "(CoarseAssignSpec), but results are no longer hash-exact vs the " +
-        "flat/fused oracle form.")
-    val asn =
-      if (fused) {
-        // past the oracle-verified k = 128 scale: ONE fused pass scores
-        // all q(k) quantizers' cells per vector (bit-equal to the
-        // per-quantizer flat path — CoarseAssignSpec); the ladder grew q
-        // from 4 to 17 at the 200k corpus, so per-quantizer scans and
-        // Lloyd jobs — not arithmetic — had become the stage's cost
-        val (ids, flat, nrs, ranges) =
-          fusedCentroidArrays(s, d, cells, quantizers)
-        e.select(col("vec_id"), col("embedding"), col("nr"),
-            explode(graft.functions.VectorFunctions.nearestCellIdsMultiQ(
-              col("embedding"), col("nr"), ids, flat, nrs, ranges,
-              nprobe)).as("t"))
-          .select(col("vec_id"), col("embedding"), col("nr"),
-            col("t.crn").as("crn"), col("t.c_id").as("c_id"))
-      } else (0 until quantizers).map { r =>
-        if (scaled)
-          // fused matrix past the driver budget: the two-level join
-          // form — nothing k-sized centralizes (see hierCellAssign's
-          // scaladoc for the measured exactness trade on
-          // structure-free data)
-          hierCellAssign(s, d, r * cells, (r + 1) * cells, nprobe,
-            hierWOverride)
-        else {
-          val (ids, flat, nrs) =
-            centroidArrays(s, d, r * cells, (r + 1) * cells)
-          e.select(col("vec_id"), col("embedding"), col("nr"),
-              posexplode(graft.functions.VectorFunctions.nearestCellIdsStatic(
-                col("embedding"), col("nr"), ids, flat, nrs, nprobe)))
-            .withColumnRenamed("pos", "crn")
-            .withColumnRenamed("col", "c_id")
-        }
-      }.reduce(_ unionByName _)
-    // Below the knee the home side broadcasts and the whole pair stage
-    // is map-side. Above it, BOTH join sides read ONE materialized
-    // c_id-partitioned copy of the assignment: the checkpointed
-    // partitioning already satisfies the join (Dataset.checkpoint
-    // preserves outputPartitioning in its LogicalRDD), so the n·q·k-dot
-    // assignment and the n·(nprobe+1)·q-row exchange run once, not once
-    // per join side — plan-level exchange reuse cannot dedupe them here
-    // because the static-centroid expression defeats canonical
-    // equality. SESSION-cached (round 12, was a per-query
-    // localCheckpoint): the coarse assignment is as much a
-    // per-snapshot index artifact as the centroids it came from — a
-    // warehouse maintains its inverted lists across queries rather
-    // than re-scoring the corpus per query — so later same-session
-    // consumers (and the bench's steady-state attempt) read the
-    // c_id-partitioned parquet instead of re-paying the dominant
-    // stage; the reliable-disk trade is SessionCache's documented one.
-    val below = n <= CellBroadcastKnee
-    val src =
-      if (below) asn
-      else graft.SessionCache.checkpoint(
-        s"pairAsn${cells}_${quantizers}_$nprobe" +
-          (if (hierOverride) "H" else "") +
-          (if (hierWOverride > 0) s"w$hierWOverride" else "") +
-          (if (flatOverride) "F" else ""), s, d)(
-        asn.repartition(col("c_id")))
-    PairAsn(src, below)
+    (0 until pairQuantizersScaled(cells)).map { r =>
+      val (ids, flat, nrs) = centroidArrays(s, d, r * cells, (r + 1) * cells)
+      e.select(col("vec_id"), col("embedding"), col("nr"),
+          posexplode(graft.functions.VectorFunctions.nearestCellIdsStatic(
+            col("embedding"), col("nr"), ids, flat, nrs, PairNprobeAsym)))
+        .withColumnRenamed("pos", "crn")
+        .withColumnRenamed("col", "c_id")
+    }.reduce(_ unionByName _)
   }
 
   /** The blocked exhaustive form of q34's exact product — O(N²/2)
@@ -762,161 +635,31 @@ object SimilarityOps {
     graft.SessionCache.checkpoint(s"ivfCentroids${seedLo}_$seedHi", s, d)(
       learnedCentroidsPlan(s, d, seedLo, seedHi))
 
-  // ——— fused coarse machinery, PairCells < k, q·k ≤ FusedCollectKnee ———
-
-  /** Driver-matrix budget for the FUSED tier: all q(k)·k centroids of
-    * every quantizer concatenated in one static matrix (×512 B/row ⇒
-    * ≤ ~33 MB here — 11 MB at the 200k decade corpus). Past it the
-    * coarse machinery switches to the two-level join form
-    * ([[hierCellAssign]]), which never centralizes anything k-sized —
-    * see its scaladoc for the measured exactness trade. */
-  private[graft] val FusedCollectKnee = 65536L
-
-  private def fusedSeedArrays(s: SparkSession, d: String, cells: Int,
-      q: Int): (Array[Long], Array[Double], Array[Double]) =
-    collectCentroidArrays(s, d, s"fusedseed${cells}_$q")(
-      embVecs(s, d).filter(col("vec_id") < q.toLong * cells)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-          nrm(col("embedding")).as("c_nr")))
-
-  private def rangesOf(ids: Array[Long], cells: Int, q: Int): Array[Int] = {
-    // range r = rows whose c_id ∈ [r·cells, (r+1)·cells) — ids arrive
-    // sorted, so offsets are one linear scan; offset r = first index
-    // with id ≥ r·cells (cells may have dropped out empty, so ranges
-    // are computed from the data, never assumed)
-    val res = new Array[Int](q + 1)
-    var j = 0
-    var r = 0
-    while (r < q) {
-      val bound = r.toLong * cells
-      while (j < ids.length && ids(j) < bound) j += 1
-      res(r) = j
-      r += 1
-    }
-    res(q) = ids.length
-    res
-  }
-
-  /** Every quantizer's one-Lloyd-round centroids trained in ONE corpus
-    * pass: the seed matrix concatenates all q ranges, the fused
-    * expression emits each vector's per-range nearest seed, and one
-    * floor-split mean covers all q·k cells. Per-range arithmetic and
-    * rank order are bit-identical to [[learnedCentroidsPlan]]
-    * (`CoarseAssignSpec`), so the cells are the SAME index artifact —
-    * computed in 2 jobs instead of 2·q. */
-  private[graft] def learnedCentroidsFusedPlan(s: SparkSession, d: String,
-      cells: Int, q: Int): DataFrame = {
-    val (ids, flat, nrs) = fusedSeedArrays(s, d, cells, q)
-    val asn = embVecs(s, d).select(
-        explode(graft.functions.VectorFunctions.nearestCellIdsMultiQ(
-          col("embedding"), col("nr"), ids, flat, nrs,
-          rangesOf(ids, cells, q), 1)).as("t"),
-        col("embedding"))
-      .select(col("t.c_id").as("c_id"), col("embedding"))
-    floorSplitMean(asn, "c_id")
-  }
-
-  private def learnedCentroidsFused(s: SparkSession, d: String,
-      cells: Int, q: Int): DataFrame =
-    graft.SessionCache.checkpoint(s"ivfCentroidsFused${cells}_$q", s, d)(
-      learnedCentroidsFusedPlan(s, d, cells, q))
-
-  private def fusedCentroidArrays(s: SparkSession, d: String, cells: Int,
-      q: Int): (Array[Long], Array[Double], Array[Double], Array[Int]) = {
-    val (ids, flat, nrs) = collectCentroidArrays(s, d, s"fusedcent${cells}_$q")(
-      learnedCentroidsFused(s, d, cells, q))
-    (ids, flat, nrs, rangesOf(ids, cells, q))
-  }
-
-  // ——— two-level (hierarchical) coarse machinery, q·k past the knee ———
+  // ——— two-level (hierarchical) coarse machinery: q129's deployment
+  // form and q140's registered one ———
   //
-  // The fused tier's matrix is q(k)·k rows of driver-collected index
-  // metadata — fine through any single-node corpus (11 MB at 200k
-  // vectors) but k ∝ n makes it the one driver structure that grows
-  // with the corpus. Past [[FusedCollectKnee]] the coarse machinery
-  // goes two-level: each vector routes through g = ⌈√k⌉ SUPER points
-  // (the only driver-collected matrix — √k rows, sublinear), then
-  // scans the top-w routed groups' cells, which stay DISTRIBUTED as a
-  // g-row grouped table joined into the scan (broadcast while small;
-  // a plain s_id equi-join once it outgrows one — the planner's call,
-  // not a driver collect). NOTHING k-sized ever centralizes.
+  // Each vector routes through g = ⌈√k⌉ SUPER points (the only
+  // driver-collected matrix — √k rows, sublinear), then scans the top-w
+  // routed groups' cells, which stay DISTRIBUTED as a g-row grouped
+  // table joined into the scan. NOTHING k-sized ever centralizes.
   //
   // Exactness, stated from measurement rather than hope: routing is
   // APPROXIMATE on structure-free data — a w < g probe does NOT cover
   // every vector's true nearest cells (cell memberships, hence Lloyd
-  // means, visibly diverge from the flat computation). That is the
-  // routing-level mirror of the r1(k) decay the quantizer ladder
-  // compensates (same geometry: a cosine-0.4 neighborhood straddles
-  // ever more Voronoi boundaries, whether of cells or of
-  // super-cells), and it is why this form is the ESCAPE TIER, not the
-  // default: exact covering would need w = g on this corpus,
-  // surrendering the flop savings — on clustered real corpora routing
-  // prunes properly (the same corpora where the ladder's q stays
-  // flat). Round 13 closes the recall contract on this tier: the
-  // per-quantizer RETENTION through w = g/2 routing is measured
-  // (0.952/0.957 at k = 382/1273 — see [[hierSuperProbe]]) and the
-  // tier compounds its OWN quantizer ladder [[pairQuantizersHier]]
-  // fitted on r1·retention, so end recall holds the same ≥ 0.85 floor
-  // as the fused tier: 0.884 measured at the 30k fixture (fused:
-  // 0.897), spec-pinned forced-hier by `CoarseAssignSpec`; 200k
-  // forced-hier re-swept in RECALL_SWEEP_r13.json. The spec also pins
-  // the machinery's invariants (valid ids, rank bounds, subset
-  // exactness of every emitted pair); the fused tier alone carries
-  // the bit-equality contract, at every driver-reachable scale.
+  // means, visibly diverge from the flat computation); at w ≥ g it
+  // reproduces the flat assignment row for row (`CoarseAssignSpec`).
+  // End pair recall of the routed form is floor-pinned by
+  // `StreamIndexSpec` (q140).
 
   /** Routing width: how many super groups each vector scans — g/2
     * (floor 4). Round 13 measurement (RecallProbe --sweep, q = 1
-    * forced-hier vs flat, exhaustive truth): per-quantizer recall
+    * routed vs flat, exhaustive truth): per-quantizer recall
     * RETENTION through the routing is a function of w/g alone, stable
     * across k — r1_hier/r1_flat = 0.894/0.899 at w = g/4 (k = 382 /
     * 1273) and 0.952/0.957 at w = g/2; w = g reproduces the flat
-    * computation bit-exactly (sanity-pinned). g/2 halves the scan
-    * flops vs flat while keeping retention ≥ [[HierRetention]], which
-    * the hier quantizer ladder ([[pairQuantizersHier]]) compensates
-    * with ~5% more quantizers — cheaper end-to-end than g/4's ~11%
-    * extra quantizers, because candidate volume (the dominant cost at
-    * scale) is linear in the quantizer count while scan flops are not
-    * the bottleneck. */
+    * computation bit-exactly. g/2 halves the scan flops vs flat while
+    * keeping retention ≥ 0.95. */
   private[graft] def hierSuperProbe(g: Int): Int = math.max(4, (g + 1) / 2)
-
-  /** Measured per-quantizer recall retention of g/2-width two-level
-    * routing vs the flat scan (see [[hierSuperProbe]]): 0.952 at
-    * k = 382, 0.957 at k = 1273; 0.95 is the conservative floor the
-    * hier ladder compensates for. */
-  private[graft] val HierRetention = 0.95
-
-  /** Quantizer-count ladder of the HIER escape tier: same compounding
-    * contract as [[pairQuantizersScaled]] (least q with
-    * 1−(1−r1)^q ≥ 0.88) but with the per-quantizer recall measured
-    * THROUGH the two-level routing: r1_hier(k) = [[HierRetention]] ·
-    * 0.335·(128/k)^0.449. Costs ~5% more quantizers than the flat
-    * ladder (q = 7/10/18 at k = 191/382/1273 vs 7/9/17 flat) — the
-    * price of never centralizing a k-sized matrix. No oracle mirrors
-    * this tier (it engages only past [[FusedCollectKnee]], beyond any
-    * driver-reachable scale — see the q34 scaladoc's tier scoping), so
-    * the count is computed directly rather than as a pre-folded integer
-    * CASE; it is still a pure deterministic function of k. Cap 48:
-    * the 0.88 contract holds through k ≈ 5,100 (the flat ladder's own
-    * saturation point, n ≈ 800k on one node) and on to k ≈ 11,000;
-    * past that a cluster raises the cap, same posture as the flat
-    * ladder's documented boundary. */
-  private[graft] def pairQuantizersHier(k: Int): Int = {
-    val r1 = HierRetention * 0.335 * math.pow(128.0 / k, 0.449)
-    val wanted = math.ceil(math.log(0.12) / math.log(1.0 - r1)).toInt
-    if (wanted > 48) {
-      // past k ≈ 11,000 the cap binds and the 0.88 compounding contract
-      // silently degrades unless named — same loud-contract-change
-      // posture as the fused→hier knee crossing
-      val achievable = 1.0 - math.pow(1.0 - r1, 48)
-      logger.warn(
-        f"q34 hier quantizer ladder: the 0.88 recall contract needs " +
-          f"q=$wanted quantizers at k=$k but the single-node cap is 48 — " +
-          f"compounded recall degrades to ~$achievable%.3f. A cluster " +
-          "deployment should raise the cap (same boundary as the flat " +
-          "ladder's documented k ≈ 5,100 saturation).")
-    }
-    math.min(48, wanted)
-  }
 
   /** One Lloyd round over the POINTS to learn the super level: sampled
     * points seed it, each point assigns to its nearest seed, supers are
@@ -1039,11 +782,9 @@ object SimilarityOps {
   /** The learned centroids of a seed range, DRIVER-COLLECTED once per
     * (session, snapshot, range) as (ids, flat row-major matrix, norms)
     * for [[graft.functions.NearestCellIdsStatic]]. k rows of index
-    * metadata (≈ 650 KB at k = 1273) — the same driver-sized class as
-    * the broadcast array the column-form expression rode; the
-    * hierarchical-assignment escape documented on the per-cell tier
-    * applies unchanged once k outgrows this. A [[graft.SessionCache]]
-    * entry, so a regenerated corpus re-collects. */
+    * metadata (≈ 65 KB at sf1's k = 128) — the same driver-sized class
+    * as the broadcast array the column-form expression rode. A
+    * [[graft.SessionCache]] entry, so a regenerated corpus re-collects. */
   private def centroidArrays(s: SparkSession, d: String, seedLo: Int,
       seedHi: Int): (Array[Long], Array[Double], Array[Double]) =
     collectCentroidArrays(s, d, s"range${seedLo}_$seedHi")(
@@ -1251,13 +992,6 @@ object SimilarityOps {
       .orderBy(col("q_id"))
   }
 
-  /** Corpus size above which q102's within-cluster pair generation stops
-    * broadcasting one side of the self-join and shuffles both sides on
-    * the cluster key instead — same cost-gated index selection as q34's
-    * knee and the dedup family's `ArrayBroadcastKnee`, decided from one
-    * metadata-cheap parquet row count. */
-  private val ClusterBroadcastKnee = 250000L
-
   /** q102's target cluster population: the cell count is
     * `k = max(16, n / SemDedupCellSize)`, so per-cell membership stays
     * ~constant as the corpus grows and within-cluster pair volume is
@@ -1290,12 +1024,12 @@ object SimilarityOps {
     * cells; the assignment is a map-side broadcast-centroid argmax and
     * the (vec → cell) table is checkpointed once per corpus snapshot
     * beside the centroids themselves (the shared per-snapshot index
-    * artifact q44/q34 already stage). Below [[ClusterBroadcastKnee]]
-    * vectors the pair join's right side broadcasts; above it both
-    * sides shuffle on the cell id. Cluster-scoped dropping misses
-    * cross-cell pairs by DESIGN (that is SemDeDup's trade); the
-    * drop-coverage floor vs the exhaustive ground truth is pinned at
-    * the decade fixture by `SemDedupSpec`, as q34 pins pair recall.
+    * artifact q44/q34 already stage). The pair join's right side
+    * broadcasts (sf1's 20k vectors are a few MB). Cluster-scoped
+    * dropping misses cross-cell pairs by DESIGN (that is SemDeDup's
+    * trade); the drop-coverage floor vs the exhaustive ground truth is
+    * pinned at the decade fixture by `SemDedupSpec`, as q34 pins pair
+    * recall.
     * Both engines build the identical cells (the oracle instantiates
     * q44's learned-centroid CTE chain with the same corpus-derived k)
     * and evaluate the same codegen dot, so the ≥ 0.4 gate and the
@@ -1334,11 +1068,7 @@ object SimilarityOps {
       col("embedding").as("e1"), col("nr").as("nr1"))
     val rhs = asn.select(col("c_id"), col("vec_id").as("v2"),
       col("embedding").as("e2"), col("nr").as("nr2"))
-    val cand =
-      if (embeddings(s, d).count() <= ClusterBroadcastKnee)
-        lhs.join(broadcast(rhs), "c_id")
-      else lhs.join(rhs, "c_id")
-    val dropped = cand.filter(col("v1") < col("v2"))
+    val dropped = lhs.join(broadcast(rhs), "c_id").filter(col("v1") < col("v2"))
       .filter(dot(col("e1"), col("e2")) / (col("nr1") * col("nr2"))
         >= threshold)
       .select(col("c_id").as("drop_cid"), col("v2")).distinct()
@@ -2355,9 +2085,9 @@ object SimilarityOps {
     * this build, `BENCH_Q129_ASSIGN_r16.json`; this registers the
     * deployment form as a first-class hash-verified query instead of a
     * probe-only tier). The hier route is approximate BY CONTRACT
-    * (routing covers the true top cells ≥ 0.95 of the time,
-    * `CoarseAssignSpec`; end pair recall vs exact truth floor-pinned
-    * in `StreamIndexSpec`) but DETERMINISTIC — every stage (super
+    * (per-quantizer routing retention ≥ 0.95, see [[hierSuperProbe]];
+    * end pair recall vs exact truth floor-pinned in `StreamIndexSpec`)
+    * but DETERMINISTIC — every stage (super
     * seeding every `step`-th id, one floor-split Lloyd round per
     * level, top-w routing, within-group top-1, all ties cos DESC then
     * c_id ASC) is pure arithmetic both engines state identically, so

@@ -190,328 +190,6 @@ object TextOps {
     * spec-pinned at fixture scale), so the gate changes cost only. */
   private[graft] val PairCountKnee = 60000000L
 
-  /** Single-NODE disk ceiling for the exact pair scans: above this many
-    * pair rows (Σ df·(df−1)/2), one prefix-filter job's candidate
-    * shuffle outruns local scratch disk — measured at the 500k-doc sf10
-    * corpus (pair volume ≈ 3.7G rows), whose single-job q27/q55 died
-    * with `No space left on device` after ~70 GB of shuffle spill,
-    * while the sf3 point (1.1G rows) finishes comfortably. Above the
-    * knee the SAME exact plan runs as [[pairWaves]] sequential
-    * token-hash waves (h mod W), each a bounded job whose results land
-    * in a staged per-snapshot artifact — the relation is unchanged
-    * (the oracle stays the single count formulation; equivalence
-    * spec-pinned in `ContainmentQuantizeSpec`), only its peak scratch
-    * footprint is. On a CLUSTER this knee effectively never fires:
-    * aggregate shuffle disk grows with executors, which is the real
-    * 100 TB answer — the wave tier is the single-node degradation that
-    * keeps the exact semantics available instead of failing. */
-  private[graft] val PairDiskKnee = 1500000000L
-
-  /** Two-component per-wave spill model for the staged pair scans,
-    * FITTED FROM THE TIER'S OWN TELEMETRY (every wave logs its sampled
-    * peak): spill(W) ≈ F + c·pv/W.
-    *
-    *  - F — the wave-count-INDEPENDENT working set: candidate
-    *    verification intermediates and the token-class index join.
-    *    Measured at the sf10 corpus: 8 waves of 456M pairs each peaked
-    *    47.8–56.3 GB — essentially flat — while r10's 5-wave run
-    *    peaked ~49 GB at 730M pairs/wave: the pair-linear term barely
-    *    moves the peak, so F ≈ 50 GB there.
-    *  - c — the pair-linear term, bounded from two measured deaths:
-    *    the single job (all 3.65G pairs) overran ~70 GB, and a 2-wave
-    *    split (1.83G pairs/wave) still overran 72 GB of free scratch —
-    *    so c ≥ (72−50)/1.83e9 ≈ 12 B/pair, the planning value (the
-    *    ENOSPC retry-split recovered the 2-wave attempt by refining to
-    *    mod-4 half-waves, exactly as designed; 12 plans past the
-    *    retry).
-    *
-    * The disk bound gives the MINIMUM W whose predicted peak fits the
-    * live headroom, floor 2 (a corpus past [[PairDiskKnee]] is by
-    * definition too big for one job). If even F exceeds the headroom
-    * the disk is simply too small for this corpus single-node; the
-    * ENOSPC retry-split still degrades gracefully (and on a cluster
-    * the knee never fires — aggregate shuffle disk grows with
-    * executors).
-    *
-    * ROUND-13 CORRECTION — the wave count is no longer the disk-bound
-    * minimum. Round 12 reasoned "once F dominates, more waves don't
-    * reduce peak, so minimize the count"; a same-session, same-HEAD
-    * forced-wave A/B at sf10 falsified BOTH halves for containment:
-    * walls 1727.8 / 1403.9 / 980.8 / 716.0 / 728.0 s at
-    * w = 7/10/14/20/28 (identical 25,600 output rows), peaks FALLING
-    * 45 → 30 → 19 → 12 GB — the "fixed" F the telemetry re-solves is
-    * itself superlinear in wave size (per-wave wall tracks (pv/w)²
-    * until the per-wave working set fits execution memory, then goes
-    * flat), so minimizing the count maximized the spill penalty. The
-    * same A/B on jaccard measured the OPPOSITE: 1405 s at w = 4 (r12)
-    * vs 2120.9 s at w = 13 — its per-wave fixed cost is ~143 s (vs
-    * containment's ~16 s; fitting wall(w) = a·w + c/w to the measured
-    * points puts jaccard's optimum at w ≈ 5, right where the old
-    * objective landed, and containment's at w ≈ 22). Hence
-    * [[pairWaves]] now takes a PER-FAMILY throughput target
-    * ([[JaccardWaveTargetBytes]], [[ContainmentWaveTargetBytes]] —
-    * planner-bytes per wave calibrated so pv·bpp/target lands each
-    * family at its measured optimum at sf10) and returns
-    * max(disk-bound W, min([[PairWaveCountCap]], throughput W)): the
-    * disk constraint is a hard BOUND, no longer the objective. */
-  private[graft] val PairSpillFixedBytes = 50L << 30
-  private[graft] val PairSpillBytesPerPair = 12L
-  private[graft] val PairScratchMargin = 12L << 30
-
-  /** q55's planning coefficient: the one-sided prefix × full-index join
-    * spills roughly DOUBLE q27's bytes per pair (measured r10: 5
-    * q27-sized waves still overflowed; the hand-tuned fix then was a 2×
-    * wave multiplier). 12 B/pair was fitted from the JACCARD family's
-    * failures, so containment plans with its own 2× coefficient until
-    * its own wave telemetry justifies lowering it — the in-run
-    * recalibration ([[stagedPairScan]]'s post-wave F̂ re-solve) then
-    * corrects residual error from live measurements either way. */
-  private[graft] val ContainmentSpillBytesPerPair = 24L
-
-  /** Per-family throughput targets (planner-bytes pv·bpp per wave) and
-    * the wave-count cap — calibrated round 13, CORRECTED round 14: the
-    * sf10 corpus's live planner volume is pv ≈ 3.7e9 pairs, so
-    * containment's pv·bpp = 3.7e9·24 ≈ 88.8 GB (the r13 comment's
-    * "≈ 120 GB" mis-multiplied) — landing the measured optimum
-    * w ≈ 20-22 needs ~4 GiB/wave, not 6 (at 6 GiB the planner chose
-    * w = 14, a leg the A/B measured at 980.8 s vs 716.0 at w = 20; the
-    * r13-committed planner only hit ~21 waves by accident, via the
-    * stale 50 GiB frozen prior inflating wDisk). Jaccard's
-    * pv·bpp ≈ 44.4 GB at optimum w ≈ 4-5 gives ~12 GiB/wave (its
-    * per-wave fixed cost is ~9× containment's). The cap guards the
-    * per-wave fixed costs when pv grows 100×: past it the disk bound
-    * (and, on a cluster, the never-firing knee) governs. */
-  private[graft] val JaccardWaveTargetBytes = 12L << 30
-  private[graft] val ContainmentWaveTargetBytes = 4L << 30
-  private[graft] val PairWaveCountCap = 64L
-
-  /** Wave-1 spill prior for CONTAINMENT, as a function of the planned
-    * wave's planner bytes (pv·bpp/w). The r13 forced-wave A/B plus the
-    * r14 registered-path telemetry give six (wave-bytes, peak) points
-    * at sf10 — F = peak − wave bytes sits at 1.6–3× the wave's planner
-    * bytes (w=7: F 30–38 on 12.7 GB waves; w=20: F 6.9–8.1 on 4.4;
-    * w=168: F 2.26 on 0.53), i.e. F SHRINKS superlinearly with the
-    * wave, which the frozen 50 GiB prior (fitted in the old
-    * minimal-wave-count regime, and still correct for jaccard, whose
-    * measured F is wave-size-insensitive at 25–45 GB) cannot express.
-    * Keeping that frozen prior for containment made the wave-1
-    * preemptive check fire spuriously on a half-full disk: the r14
-    * registered q55 staging at 62 GB usable predicted 57.9 GB for a
-    * 4.2 GB-wave plan and split wave 1 down to w=168 before the first
-    * completed wave re-solved F̂ to 2.27 GB. 3.5× covers every measured
-    * containment point with margin — including wave 0 of the r14
-    * post-fix staging run, which is JVM-COLD (pays the whole pipeline's
-    * JIT and page-cache warmup) and measured F = 13.5 GB on a 4.2 GB
-    * wave where steady-state waves of the same run sat at 4–10 GB; the
-    * 3 GiB floor covers the tiny-wave tail (w=168's measured F̂ of
-    * 2.27 GB sits just above 2 GiB), and the 50 GiB cap restores the
-    * conservative frozen prior for absurdly small w. */
-  private[graft] def containmentFixedPrior(waveBytes: Long): Long =
-    math.max(3L << 30,
-      math.min(PairSpillFixedBytes, 7L * waveBytes / 2))
-
-  private[graft] def pairWaves(pv: Long,
-      bytesPerPair: Long = PairSpillBytesPerPair,
-      waveTargetBytes: Long = JaccardWaveTargetBytes,
-      usableSpace: () => Long = () =>
-        new java.io.File(sys.props("java.io.tmpdir")).getUsableSpace,
-      scaledPrior: Boolean = false): Int = {
-    val wDisk =
-      if (scaledPrior) {
-        // per-wave footprint = wave bytes + F(wave) ≈ 4.5·pv·bpp/w under
-        // the containment prior model, so the disk bound solves
-        // 4.5·pv·bpp/w ≤ usable − margin directly (the frozen-prior
-        // subtraction below would charge every wave 50 GiB of fixed
-        // spill this family never exhibits, inflating wDisk ~3×)
-        val room = math.max(4L << 30, usableSpace() - PairScratchMargin)
-        math.max(2L, (9L * pv * bytesPerPair / 2 + room - 1) / room)
-      } else {
-        val headroom = math.max(4L << 30,
-          usableSpace() - PairScratchMargin - PairSpillFixedBytes)
-        math.max(2L, (pv * bytesPerPair + headroom - 1) / headroom)
-      }
-    val wWall =
-      (pv * bytesPerPair + waveTargetBytes - 1) / waveTargetBytes
-    math.max(wDisk, math.min(PairWaveCountCap, wWall)).toInt
-  }
-
-  /** Lowest-level disk telemetry for the wave tier: samples the tmp
-    * filesystem's usable space every second while `body` runs and
-    * returns (result, peak scratch consumed in bytes). */
-  private def withScratchPeak[A](body: => A): (A, Long) = {
-    val f = new java.io.File(sys.props("java.io.tmpdir"))
-    val before = f.getUsableSpace
-    @volatile var minUsable = before
-    @volatile var stop = false
-    val t = new Thread(() => {
-      while (!stop) {
-        minUsable = math.min(minUsable, f.getUsableSpace)
-        Thread.sleep(1000)
-      }
-    }, "graft-scratch-sampler")
-    t.setDaemon(true)
-    t.start()
-    try {
-      val r = body
-      (r, math.max(0L, before - math.min(minUsable, f.getUsableSpace)))
-    } finally { stop = true; t.join(2000) }
-  }
-
-  private def isEnospc(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(12)
-      .exists(t => Option(t.getMessage).exists(_.contains("No space left")))
-
-  /** Run the wave partition of a pair scan as SEQUENTIAL jobs, appending
-    * each result to a [[graft.Fs.staged]] artifact (one family per
-    * `name`), rebuilt only when the corpus's `documents.parquet`
-    * changes. `wave(i, w)` must produce the rows whose token hash ≡ i
-    * (mod w); the initial split is `waves` from [[pairWaves]].
-    *
-    * Three scratch-bound mechanisms replace any per-family hand tuning:
-    * (1) between waves a GC nudge retires the finished wave's shuffle
-    * files — synchronously, because the Bench/Verify builders set
-    * spark.cleaner.referenceTracking.blocking.shuffle=true (a fallback
-    * pause covers sessions without it, where the deletes are async) —
-    * so peak scratch is one wave, not the sum; (2) the spill model is
-    * SELF-CORRECTING: the frozen constants ([[PairSpillFixedBytes]],
-    * the per-family `bytesPerPair`) are only the wave-1 prior — each
-    * completed wave re-solves the fixed component
-    * F̂ = peak − bytesPerPair·pv/w from its own sampled peak, and every
-    * wave is pre-checked against F̂ + bytesPerPair·pv/w vs LIVE free
-    * disk, preemptively splitting into its two mod-2w half-waves when
-    * the prediction no longer fits (a mid-staging W revision that costs
-    * nothing — unlike the ENOSPC path it never pays a failed wave);
-    * (3) a wave that STILL overflows the disk (ENOSPC anywhere in the
-    * failure chain) RETRY-SPLITS into the two half-waves h ≡ i (mod 2w)
-    * and h ≡ i+w (mod 2w) — their union is exactly wave (i, w) because
-    * the token hash is non-negative — recursively up to 3 doublings
-    * (preemptive + reactive combined). Every wave logs its sampled peak
-    * scratch, the implied bytes/pair, and the re-solved F̂ so the
-    * planning constants stay auditable against live measurements.
-    * `usableSpace` is injectable so a spec can fake a shrinking disk
-    * and pin the preemptive revision without filling a real one. */
-  private[graft] def stagedPairScan(s: SparkSession, d: String, name: String,
-      waves: Int, pairRows: Long = 0L,
-      bytesPerPair: Long = PairSpillBytesPerPair,
-      usableSpace: () => Long = () =>
-        new java.io.File(sys.props("java.io.tmpdir")).getUsableSpace,
-      spillFixedPrior: Long = PairSpillFixedBytes)(
-      wave: (Int, Int) => DataFrame): DataFrame = {
-    import java.nio.file.Files
-    // the wave count is NOT part of the fingerprint: the staged
-    // relation is wave-partition-independent (spec-pinned equivalence),
-    // and the count is re-derived from LIVE free disk on every call —
-    // fingerprinting it forced a full restage whenever the derivation
-    // moved (observed: the post-staging read-back re-derived one wave
-    // more, because the artifact itself had shrunk free space, and
-    // restaged 25 minutes of work it had just written)
-    val data = graft.Fs.staged(s"graft_pairscan/$name", d,
-        graft.Fs.fingerprint(d, "documents.parquet")) { tmp =>
-      var firstWrite = true
-      // Wait for the finished wave's spill to actually LEAVE the disk
-      // before the next wave floods it. System.gc() only ENQUEUES the
-      // dead ShuffleDependency's weak reference — the ContextCleaner
-      // then deletes tens of GB of files on its own thread, which
-      // overlaps the next wave and stacks ~2 waves of spill at peak
-      // (measured: wave telemetry showed the lag eating 94% of the
-      // disk at sf10). So: GC-nudge, then poll usable space until it
-      // recovers to near the wave's start baseline or plateaus
-      // (unrelated tenants move the disk too — ±256 MB counts as
-      // stable), re-nudging GC every ~10 s, capped at 6 min.
-      // the recovery target is the STAGING-START free level, not the
-      // current wave's start: a per-wave baseline gets depressed when
-      // deletions lag into the next wave, which lets settle() return
-      // while tens of GB of older spill are still queued for deletion —
-      // the next wave then starts into a nearly-full disk (observed:
-      // one ENOSPC retry-split fired exactly this way at sf10)
-      val globalBaseline = new java.io.File(sys.props("java.io.tmpdir"))
-        .getUsableSpace
-      // the staged artifact itself accumulates on the same tmp
-      // filesystem, so the recovery target must credit the bytes
-      // appended so far — without this, once the artifact exceeds the
-      // 8 GB tolerance the fast-recovery branch can never trigger and
-      // every remaining wave pays the >=60 s plateau path
-      def artifactBytes(p: java.nio.file.Path): Long =
-        if (!Files.exists(p)) 0L
-        else {
-          val st = Files.walk(p)
-          try st.filter(Files.isRegularFile(_))
-            .mapToLong(Files.size(_)).sum()
-          finally st.close()
-        }
-      // Deleting one wave's spill takes MINUTES at sf10 (~50 GB through
-      // the ContextCleaner's single thread), so the wait must outlast
-      // it: recovery to within 8 GB of the (artifact-adjusted)
-      // staging-start level ends the wait immediately; a plateau
-      // (deletions finished but the level didn't fully recover — e.g.
-      // another tenant took disk) only counts after 60 s so a
-      // briefly-stalled deletion queue can't fake it; hard cap 6 min,
-      // after which the ENOSPC retry-split is the (measured,
-      // self-healing) escape.
-      def settle(): Unit = {
-        val f = new java.io.File(sys.props("java.io.tmpdir"))
-        System.gc()
-        val target = globalBaseline - artifactBytes(tmp) - (8L << 30)
-        var last = -1L
-        var stable = 0
-        var waited = 0
-        while (stable < 5 && waited < 360) {
-          Thread.sleep(2000); waited += 2
-          if (waited % 10 == 0) System.gc()
-          val u = f.getUsableSpace
-          if (u >= target) stable = 5 // recovered
-          else if (waited >= 60 && math.abs(u - last) < (256L << 20))
-            stable += 1
-          else { stable = 0; last = u }
-        }
-      }
-      // F̂ starts at the caller's prior (frozen 50 GiB for jaccard,
-      // wave-size-scaled for containment — see [[containmentFixedPrior]])
-      // and is re-solved from every completed wave's sampled peak
-      // (floor 1 GB: a transiently generous disk must not talk the
-      // model into predicting that a wave is nearly free)
-      var fHat = spillFixedPrior
-      def predictedPeak(w: Int): Long =
-        fHat + (if (pairRows > 0) pairRows * bytesPerPair / w else 0L)
-      def runWave(i: Int, w: Int, depth: Int): Unit = {
-        if (depth < 3 && pairRows > 0 &&
-            predictedPeak(w) > usableSpace() - PairScratchMargin) {
-          System.err.println(
-            f"[wave] $name $i/$w predicted ${predictedPeak(w) / 1e9}%.1f GB " +
-              f"vs usable ${usableSpace() / 1e9}%.1f GB - preemptive split " +
-              s"into (${i}, ${2 * w}) and (${i + w}, ${2 * w})")
-          runWave(i, 2 * w, depth + 1)
-          runWave(i + w, 2 * w, depth + 1)
-          return
-        }
-        val mode = if (firstWrite) "overwrite" else "append"
-        try {
-          val (_, peak) = withScratchPeak {
-            wave(i, w).write.mode(mode).parquet(tmp.toString)
-          }
-          firstWrite = false
-          if (pairRows > 0)
-            fHat = math.max(1L << 30, peak - pairRows * bytesPerPair / w)
-          val perPair =
-            if (pairRows > 0) f"${peak.toDouble * w / pairRows}%.1f" else "?"
-          System.err.println(f"[wave] $name $i/$w depth=$depth " +
-            f"peak_scratch_gb=${peak / 1e9}%.2f bytes_per_pair=$perPair " +
-            f"f_hat_gb=${fHat / 1e9}%.2f")
-          settle()
-        } catch {
-          case e: Throwable if isEnospc(e) && depth < 3 =>
-            System.err.println(s"[wave] $name $i/$w ENOSPC - " +
-              s"retry-splitting into (${i}, ${2 * w}) and (${i + w}, ${2 * w})")
-            settle()
-            runWave(i, 2 * w, depth + 1)
-            runWave(i + w, 2 * w, depth + 1)
-        }
-      }
-      (0 until waves).foreach(i => runWave(i, waves, 0))
-    }
-    s.read.parquet(data.toString)
-  }
-
   /** Per-document SORTED array of capped-index token hashes (plus its
     * length): the compact verification artifact for candidate pairs.
     * `SortedIntersectCount` over two of these arrays reproduces the
@@ -530,26 +208,12 @@ object TextOps {
   private def docHashArrays(s: SparkSession, d: String): DataFrame =
     SessionCache.checkpoint("docHashArrays", s, d)(docHashArraysPlan(s, d))
 
-  /** Above this many documents the per-doc hash-array table stops being
-    * broadcast and the candidate verification joins shuffle on the pair
-    * keys instead — the same cost-gated index-selection pattern q34
-    * uses, evaluated from one metadata-cheap parquet row count. At
-    * 100 TB the shuffle branch is the only one that exists; at bench
-    * scale the broadcast branch keeps verification entirely map-side.
-    * The knee is a CAPACITY limit, not a preference — measured at the
-    * 150k-doc sf3 sweep: the broadcast tier (two ~200 MB
-    * UnsafeHashedRelations per run) runs q27 in 43-82 s, while forcing
-    * the shuffle tier there costs 111-182 s, because a shuffled hash
-    * join must also shuffle the 144M-row candidate stream on the pair
-    * keys. Broadcast wins as long as the per-doc array relation fits
-    * executor memory (~330 MB at the knee); past it the candidate
-    * shuffle is simply the price of scale. */
-  private[graft] val ArrayBroadcastKnee = 250000L
-
   /** Attach both documents' sorted hash arrays (+ sizes) to (d1, d2)
-    * candidate pairs — broadcast map-side below [[ArrayBroadcastKnee]]
-    * documents, shuffled hash joins above it (hinted: see the knee's
-    * scaladoc for the measured trade on both sides of it). */
+    * candidate pairs as broadcast map-side probes. The per-doc array
+    * relation is ~400 B a document, so about 20 MB at sf1's 50k
+    * documents (measured at a 150k-doc corpus: two ~200 MB broadcasts
+    * still ran q27 faster than shuffling the candidate stream on the
+    * pair keys). */
   private def withPairArrays(s: SparkSession, d: String,
       cand: DataFrame): DataFrame = {
     val arrs = docHashArrays(s, d)
@@ -557,14 +221,7 @@ object TextOps {
       col("n").as("n1"))
     val vb = arrs.select(col("doc_id").as("d2"), col("hs").as("hs2"),
       col("n").as("n2"))
-    if (documents(s, d).count() <= ArrayBroadcastKnee)
-      cand.join(broadcast(va), "d1").join(broadcast(vb), "d2")
-    else
-      // the hint is load-bearing: checkpoint-RDD stats underestimate,
-      // so without it the planner silently converts these back to the
-      // corpus-sized broadcasts the knee just rejected
-      cand.join(va.hint("SHUFFLE_HASH"), "d1")
-        .join(vb.hint("SHUFFLE_HASH"), "d2")
+    cand.join(broadcast(va), "d1").join(broadcast(vb), "d2")
   }
 
   /** (tok, cnt) corpus unigram vocabulary — one corpus explode+hash-agg,
@@ -802,8 +459,7 @@ object TextOps {
       |FROM j WHERE jac >= 0.4 ORDER BY d1, d2""") { (s, d) =>
     val pv = pairVolume(s, d)
     if (pv <= PairCountKnee) jaccardCountPath(s, d)
-    else if (pv <= PairDiskKnee) jaccardPrefixPath(s, d)
-    else jaccardStagedPath(s, d)
+    else jaccardPrefixPath(s, d)
   }
 
   /** Sub-knee q27 plan: index self-join on the hash key + one count row
@@ -833,54 +489,16 @@ object TextOps {
 
   /** Above-knee q27 plan: the AllPairs/PPJoin prefix-filter chain (see
     * the q27 scaladoc) + broadcast sorted-array verification. */
-  private[graft] def jaccardPrefixPath(s: SparkSession, d: String): DataFrame =
-    jaccardPrefixVerified(s, d, None).orderBy(col("d1"), col("d2"))
-
-  /** q27's disk tier: the identical prefix-filter relation computed as
-    * sequential token-hash waves (see [[PairDiskKnee]]). A pair found
-    * through shared prefix tokens in several waves verifies to the
-    * identical row in each, so one distinct after the staged union
-    * restores exact pair uniqueness. */
-  private[graft] def jaccardStagedPath(s: SparkSession, d: String,
-      wavesOverride: Int = 0): DataFrame = {
-    val pv = pairVolume(s, d)
-    val w = if (wavesOverride > 0) wavesOverride else pairWaves(pv)
-    stagedPairScan(s, d, "jaccard", w, pv)((i, wi) =>
-        jaccardPrefixVerified(s, d, Some((i, wi))))
-      .distinct()
-      .orderBy(col("d1"), col("d2"))
-  }
-
-  /** Test hook: one wave of the verified jaccard relation —
-    * `ContainmentQuantizeSpec` pins the retry-split refinement
-    * invariant ((i, 2w) ∪ (i+w, 2w) = (i, w)) through it. */
-  private[graft] def jaccardPrefixWave(s: SparkSession, d: String,
-      i: Int, w: Int): DataFrame = jaccardPrefixVerified(s, d, Some((i, w)))
-
-  /** The verified (d1, d2, jaccard) relation, optionally restricted to
-    * the tokens of wave (i, W) — h ≡ i (mod W) on BOTH join sides, so
-    * the equi-join on h makes the wave partition of the candidate
-    * relation exact, disjoint in tokens, and exhaustive across waves. */
-  private def jaccardPrefixVerified(s: SparkSession, d: String,
-      wave: Option[(Int, Int)]): DataFrame = {
+  private[graft] def jaccardPrefixPath(s: SparkSession, d: String): DataFrame = {
     val rk = rankedIndex(s, d)
     // prefix length |X| − ⌈0.4·|X|⌉ + 1, integer-exact: ⌈2n/5⌉ = (2n+4) DIV 5
-    val pre0 = rk.filter(col("r") <= col("n") - expr("(2*n+4) DIV 5") + 1)
-    val pre = wave.fold(pre0) { case (i, ww) =>
-      pre0.filter(col("h") % ww === i) }
+    val pre = rk.filter(col("r") <= col("n") - expr("(2*n+4) DIV 5") + 1)
     val a = pre.select(col("doc_id").as("d1"), col("h"),
       col("n").as("n1"), col("r").as("r1"))
     val b = pre.select(col("doc_id").as("d2"), col("h"),
       col("n").as("n2"), col("r").as("r2"))
     // minoverlap ⌈2(n1+n2)/7⌉ ≤ ubound ⟺ 7·ubound ≥ 2(n1+n2) (ubound int)
-    // above the knee the prefix sides are index-sized (grow with the
-    // corpus): force the equi-join to shuffle on h rather than let the
-    // planner broadcast a corpus-derived relation off underestimated
-    // checkpoint stats
-    val bSide =
-      if (documents(s, d).count() <= ArrayBroadcastKnee) b
-      else b.hint("SHUFFLE_HASH")
-    val cand = a.join(bSide, Seq("h"))
+    val cand = a.join(b, Seq("h"))
       .filter(col("d1") < col("d2") &&
         col("n1") * 5 >= col("n2") * 2 && col("n2") * 5 >= col("n1") * 2 &&
         (lit(1) + least(col("n1") - col("r1"), col("n2") - col("r2"))) * 7 >=
@@ -899,6 +517,7 @@ object TextOps {
         col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
       .filter(col("jac") >= 0.4)
       .select(col("d1"), col("d2"), round(col("jac"), 6).as("jaccard"))
+      .orderBy(col("d1"), col("d2"))
   }
 
   /** 48-bit SimHash fingerprints: per-token md5-derived bits, weighted by
@@ -1128,8 +747,8 @@ object TextOps {
     * The Spark plan joins on a 64-bit HASH of the variant (8-byte
     * shuffle/compare keys instead of ~20-char strings), carries only
     * the two custkeys through the join + distinct, and re-attaches the
-    * names for verification afterwards (broadcast below
-    * [[FuzzyBroadcastKnee]] customers, shuffled joins above). A hash
+    * names for verification afterwards as broadcast probes (150k names
+    * at sf1, a few MB). A hash
     * collision can only ADD a candidate, and any added candidate that
     * passes the dist ≤ 1 verify shares a real variant by the FastSS
     * guarantee — so the result is identical to the oracle's raw
@@ -1138,16 +757,6 @@ object TextOps {
     * the names, max 46 at both benched decades — the round-8 decade
     * cost was the string-laden distinct, not candidate growth.)
     */
-  private[graft] val FuzzyBroadcastKnee = 1000000L
-  /** Byte budget for broadcasting the (custkey, name) relation — the
-    * row-count knee alone under-admits: a 64 MB dimension is cheap
-    * against re-sorting a ~100M-row candidate stream twice. 24 B/row
-    * covers the key + offset/struct overhead on top of the name bytes. */
-  private[graft] val FuzzyBroadcastBytes = 64L << 20
-  /** Below this many customers the verified-pair set is small enough
-    * that re-running the upstream for the sort's sampling pass is
-    * cheaper than a materialization. */
-  private[graft] val FuzzyMatKnee = 500000L
   val q48FuzzyMatch: QueryDef = sql(
     "q48_fuzzy_match",
     """WITH c AS (SELECT c_custkey, c_name FROM customer),
@@ -1164,15 +773,6 @@ object TextOps {
       |SELECT k1, k2, CAST(levenshtein(n1, n2) AS INT) AS dist
       |FROM cand WHERE levenshtein(n1, n2) <= 1
       |ORDER BY k1, k2""") { (s, d) =>
-    fuzzyMatchPlan(s, d, FuzzyBroadcastKnee)
-  }
-
-  /** See [[q48FuzzyMatch]]; the knee is a parameter so the spec can
-    * force the above-knee (shuffled name-attach) regime on a small
-    * fixture and pin its equality with the broadcast regime. */
-  private[graft] def fuzzyMatchPlan(s: SparkSession, d: String,
-      broadcastKnee: Long,
-      broadcastBytes: Long = FuzzyBroadcastBytes): DataFrame = {
     val name = col("c_name")
     val variants = concat(
       array(name),
@@ -1206,46 +806,12 @@ object TextOps {
       .select(col("k1"), col("k2"))
     val n1 = cust.select(col("c_custkey").as("k1"), name.as("n1"))
     val n2 = cust.select(col("c_custkey").as("k2"), name.as("n2"))
-    // the knee is a BYTES budget on the broadcast name relation, not a
-    // row count: at sf10 1.5M names total ~37 MB — map-side probes are
-    // far cheaper than sorting the ~98M-row candidate stream twice for
-    // shuffled attach (FuzzyProbe: candidates 97.75M, only 2% duplicate,
-    // levenshtein kills 73% — so verify MUST run before the distinct in
-    // either regime, and the broadcast regime verifies map-side)
-    val (custRows, nameBytes) = {
-      // coalesce: sum() is NULL on an empty table and getLong would NPE
-      val r = cust.agg(count(lit(1)),
-        coalesce(sum(length(name)), lit(0L)).cast("long")).first()
-      (r.getLong(0), r.getLong(1))
-    }
-    val verified =
-      if (custRows <= broadcastKnee ||
-          nameBytes + 24L * custRows <= broadcastBytes)
-        cand.join(broadcast(n1), "k1").join(broadcast(n2), "k2")
-          .select(col("k1"), col("k2"),
-            levenshtein(col("n1"), col("n2")).cast("int").as("dist"))
-          .filter(col("dist") <= 1)
-          .distinct()
-      else
-        // entity table genuinely beyond a broadcast: shuffled name
-        // attach, still verify-before-distinct (the distinct then
-        // shuffles the 27% of candidates that verify, never the raw
-        // stream)
-        cand.join(n1, "k1").join(n2, "k2")
-          .select(col("k1"), col("k2"),
-            levenshtein(col("n1"), col("n2")).cast("int").as("dist"))
-          .filter(col("dist") <= 1)
-          .distinct()
-    // the presentation sort is global, and RangePartitioning's bound-
-    // sampling pass re-executes an uncached upstream — here the whole
-    // candidate join + verify (measured: it DOUBLED the sf10 wall, 42 s
-    // of work benching at ~80 s). Materialize the verified pairs once
-    // (executor-local, result-sized — 26M narrow rows at sf10) so the
-    // sort samples and shuffles the materialization instead.
-    val mat =
-      if (custRows <= FuzzyMatKnee) verified
-      else verified.localCheckpoint()
-    mat.orderBy(col("k1"), col("k2"))
+    cand.join(broadcast(n1), "k1").join(broadcast(n2), "k2")
+      .select(col("k1"), col("k2"),
+        levenshtein(col("n1"), col("n2")).cast("int").as("dist"))
+      .filter(col("dist") <= 1)
+      .distinct()
+      .orderBy(col("k1"), col("k2"))
   }
 
   /** The q49/q63 oracle CTE chain: verified pairs → undirected edges →
@@ -2012,8 +1578,7 @@ object TextOps {
       |FROM j WHERE containment >= 0.8 ORDER BY d1, d2""") { (s, d) =>
     val pv = pairVolume(s, d)
     if (pv <= PairCountKnee) containmentCountPath(s, d)
-    else if (pv <= PairDiskKnee) containmentPrefixPath(s, d)
-    else containmentStagedPath(s, d)
+    else containmentPrefixPath(s, d)
   }
 
   /** Sub-knee q55 plan: raw index self-join + pair count (the oracle's
@@ -2042,43 +1607,8 @@ object TextOps {
   /** Above-knee q55 plan: one-sided (smaller-role) prefix filter +
     * broadcast sorted-array verification (see the q55 scaladoc). */
   private[graft] def containmentPrefixPath(
-      s: SparkSession, d: String): DataFrame =
-    containmentPrefixVerified(s, d, None).orderBy(col("d1"), col("d2"))
-
-  /** q55's disk tier — same wave construction as [[jaccardStagedPath]]
-    * but planned with its OWN spill coefficient
-    * ([[ContainmentSpillBytesPerPair]], ~2× q27's): the one-sided
-    * prefix × full-index join was measured at roughly double the
-    * scratch per unit of the shared gate statistic (r10: 5 q27-sized
-    * waves still overflowed), and 12 B/pair was fitted from the jaccard
-    * family's failures only — planning q55 with it would systematically
-    * under-split and lean on the ENOSPC retry, which only fires after
-    * running shared scratch to full and discards the failed wave's
-    * work. The in-run F̂ recalibration then trims residual error from
-    * this family's own telemetry. */
-  private[graft] def containmentStagedPath(s: SparkSession, d: String,
-      wavesOverride: Int = 0): DataFrame = {
-    val pv = pairVolume(s, d)
-    val w =
-      if (wavesOverride > 0) wavesOverride
-      else pairWaves(pv, ContainmentSpillBytesPerPair,
-        ContainmentWaveTargetBytes, scaledPrior = true)
-    stagedPairScan(s, d, "containment", w, pv,
-        bytesPerPair = ContainmentSpillBytesPerPair,
-        spillFixedPrior =
-          containmentFixedPrior(pv * ContainmentSpillBytesPerPair / w))(
-        (i, wi) => containmentPrefixVerified(s, d, Some((i, wi))))
-      .distinct()
-      .orderBy(col("d1"), col("d2"))
-  }
-
-  private def containmentPrefixVerified(s: SparkSession, d: String,
-      wave: Option[(Int, Int)]): DataFrame = {
-    val rk0 = rankedIndex(s, d)
-    // both join sides restrict to the wave's token-hash class (the join
-    // key is h, so the wave partition is exact — see jaccard's twin)
-    val rk = wave.fold(rk0) { case (i, ww) =>
-      rk0.filter(col("h") % ww === i) }
+      s: SparkSession, d: String): DataFrame = {
+    val rk = rankedIndex(s, d)
     // smaller-role prefix |X| − ⌈0.8·|X|⌉ + 1; ⌈4n/5⌉ = (4n+4) DIV 5
     val pre = rk.filter(col("r") <= col("n") - expr("(4*n+4) DIV 5") + 1)
     val a = pre.select(col("doc_id").as("da"), col("h"),
@@ -2087,12 +1617,8 @@ object TextOps {
       col("n").as("nb"), col("r").as("rb"))
     // role order (n, doc_id): each unordered pair meets exactly once,
     // with `a` the smaller document. minoverlap ⌈4·na/5⌉ ≤ ubound ⟺
-    // 5·ubound ≥ 4·na (ubound integer). Same shuffle-hint rationale as
-    // q27's candidate join: the b side is the FULL ranked index.
-    val bSide =
-      if (documents(s, d).count() <= ArrayBroadcastKnee) b
-      else b.hint("SHUFFLE_HASH")
-    val cand = a.join(bSide, Seq("h"))
+    // 5·ubound ≥ 4·na (ubound integer).
+    val cand = a.join(b, Seq("h"))
       .filter((col("na") < col("nb") ||
           (col("na") === col("nb") && col("da") < col("db"))) &&
         (lit(1) + least(col("na") - col("ra"), col("nb") - col("rb"))) * 5 >=
@@ -2107,6 +1633,7 @@ object TextOps {
         col("inter").cast("double") / least(col("n1"), col("n2")))
       .filter(col("containment") >= 0.8)
       .select(col("d1"), col("d2"), round(col("containment"), 6).as("containment"))
+      .orderBy(col("d1"), col("d2"))
   }
 
   /** Sliding-window token chunking (chunk = 32 tokens, stride = 24,
@@ -4473,19 +4000,11 @@ object TextOps {
     * Scale shape: first-seer is one groupBy(shingle-hash)→min(doc_id)
     * over the index — the same key distribution the index's own df pass
     * shuffles, no new hot spot — and the seer table joins back
-    * BROADCAST below [[NoveltySeerBroadcastKnee]] documents (one row
-    * per distinct shingle; this corpus' vocabulary is KB-sized). At web
-    * scale, where the shingle vocabulary outgrows a broadcast, the gate
-    * drops the hint and the join degrades gracefully to a shuffle join
-    * on the hash — the key the seer aggregation already partitioned
-    * by, so the seer side moves nothing. The bucket rollup
+    * BROADCAST (one row per distinct capped shingle; this corpus'
+    * vocabulary is KB-sized). The bucket rollup
     * is integer sums; the one double division per bucket is a ratio of
     * exact integers, rounded identically in both engines.
     */
-  /** Document count above which q115's first-seer table stops being
-    * broadcast (see the inline arithmetic at the join). */
-  private[graft] val NoveltySeerBroadcastKnee = 50000L
-
   val q115NoveltyCurve: QueryDef = sql(
     "q115_novelty_curve",
     """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w
@@ -4511,18 +4030,8 @@ object TextOps {
       |FROM p GROUP BY 1 ORDER BY 1""") { (s, d) =>
     val h = shingleIndex(s, d)
       .select(col("doc_id"), tokHash(col("tok")).as("hh"))
-    val first0 = h.groupBy(col("hh")).agg(min(col("doc_id")).as("first_doc"))
-    // cost-gated broadcast (the q27/q34 pattern): the first-seer table
-    // is vocabulary-sized — ~150 distinct capped shingles/doc, 16 bytes
-    // a row, so ≈120 MB at the 50k-doc knee. Past it, drop the hint and
-    // the join degrades to a shuffle on hh — the key the seer
-    // aggregation already partitioned by, so the seer side moves
-    // nothing. Gated on the metadata-cheap document count.
-    val first =
-      if (documents(s, d).count() <= NoveltySeerBroadcastKnee)
-        broadcast(first0)
-      else first0
-    h.join(first, Seq("hh"))
+    val first = h.groupBy(col("hh")).agg(min(col("doc_id")).as("first_doc"))
+    h.join(broadcast(first), Seq("hh"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("first_doc") === col("doc_id"), 1).otherwise(0))

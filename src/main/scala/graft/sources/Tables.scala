@@ -23,8 +23,8 @@ object Tables {
     * again. Schema-less on purpose: `upsertMatchesByPartition`'s read of
     * a table rewritten under `p_type=` dirs the stamp does not see,
     * `DataGen`, Bench's warm-up, dirs written in the same call (q78's and
-    * q126's logs, the streamed assignment artifact, the wave tier's pair
-    * relation) and `Layout`'s probes of caller-named dirs. */
+    * q126's logs, the streamed assignment artifact) and `Layout`'s
+    * probes of caller-named dirs. */
   def parquet(s: SparkSession, d: String, key: String,
       path: String): DataFrame =
     s.read.schema(graft.SessionCache.memo(s"schema:$key", s, d)(

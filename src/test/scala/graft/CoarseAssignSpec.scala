@@ -1,139 +1,64 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SimilarityOps
 
-/** The round-12 coarse machinery of q34's above-knee tier, on the 30k
-  * fixture (k = 191 > the 128 gate, q(191) = 7 — the registered path
-  * here is the FUSED one-pass form):
+/** The two-level (hierarchical) coarse assignment that q129's
+  * deployment form and q140 build through [[SimilarityOps.hierCellAssign]],
+  * on sf0.1's 2,000 vectors at k = 128:
   *
-  *  - the fused tier (one concatenated matrix, one corpus pass for all
-  *    quantizers) must be BIT-EQUAL to the per-quantizer flat
-  *    computation — training and the whole registered relation;
-  *  - the two-level (hierarchical) escape tier — the no-k-sized-collect
-  *    form engaged past [[SimilarityOps.FusedCollectKnee]] — is pinned
-  *    on its invariants, subset exactness, and its MEASURED end-recall
-  *    floor: on structure-free data g/4-width routing does not fully
-  *    cover the true nearest cells (the measured basis for it being
-  *    the escape, not the default — see the machinery's scaladoc).
+  *  - at full routing width (w ≥ g) it must reproduce the flat
+  *    assignment (learned centroids scored through
+  *    `nearestCellIdsStatic`) row for row — the approximation of the
+  *    default width is the width, nothing else;
+  *  - at the default width its ids and ranks stay in range.
   */
 class CoarseAssignSpec extends AnyFunSuite {
   lazy val spark = TestSpark.session
 
-  private def fixture =
-    TestEmbeddingFixtures.scaled(spark, "/root/testdata/sf0.1", 15)
+  private val sf = "/root/testdata/sf0.1"
+  private val k = SimilarityOps.PairCells
+  private val np = SimilarityOps.PairNprobeAsym
 
-  test("fused-trained centroids are bit-identical to the per-quantizer " +
-      "flat Lloyd round's on the 30k fixture (all 7 quantizers)") {
-    val dir = fixture
-    val k = SimilarityOps.pairCells(30000)
-    val q = SimilarityOps.pairQuantizersScaled(k)
-    assert((k, q) == (191, 7))
-    def keyed(df: org.apache.spark.sql.DataFrame) =
-      df.collect()
-        .map(r => r.getLong(0) -> (r.getSeq[Double](1), r.getDouble(2)))
-        .toMap
-    val fused = keyed(SimilarityOps.learnedCentroidsFusedPlan(spark, dir, k, q))
-    val flat = (0 until q).map(r =>
-      keyed(SimilarityOps.learnedCentroidsPlan(spark, dir, r * k, (r + 1) * k)))
-      .reduce(_ ++ _)
-    assert(fused.keySet == flat.keySet,
-      s"cell-id sets differ (missing=${(flat.keySet -- fused.keySet).take(3)} " +
-        s"extra=${(fused.keySet -- flat.keySet).take(3)})")
-    flat.foreach { case (cid, (emb, nr)) =>
-      assert(fused(cid)._1 == emb, s"cell $cid: mean differs")
-      assert(fused(cid)._2 == nr, s"cell $cid: norm differs")
-    }
-  }
-
-  test("the registered q34 relation through the fused path equals the " +
-      "flat-forced twin row for row on the 30k fixture") {
-    val dir = fixture
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val fused = rows(SimilarityOps.embedNearPairsPerCellAsym(spark, dir))
-    val flat = rows(
-      SimilarityOps.embedNearPairsPerCellAsym(spark, dir, flatOverride = true))
-    assert(fused == flat,
-      s"fused=${fused.size} rows, flat=${flat.size} rows; first diffs: " +
-        s"${fused.diff(flat).take(3)} / ${flat.diff(fused).take(3)}")
-    assert(fused.nonEmpty)
-  }
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("vec_id", "crn", "c_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
 
   test("hierarchical tier at full routing width (w >= g) reproduces " +
       "the flat computation row for row — the approximation is the " +
       "width, nothing else") {
-    // at k = 191 the hier ladder and the flat ladder agree (q = 7), so
-    // with every super group scanned the two-level argmax, the Lloyd
-    // means, and hence the emitted pairs must be IDENTICAL to the
-    // flat-forced twin; this pins that the g/2 default's recall loss
-    // comes from routing width alone (the quantity HierRetention
-    // measures), not from a defect in the two-level machinery
-    val dir = fixture
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val wide = rows(SimilarityOps.embedNearPairsPerCellAsym(spark, dir,
-      hierOverride = true, hierWOverride = 30000))
-    val flat = rows(
-      SimilarityOps.embedNearPairsPerCellAsym(spark, dir, flatOverride = true))
+    // with every super group scanned, the two-level argmax and the
+    // Lloyd means it trains must be IDENTICAL to the flat computation;
+    // this pins that the g/2 default's recall loss comes from routing
+    // width alone, not from a defect in the two-level machinery
+    val cents = SimilarityOps.learnedCentroids(spark, sf, 0, k)
+      .orderBy(col("c_id")).collect()
+    val ids = cents.map(_.getLong(0))
+    val nrs = cents.map(_.getDouble(2))
+    val flatCents = cents.flatMap(_.getSeq[Double](1))
+    val flat = rows(SimilarityOps.embVecs(spark, sf)
+      .select(col("vec_id"),
+        posexplode(graft.functions.VectorFunctions.nearestCellIdsStatic(
+          col("embedding"), col("nr"), ids, flatCents, nrs, np)))
+      .withColumnRenamed("pos", "crn")
+      .withColumnRenamed("col", "c_id"))
+    val wide = rows(SimilarityOps.hierCellAssign(spark, sf, 0, k, np,
+      wOverride = k))
     assert(wide == flat,
       s"wide-hier=${wide.size} rows, flat=${flat.size} rows; first diffs: " +
         s"${wide.diff(flat).take(3)} / ${flat.diff(wide).take(3)}")
     assert(wide.nonEmpty)
   }
 
-  test("hierarchical escape tier: well-formed assignment, subset " +
-      "exactness of its pairs, and end recall above the measured floor") {
-    val dir = fixture
-    val k = SimilarityOps.pairCells(30000)
-    val np = SimilarityOps.PairNprobeAsym
-    // quantizer 0's raw assignment obeys the structural invariants
-    val asn = SimilarityOps.hierCellAssign(spark, dir, 0, k, np)
-      .select("vec_id", "crn", "c_id").collect()
+  test("hierarchical assignment at default routing width: ids and " +
+      "ranks in range") {
+    val asn = rows(SimilarityOps.hierCellAssign(spark, sf, 0, k, np))
     assert(asn.nonEmpty)
-    asn.foreach { r =>
-      val (v, crn, cid) = (r.getLong(0), r.getInt(1), r.getLong(2))
+    asn.foreach { case (v, crn, cid) =>
       assert(crn >= 0 && crn < np, s"vec $v: crn $crn out of range")
       assert(cid >= 0 && cid < k, s"vec $v: c_id $cid outside quantizer 0")
     }
-    // the tier's CONTRACT is end recall, not assignment identity: its
-    // routing is measurably approximate on structure-free data (the
-    // scaladoc's numbers), but every emitted pair is exact-verified,
-    // and the hier quantizer ladder (fitted on r1 x the measured g/2
-    // routing retention) compounds end recall back over the SAME 0.85
-    // floor the fused tier pins — 0.884 measured here in round 13
-    // (g/4 + flat ladder gave 0.869, below the floor)
-    def keyed(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val hier = keyed(SimilarityOps
-      .embedNearPairsPerCellAsym(spark, dir, hierOverride = true).collect())
-    val exact = keyed(SimilarityOps.embedNearPairsAllPairs(spark, dir).collect())
-    hier.foreach { case (key, cos) =>
-      assert(exact.contains(key), s"hier pair $key not in exhaustive product")
-      assert(exact(key) == cos, s"cosine mismatch for $key")
-    }
-    val recall = hier.size.toDouble / exact.size
-    info(f"hier escape-tier recall at 30k: ${hier.size}/${exact.size} = " +
-      f"$recall%.3f (fused/flat tier: 0.897)")
-    assert(recall >= 0.85,
-      f"hier escape-tier recall $recall%.3f below the 0.85 contract floor")
-  }
-
-  test("hier quantizer ladder: monotone, contract-sized below the cap, capped at 48 past k~11k") {
-    // below the cap the ladder satisfies its own compounding contract
-    // 1-(1-r1)^q >= 0.88 with the minimal q
-    for (k <- Seq(128, 191, 382, 1273, 5100, 10000)) {
-      val q = SimilarityOps.pairQuantizersHier(k)
-      val r1 = SimilarityOps.HierRetention * 0.335 * math.pow(128.0 / k, 0.449)
-      assert(q < 48, s"cap unexpectedly binding at k=$k")
-      assert(1.0 - math.pow(1.0 - r1, q) >= 0.88, s"contract unmet at k=$k (q=$q)")
-      assert(q == 1 || 1.0 - math.pow(1.0 - r1, q - 1) < 0.88,
-        s"q=$q not minimal at k=$k")
-    }
-    // past ~11k the single-node cap binds (and pairQuantizersHier logs
-    // the achievable compounded recall — a named, not silent, degradation)
-    assert(SimilarityOps.pairQuantizersHier(12000) == 48)
-    assert(SimilarityOps.pairQuantizersHier(50000) == 48)
   }
 }

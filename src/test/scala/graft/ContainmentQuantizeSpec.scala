@@ -59,140 +59,6 @@ class ContainmentQuantizeSpec extends AnyFunSuite {
     assert(graft.operators.TextOps.pairVolume(spark, sf001) > 0)
   }
 
-  test("q27/q55 disk tier: the wave-staged scan (forced to 3 token-hash " +
-      "waves) equals the single-job relation row for row") {
-    // the PairDiskKnee gate only fires past any verified sf, so force
-    // the wave machinery here: 3 waves at fixture scale must reproduce
-    // the count-path relation exactly (disjoint token classes cover the
-    // index; cross-wave duplicate pairs collapse in the final distinct)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val sf001 = "/root/testdata/sf0.001"
-    assert(rows(graft.operators.TextOps.jaccardStagedPath(spark, sf001, 3)) ==
-      rows(graft.operators.TextOps.jaccardCountPath(spark, sf001)))
-    assert(rows(graft.operators.TextOps.containmentStagedPath(spark, sf001, 3)) ==
-      rows(graft.operators.TextOps.containmentCountPath(spark, sf001)))
-  }
-
-  test("wave retry-split invariant: the two half-waves (i, 2w) and " +
-      "(i+w, 2w) union to exactly the parent wave (i, w)") {
-    // the ENOSPC retry path in stagedPairScan replaces wave (i, w) with
-    // its two mod-2w refinements; pin that the refinement is lossless
-    // and non-overlapping for every parent wave of a 2-wave split
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val sf001 = "/root/testdata/sf0.001"
-    (0 until 2).foreach { i =>
-      val parent = rows(TextOps.jaccardPrefixWave(spark, sf001, i, 2))
-      val halves = rows(TextOps.jaccardPrefixWave(spark, sf001, i, 4)) ++
-        rows(TextOps.jaccardPrefixWave(spark, sf001, i + 2, 4))
-      assert(halves == parent, s"wave ($i, 2) != its mod-4 refinement")
-    }
-  }
-
-  test("wave spill model self-corrects mid-staging: a too-small disk " +
-      "preemptively splits wave 1 (no ENOSPC), the wave-1 telemetry " +
-      "re-solves F-hat, and later waves stop splitting") {
-    // forced-small-disk via the injectable usableSpace: with the frozen
-    // F prior (50 GB) and 62.5 GB "free", predicted(w=2) = 50.75 GB
-    // exceeds usable - margin = 50.5 GB, so wave (0, 2) must split
-    // preemptively into (0, 4) + (2, 4); the fixture's measured peak
-    // then re-solves F-hat down to the 1 GB floor, so wave (1, 2) fits
-    // and runs UNSPLIT — the mid-staging W revision, with zero failed
-    // (ENOSPC) waves. The staged result must still equal the plain
-    // count-path relation (the revision is lossless).
-    val sf001 = "/root/testdata/sf0.001"
-    val calls = scala.collection.mutable.Buffer[(Int, Int)]()
-    val staged = TextOps.stagedPairScan(spark, sf001,
-        s"spec_preempt_${System.nanoTime}", waves = 2,
-        pairRows = 1L << 27, bytesPerPair = 12L,
-        usableSpace = () => 125L << 29) { (i, w) =>
-      calls += ((i, w))
-      TextOps.jaccardPrefixWave(spark, sf001, i, w)
-    }
-    assert(calls.toList == List((0, 4), (2, 4), (1, 2)),
-      s"expected preemptive split of wave 0 only, got $calls")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(staged) ==
-      rows(graft.operators.TextOps.jaccardCountPath(spark, sf001)))
-  }
-
-  test("wave-count objective: per-family throughput target picks the " +
-      "measured optimum, disk stays a hard bound, cap guards the fixed " +
-      "costs") {
-    // the sf10 A/B numbers as arithmetic, at the LIVE planner volume
-    // pv = 3.7e9 pairs (r14 corrected the r13 calibration, which
-    // assumed pv*bpp ~ 120 GB; live containment pv*bpp = 88.8 GB, and
-    // at the old 6 GiB target the planner chose w = 14 - a leg the A/B
-    // measured at 980.8 s vs 716.0 at w = 20): containment at
-    // 4 GiB/wave -> w = 21, inside the measured 20-22 optimum band;
-    // jaccard (pv*bpp = 44.4 GB) at 12 GiB/wave -> w = 4, at its
-    // measured optimum ~4.8. Disk stays a hard bound; the cap guards
-    // a 100x pv.
-    val gb = 1L << 30
-    val pv = 3700000000L
-    val roomy = () => 200L * gb
-    assert(TextOps.pairWaves(pv, TextOps.ContainmentSpillBytesPerPair,
-      TextOps.ContainmentWaveTargetBytes, roomy, scaledPrior = true) == 21)
-    assert(TextOps.pairWaves(pv, TextOps.PairSpillBytesPerPair,
-      TextOps.JaccardWaveTargetBytes, roomy) == 4)
-    // containment's scaled-prior disk bound: per-wave footprint is
-    // wave bytes + F(wave) ~ 4.5*pv*bpp/w (see containmentFixedPrior),
-    // so at 25 GB usable (13 GiB over the margin) the bound
-    // ceil(4.5*88.8 GB / 13 GiB) = 29 exceeds the throughput 21 and wins
-    assert(TextOps.pairWaves(pv, TextOps.ContainmentSpillBytesPerPair,
-      TextOps.ContainmentWaveTargetBytes, () => 25L * gb,
-      scaledPrior = true) == 29)
-    // jaccard keeps the frozen-prior headroom model (its measured F is
-    // wave-size-insensitive at 25-45 GB): at 63 GB usable the headroom
-    // floors at 4 GiB and the disk minimum ceil(44.4 GB / 4 GiB) = 11
-    // exceeds the throughput 4
-    assert(TextOps.pairWaves(pv, TextOps.PairSpillBytesPerPair,
-      TextOps.JaccardWaveTargetBytes, () => 63L * gb) == 11)
-    // 100x the pair volume, roomy disk: throughput W would be 2068,
-    // the cap holds it at 64 on a huge scratch volume; at 200 GB the
-    // scaled-prior disk bound (198) still overrides the cap - the
-    // bound is never relaxed
-    assert(TextOps.pairWaves(100L * pv,
-      TextOps.ContainmentSpillBytesPerPair,
-      TextOps.ContainmentWaveTargetBytes,
-      () => 4000L * gb, scaledPrior = true) == 64)
-    assert(TextOps.pairWaves(100L * pv,
-      TextOps.ContainmentSpillBytesPerPair,
-      TextOps.ContainmentWaveTargetBytes, roomy, scaledPrior = true) == 198)
-  }
-
-  test("containment wave-1 spill prior scales with the wave, covering " +
-      "every measured (wave-bytes, peak) point") {
-    val gb = 1L << 30
-    // measured F at sf10 (WAVE_AB_r13 + the r14 registered staging),
-    // decimal bytes: (wave planner bytes pv*bpp/w at pv*bpp = 88.8e9,
-    // max observed F = peak - wave bytes) - the prior must cover each
-    val points = Seq(
-      (12686000000L, 37714000000L), // w=7:   peaks up to 50.4e9
-      (8880000000L, 22820000000L),  // w=10:  peaks up to 31.7e9
-      (6343000000L, 13757000000L),  // w=14:  peaks up to 20.1e9
-      (4440000000L, 8060000000L),   // w=20:  peaks up to 12.5e9
-      (3171000000L, 8929000000L),   // w=28:  peaks up to 12.1e9
-      (529000000L, 2270000000L),    // w=168: re-solved F-hat 2.27e9
-      (4229000000L, 13510000000L))  // w=21 wave 0, JVM-cold (r14 run)
-    points.foreach { case (waveBytes, maxF) =>
-      val prior = TextOps.containmentFixedPrior(waveBytes)
-      assert(prior >= maxF,
-        s"prior $prior does not cover measured F $maxF at $waveBytes")
-    }
-    // floor and cap
-    assert(TextOps.containmentFixedPrior(1L << 20) == (3L << 30))
-    assert(TextOps.containmentFixedPrior(100L * gb) == (50L << 30))
-    // and it must NOT fire the preemptive split on the r14 scenario the
-    // frozen prior broke: a 4.4 GB-wave plan on a 62 GB-usable disk
-    // (prior + wave <= usable - margin)
-    val wave = 4440000000L
-    assert(TextOps.containmentFixedPrior(wave) + wave <=
-      62L * gb - (12L << 30))
-  }
-
   test("q55 reports size-mismatched pairs that symmetric Jaccard scores " +
       "strictly lower (containment > jaccard whenever |A| != |B|)") {
     val sizes: Map[Long, Int] = TextOps.shingleIndexPlan(spark, sf)

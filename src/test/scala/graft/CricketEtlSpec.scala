@@ -16,7 +16,7 @@ class CricketEtlSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def writeDir(files: (String, String)*): String = {
-    val dir = Files.createTempDirectory("cricket")
+    val dir = SessionCache.scratchDir("cricket")
     files.foreach { case (name, content) =>
       Files.writeString(dir.resolve(name), content)
     }
@@ -228,7 +228,7 @@ class CricketEtlSpec extends AnyFunSuite {
 
   test("writeTables: idempotent parquet sinks round-trip (A2/A3)") {
     val src = writeDir("a.json" -> v11Match, "b.json" -> v10Match)
-    val out = Files.createTempDirectory("cricket_out").toString
+    val out = SessionCache.scratchDir("cricket_out").toString
     // run twice — the overwrite sink must be idempotent like the
     // reference's upsert re-run (`etl_cricsheet_to_mongo.py:136`)
     CricketEtl.writeTables(spark, src, out)
@@ -262,7 +262,7 @@ class CricketEtlSpec extends AnyFunSuite {
       v11Match.replace("\"city\": \"Kolkata\"", s""""city": "$city"""")
     val src = writeDir("a.json" -> withCity("First"),
       "z.json" -> withCity("Last"))
-    val out = Files.createTempDirectory("cricket_lww").toString
+    val out = SessionCache.scratchDir("cricket_lww").toString
     CricketEtl.writeTables(spark, src, out)
     val matches = spark.read.parquet(s"$out/matches").collect()
     assert(matches.length == 1)
@@ -331,7 +331,7 @@ class CricketEtlSpec extends AnyFunSuite {
   }
 
   test("incremental upsert: per-row merge within touched partitions") {
-    val out = Files.createTempDirectory("cricket_parted").toString + "/m"
+    val out = SessionCache.scratchDir("cricket_parted").toString + "/m"
     // full load: two T20 matches and a match-type-less (unknown) match
     val m004 = v11Match
       .replace("\"match_id\": \"m001\"", "\"match_id\": \"m004\"")
@@ -380,7 +380,7 @@ class CricketEtlSpec extends AnyFunSuite {
 
   test("incremental upsert into an existing but unreadable target throws " +
       "and leaves the target's files unchanged") {
-    val out = Files.createTempDirectory("cricket_parted").toString + "/m"
+    val out = SessionCache.scratchDir("cricket_parted").toString + "/m"
     CricketEtl.upsertMatchesByPartition(spark,
       writeDir("a.json" -> v11Match, "b.json" -> v10Match), out)
     // a corrupt summary file: parquet schema inference reads it first
@@ -407,7 +407,7 @@ class CricketEtlSpec extends AnyFunSuite {
     // every ingest reads the same declared schema, so partitions written
     // by different ingests agree on `info.officials`
     for ((full, delta) <- Seq(v10Match -> v11Match, v11Match -> v10Match)) {
-      val out = Files.createTempDirectory("cricket_drift").toString + "/m"
+      val out = SessionCache.scratchDir("cricket_drift").toString + "/m"
       CricketEtl.upsertMatchesByPartition(spark, writeDir("a.json" -> full), out)
       CricketEtl.upsertMatchesByPartition(spark, writeDir("b.json" -> delta), out)
       val rows = spark.read.parquet(out).select("_id", "info").collect()
@@ -423,7 +423,7 @@ class CricketEtlSpec extends AnyFunSuite {
       "writeTables runs at most 3") {
     val src = writeDir("a.json" -> v11Match, "b.json" -> v10Match,
       "c.json" -> mixedWicketsMatch)
-    val out = Files.createTempDirectory("cricket_jobs").toString
+    val out = SessionCache.scratchDir("cricket_jobs").toString
     val schemaJobs = TestSpark.jobsOf(CricketEtl.readMatches(spark, src).schema)
     val writeJobs = TestSpark.jobsOf(CricketEtl.writeTables(spark, src, out))
     assert(schemaJobs == 0 && writeJobs <= 3, s"reading the schema ran " +
@@ -444,7 +444,7 @@ class CricketEtlSpec extends AnyFunSuite {
       "c.json" -> mixedWicketsMatch, "d.json" -> longMatch)
     val src = writeDir(files: _*)
     val onDisk = files.map { case (name, _) => Files.size(Path.of(src, name)) }.sum
-    val out = Files.createTempDirectory("cricket_scan").toString + "/d"
+    val out = SessionCache.scratchDir("cricket_scan").toString + "/d"
     val read = TestSpark.statsOf(CricketEtl.deliveries(
       CricketEtl.readMatches(spark, src)).write.parquet(out)).bytesRead
     assert(read >= onDisk && read <= 2 * onDisk, s"writing the deliveries " +

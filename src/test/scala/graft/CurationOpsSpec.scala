@@ -253,7 +253,6 @@ class CurationOpsSpec extends AnyFunSuite {
 
   test("Misra-Gries streaming state retains every bucket above n/(cap+1) " +
       "on an adversarial feed wider than its capacity") {
-    import java.nio.file.Files
     // 5000 events: bucket 9999 appears 25 times (> 5000/250 = 20), the
     // rest are 4975 distinct singleton buckets — 4976 distinct values
     // against capacity 249, so the sketch decrements constantly
@@ -262,7 +261,7 @@ class CurationOpsSpec extends AnyFunSuite {
       (i.toLong, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
         1L, "probe", v, null.asInstanceOf[String])
     }
-    val dir = Files.createTempDirectory("mg_adversarial")
+    val dir = SessionCache.scratchDir("mg_adversarial")
     import spark.implicits._
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", col("ts").cast("timestamp_ntz"))

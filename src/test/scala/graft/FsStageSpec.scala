@@ -41,7 +41,7 @@ class FsStageSpec extends AnyFunSuite {
 
   test("two corpora with the same basename get separate stages, and " +
       "staging one leaves the other's files untouched") {
-    val root = Files.createTempDirectory("fs_stage_same_name")
+    val root = SessionCache.scratchDir("fs_stage_same_name")
     val a = corpus(root, "a")
     val b = Files.createDirectories(root.resolve("b").resolve("sf_same"))
     try {
@@ -71,7 +71,7 @@ class FsStageSpec extends AnyFunSuite {
 
   test("a fresh stage runs no job, a changed source restages, and a " +
       "restage leaves no temp directory behind in java.io.tmpdir") {
-    val root = Files.createTempDirectory("fs_stage_fresh")
+    val root = SessionCache.scratchDir("fs_stage_fresh")
     val d = corpus(root, "c")
     val tmpdir = Paths.get(sys.props("java.io.tmpdir"))
     val legacy = Seq("graft_evord", "graft_sentinel", "graft_evcanon",

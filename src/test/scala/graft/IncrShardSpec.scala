@@ -94,8 +94,7 @@ class IncrShardSpec extends AnyFunSuite {
       ("b", 2L, 100L), ("b", 50L, 40000L), ("b", 100L, 700L),
       ("c", 3L, 20000L), ("c", 60L, 123L), ("c", 90L, 77L),
       ("d", 92L, 450L), ("d", 96L, 17000L))
-    val dir = java.nio.file.Files
-      .createTempDirectory("incrshard_ds").toString
+    val dir = SessionCache.scratchDir("incrshard_ds").toString
     spark.createDataFrame(rows.map { case (s, id, n) =>
       (s, id, Seq.fill(n.toInt)("w").mkString(" "))
     }).toDF("source", "doc_id", "text")

@@ -22,8 +22,7 @@ class IncrementalClusterSpec extends AnyFunSuite {
 
   private def fixture(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_incr_cluster").toString
+    val dir = SessionCache.scratchDir("graft_incr_cluster").toString
     rows.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

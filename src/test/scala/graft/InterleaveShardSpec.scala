@@ -311,8 +311,7 @@ class InterleaveShardSpec extends AnyFunSuite {
       s <- 0 until 33
       d <- 0 until 12
     } yield (f"src$s%02d", d.toLong, 200 + (s * 31 + d * 7) % 900)
-    val dir = java.nio.file.Files
-      .createTempDirectory("interleave_oob").toString
+    val dir = SessionCache.scratchDir("interleave_oob").toString
     spark.createDataFrame(rows.map { case (s, id, n) =>
       (s, id, Seq.fill(n)("w").mkString(" "))
     }).toDF("source", "doc_id", "text")

@@ -158,8 +158,7 @@ class PackingSpec extends AnyFunSuite {
       (99L, "c", 5), (100L, "a", 70))
       .map { case (id, s, n) => (s, id, words(n, s)) }
     def fixture(rows: Seq[(String, Long, String)]): String = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_grouped_pack").toString
+      val dir = SessionCache.scratchDir("graft_grouped_pack").toString
       rows.toDF("source", "doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir

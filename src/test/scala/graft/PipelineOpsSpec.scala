@@ -63,7 +63,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // real feed). Pin the logical operator, not just the result.
     val streamPlan = StreamingOps.dedupedStream(
       StreamingOps.eventStream(spark,
-        java.nio.file.Files.createTempDirectory("q70_pin").toString))
+        SessionCache.scratchDir("q70_pin").toString))
       .queryExecution.analyzed
     val nodes = streamPlan.collect { case n => n.nodeName }
     assert(nodes.contains("DeduplicateWithinWatermark"),
@@ -116,7 +116,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.OutputMode
     // split the events into two files and force one file per trigger,
     // so the per-user state genuinely spans micro-batches
-    val dir = java.nio.file.Files.createTempDirectory("alerts_split")
+    val dir = SessionCache.scratchDir("alerts_split")
     // split from the NORMALIZED read so the staged halves carry exactly
     // the canonical `rawSchema` encoding (µs TIMESTAMP_NTZ) the stream
     // reader expects, whatever the source file's physical encoding.
@@ -125,7 +125,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       .write.parquet(s"$dir/even")
     raw.filter(col("event_id") % 2 === 1).coalesce(1)
       .write.parquet(s"$dir/odd")
-    val staged = java.nio.file.Files.createTempDirectory("alerts_src")
+    val staged = SessionCache.scratchDir("alerts_src")
     Seq("even", "odd").foreach { half =>
       val f = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/$half"))
         .filter(_.toString.endsWith(".parquet")).findFirst().get()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,7 +84,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("partitioned+sorted layout prunes partitions at scan time") {
-    val out = Files.createTempDirectory("layout").toString + "/li"
+    val out = SessionCache.scratchDir("layout").toString + "/li"
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     Layout.writeIndexed(li, out, "l_returnflag", "l_suppkey", "l_shipdate")
     val all = Layout.filesRead(spark, out, "l_quantity >= 0")
@@ -118,8 +116,8 @@ class ScaleOpsSpec extends AnyFunSuite {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
       .select("l_partkey", "l_suppkey", "l_quantity", "l_extendedprice")
     val total = li.count()
-    val zDir = java.nio.file.Files.createTempDirectory("zorder").toString
-    val lexDir = java.nio.file.Files.createTempDirectory("lexorder").toString
+    val zDir = SessionCache.scratchDir("zorder").toString
+    val lexDir = SessionCache.scratchDir("lexorder").toString
     Layout.writeZOrdered(li, zDir, n = 16, "l_partkey", "l_suppkey")
     li.repartitionByRange(16, col("l_partkey"))
       .sortWithinPartitions(col("l_partkey"))

@@ -70,7 +70,7 @@ class SessionCacheSpec extends AnyFunSuite {
 
   /** A fresh temp dir holding a copy of every file in `src`. */
   private def copyCorpus(src: Path): Path = {
-    val dst = Files.createTempDirectory("graft_corpus_copy")
+    val dst = SessionCache.scratchDir("graft_corpus_copy")
     val ls = Files.list(src)
     try ls.toArray.map(_.asInstanceOf[Path]).foreach(f =>
       Files.copy(f, dst.resolve(f.getFileName)))

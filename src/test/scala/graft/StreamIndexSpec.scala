@@ -20,7 +20,7 @@ class StreamIndexSpec extends AnyFunSuite {
   /** Fresh corpus dir (its own staging key) holding sf0.01's embeddings. */
   private def fixture(): String = {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_sidx_fixture")
+    val dir = SessionCache.scratchDir("graft_sidx_fixture")
     Files.copy(Paths.get("/root/testdata/sf0.01/embeddings.parquet"),
       dir.resolve("embeddings.parquet"))
     dir.toString

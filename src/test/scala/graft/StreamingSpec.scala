@@ -16,7 +16,7 @@ class StreamingSpec extends AnyFunSuite {
 
   /** stream sources need a directory; stage the sf0.001 events file. */
   private lazy val eventsDir: String = {
-    val dir = Files.createTempDirectory("events_stream")
+    val dir = SessionCache.scratchDir("events_stream")
     Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("part-0.parquet"), StandardCopyOption.REPLACE_EXISTING)

@@ -13,8 +13,7 @@ class SubstringDedupSpec extends AnyFunSuite {
     * returns the directory (the query fn reads `$dir/documents.parquet`). */
   private def fixture(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ssd_fixture").toString
+    val dir = SessionCache.scratchDir("graft_ssd_fixture").toString
     rows.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val session: SparkSession = GraftSession.builder()
     .appName("graft-test")
-    .config("spark.sql.warehouse.dir", java.nio.file.Files
-      .createTempDirectory("graft-warehouse").toString)
+    .config("spark.sql.warehouse.dir",
+      SessionCache.scratchDir("graft-warehouse").toString)
     .getOrCreate()
 
   /** What the jobs started on this thread while `body` ran did, as a

@@ -10,7 +10,7 @@ class VerifySpec extends AnyFunSuite {
   lazy val spark = TestSpark.session
 
   test("a query over a missing sf directory is listed in failed.json") {
-    val out = Files.createTempDirectory("graft-verify")
+    val out = SessionCache.scratchDir("graft-verify")
     val missing = out.resolve("no-such-sf").toString
     try {
       val failed = Verify.dump(spark, missing, out.toString,
