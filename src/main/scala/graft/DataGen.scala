@@ -50,13 +50,15 @@ object DataGen {
     def writeSingle(df: DataFrame, name: String): Unit = {
       if (!wanted(name)) return
       import java.nio.file.{Files, Paths, StandardCopyOption}
-      val tmp = Files.createTempDirectory("graft_gen").toString
-      df.repartition(1).write.mode("overwrite")
-        .option("parquet.block.size", 32 * 1024 * 1024).parquet(tmp)
-      val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).head
-      Files.move(Paths.get(part), Paths.get(out, s"$name.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
+      val tmp = Files.createTempDirectory("graft_gen")
+      try {
+        df.repartition(1).write.mode("overwrite")
+          .option("parquet.block.size", 32 * 1024 * 1024).parquet(tmp.toString)
+        val part = Files.list(tmp).toArray.map(_.toString)
+          .filter(_.endsWith(".parquet")).head
+        Files.move(Paths.get(part), Paths.get(out, s"$name.parquet"),
+          StandardCopyOption.REPLACE_EXISTING)
+      } finally Fs.rmTree(tmp)
       println(s"[datagen] wrote $name")
     }
     def stride(df: DataFrame, key: String): Long =

@@ -1716,24 +1716,31 @@ object SimilarityOps {
     (stage, data, fresh)
   }
 
+  /** The assignment artifact's rows as [[ingestAssignBatch]] writes
+    * them ([[bestCellAssign]] over the corpus embeddings). Its reads
+    * take this schema, so none runs a footer job. */
+  private val AsnSchema =
+    "vec_id BIGINT, embedding ARRAY<FLOAT>, nr DOUBLE, c_id BIGINT, cos DOUBLE"
+
   /** Assign ONE streamed micro-batch into the existing learned cells
     * (map-side against the broadcast centroid table) and write it as
     * the batch's partition of the assignment artifact. batchId-keyed
     * overwrite = IDEMPOTENT: foreachBatch is at-least-once and a
     * replayed micro-batch rewrites its own partition with identical
     * rows instead of double-appending (`StreamIndexSpec` pins this).
-    * Returns the partition path; rows carry (vec_id, embedding, nr,
-    * c_id, cos) so downstream consumers (the audit rollup, q129's
-    * exact-cosine pair join) never rescan the source batch. */
+    * Returns the written partition, read back with [[AsnSchema]]; rows
+    * carry (vec_id, embedding, nr, c_id, cos) so downstream consumers
+    * (the audit rollup, q129's exact-cosine pair join) never rescan the
+    * source batch. */
   private def ingestAssignBatch(cents: DataFrame, batch: DataFrame,
-      batchId: Long, asnDir: String): String = {
+      batchId: Long, asnDir: String): DataFrame = {
     val part = s"$asnDir/batch=$batchId"
     // r18: map-side per-row argmax (see bestCellAssign) — the previous
     // ×|cells| crossJoin + groupBy(vec_id) shuffled every batch's
     // embeddings through the argmax exchange on every micro-batch
     bestCellAssign(cents, batch.withColumn("nr", nrm(col("embedding"))))
       .write.mode("overwrite").parquet(part)
-    part
+    cents.sparkSession.read.schema(AsnSchema).parquet(part)
   }
 
   /** The streamed assignment artifact as a DataFrame, draining the
@@ -1745,21 +1752,17 @@ object SimilarityOps {
     if (!fresh) {
       val dataDir = stageEmbeddingsStream(s, d)
       val cents = learnedCentroids(s, d, 0, 16)
-      val q = s.readStream
+      val stream = s.readStream
         .schema(parquet(s, d, "graft_emb_stream", dataDir).schema)
         .option("maxFilesPerTrigger", "1").parquet(dataDir)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      graft.streaming.StreamingOps.drain(stream, "q129_stream_index_pairs",
+        statePartitions = Int.MaxValue,
+        each = Some { (batch: DataFrame, batchId: Long) =>
           ingestAssignBatch(cents, batch, batchId, dir.toString): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      graft.streaming.StreamingOps.recordDrain("q129_stream_index_pairs", q)
+        }): Unit
       graft.Fs.markStaged(stage, embFp(d))
     }
-    s.read.parquet(dir.toString).drop("batch")
+    s.read.schema(AsnSchema).parquet(dir.toString).drop("batch")
   }
 
   /** STREAMING ANN ingest — q123's index-maintenance audit as a real
@@ -1797,9 +1800,9 @@ object SimilarityOps {
     val stream = s.readStream
       .schema(parquet(s, d, "graft_emb_stream", dataDir).schema)
       .option("maxFilesPerTrigger", "1").parquet(dataDir)
-    val q = stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    graft.streaming.StreamingOps.drain(stream, "q126_stream_ann_ingest",
+      statePartitions = Int.MaxValue,
+      each = Some { (batch: DataFrame, batchId: Long) =>
         // round 14: the batch FIRST updates the per-vector assignment
         // artifact (the shared index lifecycle — q129 consumes it),
         // then derives its audit partials from the partition it just
@@ -1809,8 +1812,7 @@ object SimilarityOps {
         // appended twice would silently corrupt the additive rollup;
         // overwriting its own partition is a no-op on replay (and the
         // batch= layout reads back as one partitioned log)
-        val part = ingestAssignBatch(cents, batch, batchId, asnDir.toString)
-        s.read.parquet(part)
+        ingestAssignBatch(cents, batch, batchId, asnDir.toString)
           .withColumn("is_delta",
             when(col("vec_id") % 13 === 5, 1).otherwise(0))
           .withColumn("cos_micro",
@@ -1824,14 +1826,10 @@ object SimilarityOps {
             sum(when(col("is_delta") === 1, col("cos_micro")).otherwise(0L))
               .as("ds"))
           .write.mode("overwrite").parquet(s"$logDir/batch=$batchId")
-        (): Unit
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      }): Unit
     graft.Fs.markStaged(asnStage, embFp(d))
-    graft.streaming.StreamingOps.recordDrain("q126_stream_ann_ingest", q)
-    s.read.parquet(logDir)
+    s.read.schema("c_id BIGINT, n_base BIGINT, n_delta BIGINT, bs BIGINT, ds BIGINT")
+      .parquet(logDir)
       .groupBy(col("c_id"))
       .agg(sum(col("n_base")).as("n_base"), sum(col("n_delta")).as("n_delta"),
         sum(col("bs")).as("bs"), sum(col("ds")).as("ds"))

@@ -22,9 +22,10 @@ object Tables {
     * ([[graft.SessionCache.memo]]): a corpus rewritten in place is inferred
     * again. Schema-less on purpose: `upsertMatchesByPartition`'s read of
     * a table rewritten under `p_type=` dirs the stamp does not see,
-    * `DataGen`, Bench's warm-up, dirs written in the same call (q78's and
-    * q126's logs, the streamed assignment artifact) and `Layout`'s
-    * probes of caller-named dirs. */
+    * `DataGen`, Bench's warm-up and `Layout`'s probes of caller-named
+    * dirs. Dirs written in the same call (the drains' outputs: q78's
+    * admissions, q126's log, the streamed assignment artifact) are read
+    * with their writer's schema instead. */
   def parquet(s: SparkSession, d: String, key: String,
       path: String): DataFrame =
     s.read.schema(graft.SessionCache.memo(s"schema:$key", s, d)(

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery}
+  OutputMode}
 import org.apache.spark.sql.types._
 
 import graft.QueryDef
@@ -190,7 +190,7 @@ object StreamingOps {
   final case class DrainResult(df: DataFrame, maxStateRows: Long,
       finalStateRows: Long)
 
-  /** Telemetry journal of completed drains — (sink name, micro-batch
+  /** Telemetry journal of completed drains — (drain name, micro-batch
     * count, max state rows, final state rows) — since the last poll.
     * The bench polls after each measured query and publishes the counts
     * in its per-query diag, so micro-batch engine overhead vs state
@@ -198,30 +198,9 @@ object StreamingOps {
   private val drainLog =
     new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long, Long)]
 
-  /** Journal the stopped drain `q` as `name` (also for the drains
-    * SimilarityOps runs); returns its max and final state rows. */
-  private[graft] def recordDrain(name: String,
-      q: StreamingQuery): (Long, Long) = {
-    val rows = q.recentProgress.toSeq.map(p =>
-      Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L))
-    val state = (rows.maxOption.getOrElse(0L), rows.lastOption.getOrElse(0L))
-    drainLog.add((name, q.recentProgress.length, state._1, state._2))
-    state
-  }
-
   def pollDrainStats(): Seq[(String, Int, Long, Long)] =
     Iterator.continually(drainLog.poll()).takeWhile(_ != null).toList
 
-  /** Drive any of the above to a named in-memory sink until the source
-    * is drained — the synchronous local smoke path.
-    *
-    * The returned DataFrame is a SNAPSHOT (LocalRelation over the sink's
-    * rows — which already live in the driver; a memory sink buffers its
-    * whole result there), not a lazy plan over the sink's temp view: the
-    * view is dropped before returning, so no per-run result set outlives
-    * its consumer in a multi-query session (Verify sweep, two-attempt
-    * bench), and the result stays valid however late a caller evaluates
-    * it. */
   /** State partition count for the drained stateful streams. A stateful
     * operator opens, commits, and snapshots one state-store instance PER
     * shuffle partition PER micro-batch — fixed overhead that dwarfs the
@@ -271,48 +250,72 @@ object StreamingOps {
     * Drains add no jars or files, so nothing needs isolating. */
   private val IsolationKey = "spark.sql.artifact.isolation.enabled"
 
-  /** Run `start` with the drain-scoped SQL confs set — state width
-    * ([[StreamStatePartitions]] / [[feedScaledStateWidth]]), no-data
-    * flush and isolation switches — restoring the session's batch values
-    * after the stream has captured them at start. */
-  private def withDrainConfs[T](spark: SparkSession, statePartitions: Int)(
-      start: => T): T = {
-    val batchWidth = spark.conf.get("spark.sql.shuffle.partitions")
-    val noData = spark.conf.get(NoDataKey, "true")
-    val isolation = spark.conf.get(IsolationKey, "true")
+  private val drainSeq = new java.util.concurrent.atomic.AtomicInteger
+
+  /** The one way a stream runs here: `df` started under the drain
+    * confs and a unique query name (`name_<n>`), drained to the end of
+    * its source, stopped even when a micro-batch fails (the failure
+    * reaches the caller), and journaled as `name` ([[pollDrainStats]]).
+    *
+    * Drain confs: state width `min(statePartitions, session width)`
+    * (`Int.MaxValue` keeps the session's), no-data flush and isolation
+    * off. The stream captures them into its cloned session at start;
+    * the session's values are restored right after. A `foreachBatch`
+    * body's `batch` belongs to the clone, so plans built on it run at
+    * the drain confs (and without AQE, which every stream's clone turns
+    * off); plans built on the outer session keep its batch confs
+    * (probed at 8 cores: width 4 and 8 respectively).
+    *
+    * With `each`, a `foreachBatch` sink hands it every micro-batch and
+    * the result's `df` is empty. Without it, a memory sink: `df` is a
+    * SNAPSHOT of its rows (they already live in the driver) and its
+    * temp view is dropped even on failure, so no per-run result outlives
+    * its consumer in a multi-query session (Verify sweep, two-attempt
+    * bench) and the result stays valid however late it is evaluated. No
+    * checkpoint location: Spark gives both sinks a temporary one,
+    * deleted at a clean stop and, after a failure, by its shutdown hook. */
+  private[graft] def drain(df: DataFrame, name: String,
+      mode: OutputMode = OutputMode.Append,
+      statePartitions: Int = StreamStatePartitions,
+      each: Option[(DataFrame, Long) => Unit] = None): DrainResult = {
+    val spark = df.sparkSession
+    val view = s"${name}_${drainSeq.incrementAndGet()}"
+    val width = math.min(statePartitions,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val scoped = Seq("spark.sql.shuffle.partitions" -> width.toString,
+      NoDataKey -> "false", IsolationKey -> "false")
+    val saved = scoped.map { case (k, _) => k -> spark.conf.get(k) }
     try {
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(statePartitions, batchWidth.toInt))
-      spark.conf.set(NoDataKey, "false")
-      spark.conf.set(IsolationKey, "false")
-      start
-    } finally {
-      // the stream captured its confs at start; the session's batch
-      // queries (and any foreachBatch body) keep theirs
-      spark.conf.set("spark.sql.shuffle.partitions", batchWidth)
-      spark.conf.set(NoDataKey, noData)
-      spark.conf.set(IsolationKey, isolation)
-    }
+      val q = try {
+        scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+        val w = df.writeStream.outputMode(mode).queryName(view)
+        each.fold(w.format("memory"))(w.foreachBatch(_)).start()
+      } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+      try q.processAllAvailable()
+      finally q.stop()
+      val rows = q.recentProgress.toSeq.map(p =>
+        Option(p.stateOperators).map(_.map(_.numRowsTotal).sum).getOrElse(0L))
+      val r = DrainResult(
+        if (each.isEmpty) snapshot(spark.table(view)) else spark.emptyDataFrame,
+        rows.maxOption.getOrElse(0L), rows.lastOption.getOrElse(0L))
+      drainLog.add((name, rows.length, r.maxStateRows, r.finalStateRows))
+      r
+    } finally spark.catalog.dropTempView(view): Unit
   }
 
+  /** `df`'s rows collected into a local relation: a self-contained copy
+    * that no longer reads what `df` scanned. */
+  private def snapshot(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      new java.util.ArrayList(java.util.Arrays.asList(df.collect(): _*)),
+      df.schema)
+
+  /** Drive any of the above to an in-memory sink until the source is
+    * drained — the synchronous local smoke path ([[drain]]). */
   def runToMemory(df: DataFrame, name: String,
       mode: OutputMode = OutputMode.Append,
-      statePartitions: Int = StreamStatePartitions): DrainResult = {
-    val spark = df.sparkSession
-    val q = withDrainConfs(spark, statePartitions) {
-      df.writeStream.outputMode(mode)
-        .format("memory").queryName(name).start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
-    val (maxState, finalState) = recordDrain(name, q)
-    val sink = spark.table(name)
-    val snapshot = spark.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(sink.collect(): _*)),
-      sink.schema)
-    spark.catalog.dropTempView(name)
-    DrainResult(snapshot, maxState, finalState)
-  }
+      statePartitions: Int = StreamStatePartitions): DrainResult =
+    drain(df, name, mode, statePartitions)
 
   /** Append-mode drain into a parquet directory via `foreachBatch` —
     * for streams whose OUTPUT is feed-sized (q67's sessions: ~n rows),
@@ -327,19 +330,12 @@ object StreamingOps {
     * root is deleted at JVM exit. */
   def runToParquet(df: DataFrame, name: String,
       statePartitions: Int = StreamStatePartitions): DataFrame = {
-    val spark = df.sparkSession
     val outDir = graft.SessionCache.scratchDir(s"graft_drain_$name").toString
-    val q = withDrainConfs(spark, statePartitions) {
-      df.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(outDir)
-        }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
-    recordDrain(name, q): Unit
-    spark.read.schema(df.schema).parquet(outDir)
+    drain(df, name, statePartitions = statePartitions,
+      each = Some { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").parquet(outDir)
+      }): Unit
+    df.sparkSession.read.schema(df.schema).parquet(outDir)
   }
 
   /** Write the sf events file to `target` in the CANONICAL staged
@@ -408,8 +404,6 @@ object StreamingOps {
       }
     }.toString
 
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger
-
   /** The STREAMING execution path, oracle-verified: runs the tumbling
     * aggregation as a real Structured Streaming query (file source →
     * watermarked stateful agg → memory sink, drained synchronously) and
@@ -435,11 +429,10 @@ object StreamingOps {
       |FROM events
       |GROUP BY 1, 2
       |ORDER BY 1, 2""") { (s, d) =>
-    val out = s"stream_tumbling_${runSeq.incrementAndGet()}"
     val drained = runToMemory(
       windowedCounts(eventStream(s, stageEventsWithSentinels(s, d),
         oneFilePerBatch = true)),
-      out, OutputMode.Append)
+      "stream_tumbling", OutputMode.Append)
     // the streaming clock column is TIMESTAMP (watermarks want it); the
     // batch loader and oracle speak TIMESTAMP_NTZ — same UTC wall clock
     // (session tz pinned), so the cast only aligns the logical type
@@ -474,7 +467,6 @@ object StreamingOps {
       |FROM z
       |GROUP BY user_id, sess
       |ORDER BY user_id, session_start""") { (s, d) =>
-    val out = s"stream_session_${runSeq.incrementAndGet()}"
     // session OUTPUT is feed-sized, so the drain writes distributed
     // parquet instead of a driver memory sink (11.7 s -> 6.5 s at sf1).
     // The state WIDTH scales with the feed like q73's (sf1's 955k state
@@ -488,7 +480,7 @@ object StreamingOps {
     val drained = runToParquet(
       sessionCounts(eventStream(s, stageEventsWithSentinels(s, d),
         oneFilePerBatch = true)),
-      out, statePartitions = width)
+      "stream_session", statePartitions = width)
     drained
       .filter(col("user_id") >= 0) // sentinel sessions carry user_id -1
       .select(col("user_id"),
@@ -542,27 +534,19 @@ object StreamingOps {
     """SELECT event_type, count(*) AS n,
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val out = s"stream_dedup_${runSeq.incrementAndGet()}"
     val deduped = dedupedStream(eventStream(s, stageEventsDup(s, d)))
     val partials =
       new java.util.concurrent.ConcurrentLinkedQueue[
         (String, Long, java.math.BigDecimal)]
-    val q = withDrainConfs(s, StreamStatePartitions) {
-      deduped.writeStream.outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              graft.functions.Exact.sumdec(col("value").cast("decimal(18,2)")).as("sv"))
-            .collect().foreach { r =>
-              partials.add((r.getString(0), r.getLong(1),
-                r.getDecimal(2)))
-            }
+    drain(deduped, "stream_dedup", each = Some { (batch: DataFrame, _: Long) =>
+      batch.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          graft.functions.Exact.sumdec(col("value").cast("decimal(18,2)")).as("sv"))
+        .collect().foreach { r =>
+          partials.add((r.getString(0), r.getLong(1),
+            r.getDecimal(2)))
         }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally q.stop()
-    recordDrain(out, q): Unit
+    }): Unit
     import scala.jdk.CollectionConverters._
     val merged = partials.asScala.toSeq
       .groupBy(_._1).toSeq
@@ -596,7 +580,6 @@ object StreamingOps {
       |SELECT user_id, CAST(cents // 5000 AS BIGINT) AS n_alerts,
       |  CAST((cents // 5000) * 50 AS DOUBLE) AS max_crossed
       |FROM t WHERE cents >= 5000 ORDER BY user_id""") { (s, d) =>
-    val out = s"stream_alerts_${runSeq.incrementAndGet()}"
     val alerts = thresholdAlertsCents(
       eventStream(s, stageEvents(s, d)), stepCents = 5000L)
     // state width sized to the FEED, not the constant: the whole feed
@@ -614,7 +597,7 @@ object StreamingOps {
     // 9.9M rows at sf10), so drain distributed like q67 — the memory
     // sink hauled the whole alert set through the driver twice
     // (measured 51 s at sf10; the state pass itself is seconds).
-    runToParquet(alerts.toDF(), out, statePartitions = width)
+    runToParquet(alerts.toDF(), "stream_alerts", statePartitions = width)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_alerts"),
         (max(col("k")) * 50.0).as("max_crossed"))
@@ -647,7 +630,6 @@ object StreamingOps {
       |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events JOIN customer ON user_id = c_custkey
       |GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val out = s"stream_enrich_${runSeq.incrementAndGet()}"
     val dim = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"))
     val enriched = eventStream(s, stageEvents(s, d))
@@ -655,7 +637,7 @@ object StreamingOps {
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(count(lit(1)).as("n"),
         graft.functions.Exact.sumd2(col("value")).as("sum_value"))
-    runToMemory(enriched, out, OutputMode.Complete).df
+    runToMemory(enriched, "stream_enrich", OutputMode.Complete).df
       .orderBy(col("segment"))
   }
 
@@ -711,14 +693,13 @@ object StreamingOps {
       .filter(col("rn") === 1)
       .withColumn("vto", lead(col("vfrom"), 1).over(w))
       .select(col("duser"), col("state"), col("vfrom"), col("vto"))
-    val out = s"stream_pit_${runSeq.incrementAndGet()}"
     val enriched = eventStream(s, stageEvents(s, d))
       .join(broadcast(dim),
         col("user_id") === col("duser") && col("ts") >= col("vfrom") &&
           (col("vto").isNull || col("ts") < col("vto")))
       .groupBy(col("state"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    runToMemory(enriched, out, OutputMode.Complete).df
+    runToMemory(enriched, "stream_pit", OutputMode.Complete).df
       .orderBy(col("state"), col("event_type"))
   }
 
@@ -801,8 +782,8 @@ object StreamingOps {
     val stream = s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stageDeltaDocs(s, d))
-    val q = stream.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    drain(stream, "stream_incr_dedup", statePartitions = Int.MaxValue,
+      each = Some { (batch: DataFrame, _: Long) =>
         val ids = batch.select(col("doc_id"))
         val sigB = sig.join(broadcast(ids), Seq("doc_id"), "left_semi")
           .localCheckpoint()
@@ -828,11 +809,9 @@ object StreamingOps {
         // the batch's (already checkpointed) signatures join the probe
         // side for later batches — no re-copy of the prior pieces
         seenParts = sigB :: seenParts
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val res = s.read.parquet(outDir.toString)
+      }): Unit
+    val res = s.read.schema("doc_id BIGINT, source STRING, dropped INT")
+      .parquet(outDir.toString)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_new"),
         sum(when(col("dropped").isNotNull, 1).otherwise(0))
@@ -842,14 +821,11 @@ object StreamingOps {
       .orderBy(col("source"))
     // snapshot the (source-count-sized) summary and remove the per-run
     // staging dir — nothing lazy may point at it after the drain
-    val snap = s.createDataFrame(
-      new java.util.ArrayList(java.util.Arrays.asList(res.collect(): _*)),
-      res.schema)
+    val snap = snapshot(res)
     graft.Fs.rmTree(outDir)
     snap
   }
 
-  /** Streaming queries registered with the driver contract. */
   /** Stream-stream INTERVAL join as a real streaming run — the §2.H
     * join shape a batch rewrite cannot emulate incrementally:
     * click→purchase attribution within a 1-hour window, BOTH sides
@@ -885,12 +861,11 @@ object StreamingOps {
       joinSide(s, staged, "purchase", "p_uid", "purchase_id", "pts")
     val joined = clicks.join(purchases,
       expr("c_uid = p_uid AND pts >= cts AND pts <= cts + interval 1 hour"))
-    val out = s"stream_ijoin_${runSeq.incrementAndGet()}"
     val drained = runToMemory(
       joined.select(col("c_uid").as("user_id"), col("click_id"),
         col("purchase_id"),
         (unix_micros(col("pts").cast("timestamp")) - unix_micros(col("cts").cast("timestamp"))).as("lag_us")),
-      out, OutputMode.Append)
+      "stream_ijoin", OutputMode.Append)
     drained.df.filter(col("user_id") >= 0)
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
   }
@@ -950,7 +925,6 @@ object StreamingOps {
     val joined = clicks.join(purchases,
       expr("c_uid = p_uid AND pts >= cts AND pts <= cts + interval 1 hour"),
       "leftOuter")
-    val out = s"stream_ojoin_${runSeq.incrementAndGet()}"
     // outer-join OUTPUT is click-sized (~2M rows at sf10 — every
     // unmatched click emits), so drain distributed like q67/q73 rather
     // than hauling it through the driver memory sink twice
@@ -958,7 +932,7 @@ object StreamingOps {
       joined.select(col("c_uid").as("user_id"), col("click_id"),
         col("purchase_id"),
         (unix_micros(col("pts").cast("timestamp")) - unix_micros(col("cts").cast("timestamp"))).as("lag_us")),
-      out)
+      "stream_ojoin")
     drained.filter(col("user_id") >= 0)
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
   }
@@ -1053,11 +1027,10 @@ object StreamingOps {
       |       JOIN v ON v.user_id = c.user_id AND v.tsu <= c.tsu
       |             AND p.tsu <= v.tsu + INTERVAL 48 HOUR
       |GROUP BY p.user_id ORDER BY p.user_id""") { (s, d) =>
-    val out = s"stream_funnel_${runSeq.incrementAndGet()}"
     val hits = funnelHits(
       eventStream(s, stageEventsOrdered(s, d), oneFilePerBatch = true),
       windowUs = 48L * 3600L * 1000000L)
-    runToMemory(hits.toDF(), out, OutputMode.Append).df
+    runToMemory(hits.toDF(), "stream_funnel", OutputMode.Append).df
       .orderBy(col("user_id"))
   }
 
@@ -1087,13 +1060,12 @@ object StreamingOps {
       |       count(*) AS n, TRUE AS stream_equals_batch
       |FROM events GROUP BY 1, 2 ORDER BY 1, 2""") { (s, d) =>
     val rsd = graft.operators.ScaleOps.Rsd
-    val out = s"stream_distinct_${runSeq.incrementAndGet()}"
     val drained = runToMemory(
       eventStream(s, stageEventsWithSentinels(s, d), oneFilePerBatch = true)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(approx_count_distinct(col("user_id"), rsd).as("approx_users")),
-      out, OutputMode.Append)
+      "stream_distinct", OutputMode.Append)
     val sketch = drained.df
       .filter(col("event_type") =!= SentinelType)
       .select(col("window.start").cast("timestamp_ntz").as("bucket"),
@@ -1172,11 +1144,10 @@ object StreamingOps {
       |WHERE 125 * freq > total
       |ORDER BY event_type, freq DESC, bucket""") { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val out = s"stream_hh_${runSeq.incrementAndGet()}"
     val snaps = runToMemory(
       mgCandidates(eventStream(s, stageEventsOrdered(s, d),
         oneFilePerBatch = true), cap = 249).toDF(),
-      out, OutputMode.Update).df
+      "stream_hh", OutputMode.Update).df
     val w = Window.partitionBy(col("event_type")).orderBy(col("n_seen").desc)
     val cands = snaps.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -1235,14 +1206,13 @@ object StreamingOps {
       |SELECT bucket_ts AS bucket, min(n_w) AS n,
       |  CAST(sum(abs(ppm_w - ppm_ref)) // 2 AS BIGINT) AS tv_half_ppm
       |FROM x GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val out = s"stream_drift_${runSeq.incrementAndGet()}"
     val drained = runToMemory(
       eventStream(s, stageEventsWithSentinels(s, d), oneFilePerBatch = true)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"),
           floor(col("value") / 50).cast("long").as("vb"))
         .agg(count(lit(1)).as("c")),
-      out, OutputMode.Append)
+      "stream_drift", OutputMode.Append)
     // sentinel events land in their own far-future windows — drop by
     // window time, not by type (the type column is aggregated away)
     val wc = drained.df
@@ -1320,11 +1290,10 @@ object StreamingOps {
       |SELECT event_type, CAST(count(*) AS BIGINT) AS n_admitted,
       |  CAST(sum(event_id) AS BIGINT) AS id_sum, max(us) AS last_us
       |FROM r WHERE rn <= 150 GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val out = s"stream_quota_${runSeq.incrementAndGet()}"
     val hits = quotaAdmit(
       eventStream(s, stageEventsOrdered(s, d), oneFilePerBatch = true),
       cap = 150)
-    runToMemory(hits.toDF(), out, OutputMode.Append).df
+    runToMemory(hits.toDF(), "stream_quota", OutputMode.Append).df
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_admitted"),
         sum(col("event_id")).cast("long").as("id_sum"),
@@ -1332,6 +1301,7 @@ object StreamingOps {
       .orderBy(col("event_type"))
   }
 
+  /** Streaming queries registered with the driver contract. */
   def queries: Seq[QueryDef] =
     Seq(q66StreamTumbling, q67StreamSession, q70StreamDedup, q73StreamAlerts,
       q75StreamEnrich, q78StreamIncrDedup, q81StreamIntervalJoin,

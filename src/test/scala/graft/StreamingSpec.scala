@@ -298,6 +298,41 @@ class StreamingSpec extends AnyFunSuite {
     assert(warm == 0, s"the second q70 build compiled $warm classes")
   }
 
+  test("a failed drain reaches the caller and leaves no stream, no sink " +
+      "view and no drain conf behind") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.artifact.isolation.enabled")
+    val before = keys.map(spark.conf.get)
+    val failing = StreamingOps.eventStream(spark, eventsDir)
+      .select(when(col("event_id") % 2 === 0, raise_error(lit("drain boom")))
+        .otherwise(col("event_id")).as("event_id"))
+    val e = intercept[Exception] {
+      StreamingOps.runToMemory(failing, "failing_drain_out")
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("drain boom")),
+      s"the row's failure did not reach the caller: $e")
+    assert(spark.streams.active.isEmpty, "a stream is still running")
+    val views = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("failing_drain_out"))
+    assert(views.isEmpty, s"sink views left: ${views.map(_.name).mkString(",")}")
+    assert(keys.map(spark.conf.get) == before)
+  }
+
+  test("every drain journals: q78's foreachBatch drain leaves an entry " +
+      "with its micro-batches") {
+    StreamingOps.pollDrainStats() // clear prior entries
+    SparkEntry.queries("q78_stream_incr_dedup")(spark,
+      "/root/testdata/sf0.001").collect()
+    val drains = StreamingOps.pollDrainStats()
+      .filter(_._1 == "stream_incr_dedup")
+    assert(drains.nonEmpty, "q78 did not journal its drain")
+    // three staged delta files, one per micro-batch
+    assert(drains.head._2 >= 3,
+      s"expected >= 3 micro-batches, saw ${drains.head._2}")
+  }
+
   test("feed-scaled state width: floor 4 at bench feeds, widens " +
       "linearly with the feed, caps at the session's cores (the " +
       "scale-out knob — see COVERAGE.md §2.H state posture)") {
